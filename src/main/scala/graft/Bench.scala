@@ -119,6 +119,18 @@ object Bench {
     // "cpus honored?" from output instead of inferring it
     "q42_pseudonym_digest")
 
+  /** SPARK_GRAFT_CPUS as the core count the run uses: a positive
+    * integer, or `*` (as in `local[*]`) for every available processor.
+    * It is echoed into the JSON output as a number.
+    */
+  private[graft] def cpuCount(raw: String): Int = raw.trim match {
+    case "*" => Runtime.getRuntime.availableProcessors()
+    case n =>
+      val c = n.toInt
+      require(c > 0, s"SPARK_GRAFT_CPUS must be a positive integer or '*', got '$raw'")
+      c
+  }
+
   def main(args: Array[String]): Unit = {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
     // Dev aid: SPARK_GRAFT_BENCH_ONLY=e08_pack_blob,q01_pricing_summary
@@ -126,10 +138,10 @@ object Bench {
     val only = sys.env.get("SPARK_GRAFT_BENCH_ONLY")
       .map(_.split(",").map(_.trim).toSet)
     val bench = headline.filter(n => only.forall(_.contains(n)))
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")
+    val cpus = cpuCount(sys.env.getOrElse("SPARK_GRAFT_CPUS", "4"))
     val spark = SparkSession.builder()
       .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
+      .config("spark.sql.shuffle.partitions", cpus.toString)
       .config("spark.sql.adaptive.enabled", "true")
       .config("spark.sql.session.timeZone", "UTC")
       .config("spark.sql.legacy.parquet.nanosAsLong", "true")

@@ -13,6 +13,12 @@ import graft.sources.{PedSource, VcfReader}
   * `variants` (typed INFO columns + genotype stats + worst impact
   * denormalized), `variant_impacts`, `samples`, and `vcf_header`.
   *
+  * Two scans of the VCF text and, unless `sortedOutput` asks for a range
+  * layout, no shuffle: the variants scan parses each record once,
+  * straight into Catalyst rows that already carry the record's own
+  * worst impact (VcfReader.forLoad); the impacts table is a second,
+  * site-only scan.
+  *
   * Sink is the bounded-parallelism DbSink: parquet here (no JDBC
   * driver jar in this container); swapping in `DbSink.writeJdbc`
   * retargets the same job at sqlite/MySQL/PostgreSQL exactly like the
@@ -20,12 +26,19 @@ import graft.sources.{PedSource, VcfReader}
   */
 object Vcf2Db {
 
-  /** Worst-impact denormalization — the reference picks the top-severity
-    * annotation per variant and copies its headline fields onto the
-    * variants row (gene, impact, impact_severity). Broadcast-free: one
-    * window over the impacts table, then a join on the variant key
-    * (both sides shuffle on the same key, AQE may still broadcast the
-    * rank-1 side — it is |variants|-bounded, not |impacts|-bounded).
+  /** Worst-impact denormalization as a join — the reference picks the
+    * top-severity annotation per variant and copies its headline fields
+    * onto the variants row (gene, impact, impact_severity, plus the
+    * severity_rank that picked them): a window over the impacts table,
+    * then a left join on the variant key.
+    *
+    * `run` does not use it: the load makes the same pick inside the
+    * per-record parse, and this form stays as the reference that pick
+    * is tested against. The two differ on two inputs only. Entries tied
+    * on (severity_rank, impact) are picked arbitrarily here, in CSQ
+    * order by the parse. Records sharing a (chrom, pos, ref, alt) key
+    * all get the worst entry of their union here, each its own in the
+    * parse.
     */
   def denormalizeWorstImpact(variants: DataFrame, impacts: DataFrame): DataFrame = {
     // annotator-agnostic column resolution: VEP names its fields
@@ -100,26 +113,12 @@ object Vcf2Db {
       jdbcBatchSize: Int = 10000, passOnly: Boolean = false): Unit = {
     import spark.implicits._
     GraftFunctions.register(spark)
-    val (header, rawVariants, rawImpacts) = VcfReader.fromPath(spark, vcfPath)
-    // the reference's --passonly: records whose FILTER failed never
-    // enter the database (PASS or missing '.' survive). A per-row
-    // codegen filter BEFORE denormalization; impacts follow via a
-    // semi-join co-keyed on the 4-part variant key so annotations of
-    // dropped records can't survive as orphans.
-    val variants =
-      if (passOnly)
-        rawVariants.filter(col("filter").isNull || col("filter") === "PASS")
-      else rawVariants
-    val impacts =
-      if (passOnly && header.annKey.isDefined)
-        rawImpacts.join(variants.select("chrom", "pos", "ref", "alt"),
-          Seq("chrom", "pos", "ref", "alt"), "left_semi")
-      else rawImpacts
-
-    val denorm = header.annKey match {
-      case Some(_) => denormalizeWorstImpact(variants, impacts)
-      case None => variants
-    }
+    // variants arrive with their worst impact already picked (when the
+    // header declares an annotation key). The reference's --passonly:
+    // a record whose FILTER failed (anything but PASS or missing '.')
+    // yields no variants and no impacts, dropped in each table's parse —
+    // so no annotation of a dropped record can survive as an orphan.
+    val (header, denorm, impacts) = VcfReader.forLoad(spark, vcfPath, passOnly)
     // the reference's --expand flag: selected per-sample arrays ALSO
     // materialize as one typed column per sample (gt-filter queries hit
     // plain columns, no blob decode), named <field>_<sample>. ONE

@@ -549,8 +549,12 @@ object Similarity {
       } finally {
         pool.shutdown()
         // don't unpersist fitDf under still-running fit jobs (they
-        // would silently fall back to recomputing the sample)
-        pool.awaitTermination(60, java.util.concurrent.TimeUnit.SECONDS)
+        // would silently fall back to recomputing the sample): a fit
+        // still running after the wait has its jobs cancelled first
+        if (!pool.awaitTermination(60, java.util.concurrent.TimeUnit.SECONDS)) {
+          s.sparkContext.cancelJobGroup(group)
+          pool.shutdownNow()
+        }
       }
     } finally fitDf.unpersist(blocking = false)
   }

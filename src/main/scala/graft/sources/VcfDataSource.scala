@@ -1,12 +1,14 @@
 package graft.sources
 
+import java.nio.charset.StandardCharsets.UTF_8
 import java.util.{Map => JMap}
 
 import scala.jdk.CollectionConverters._
 
+import org.apache.hadoop.conf.Configuration
 import org.apache.hadoop.fs.{FileSystem, Path}
 import org.apache.spark.sql.SparkSession
-import org.apache.spark.sql.catalyst.{CatalystTypeConverters, InternalRow}
+import org.apache.spark.sql.catalyst.InternalRow
 import org.apache.spark.sql.connector.catalog.{SupportsRead, Table, TableCapability, TableProvider}
 import org.apache.spark.sql.connector.expressions.Transform
 import org.apache.spark.sql.connector.read._
@@ -19,47 +21,26 @@ import org.apache.spark.util.SerializableConfiguration
   *
   * The header (KB-sized) is read ONCE driver-side and drives the typed
   * variants schema exactly like the reference's ##INFO-based inference;
-  * body parsing happens in executor-side PartitionReaders — one
-  * partition per file (a bgzip-sharded 100 TB cohort parallelizes by
-  * shard; a finer line-range split would slot in here without touching
-  * the parse path). Column pruning is pushed into the reader: pruned
-  * rows are projected BEFORE conversion to InternalRow, so unread INFO
-  * columns cost nothing per row.
+  * body parsing happens in executor-side PartitionReaders over byte-range
+  * splits (plain text and BGZF alike; see VcfScan.planInputPartitions),
+  * sized by Spark's own file-source rule so a file fans out across the
+  * session's cores. Column pruning is pushed into the parse: unread INFO
+  * columns and per-sample arrays are never computed.
   */
 class VcfDataSource extends TableProvider with DataSourceRegister {
   override def shortName(): String = "vcf"
 
-  private def paths(options: CaseInsensitiveStringMap): Seq[String] = {
-    val p = Option(options.get("path")).getOrElse(
-      throw new IllegalArgumentException("vcf source requires a path"))
-    val hp = new Path(p)
-    val fs = FileSystem.get(hp.toUri,
-      SparkSession.active.sessionState.newHadoopConf())
-    val stats = fs.globStatus(hp)
-    if (stats == null || stats.isEmpty) Seq(p)
-    else stats.flatMap { st =>
-      // the standard Hadoop hidden-file convention: _SUCCESS markers and
-      // . temporaries in a Spark-written directory are not data shards
-      if (st.isDirectory) fs.listStatus(st.getPath).toSeq
-        .filter(s => s.isFile && !s.getPath.getName.startsWith("_") &&
-          !s.getPath.getName.startsWith("."))
-        .map(_.getPath.toString)
-      else Seq(st.getPath.toString)
-    }.sorted.toSeq
-  }
+  private def hadoopConf = SparkSession.active.sessionState.newHadoopConf()
 
-  private def headerLines(path: String): Vector[String] = {
-    val hp = new Path(path)
-    val fs = FileSystem.get(hp.toUri, SparkSession.active.sessionState.newHadoopConf())
-    val in = fs.open(hp)
-    try {
-      val reader = new java.io.BufferedReader(new java.io.InputStreamReader(
-        VcfIo.maybeGunzip(path, in), "UTF-8"))
-      Iterator.continually(reader.readLine())
-        .takeWhile(l => l != null && l.startsWith("#"))
-        .toVector
-    } finally in.close()
-  }
+  private def pathOf(options: CaseInsensitiveStringMap): String =
+    Option(options.get("path")).getOrElse(
+      throw new IllegalArgumentException("vcf source requires a path"))
+
+  private def paths(options: CaseInsensitiveStringMap): Seq[String] =
+    VcfDataSource.files(pathOf(options), hadoopConf)
+
+  private def headerLines(path: String): Vector[String] =
+    VcfDataSource.headerLines(path, hadoopConf)
 
   override def inferSchema(options: CaseInsensitiveStringMap): StructType = {
     // `header` names a VCF (file or exported shard dir) whose ## header
@@ -108,26 +89,100 @@ class VcfDataSource extends TableProvider with DataSourceRegister {
           Option(opts.get("path")))
       case None => ()
     }
-    val ps = paths(opts)
-    val first = headerLines(ps.head)
-    // Multi-shard cohorts must agree on the header-derived schema: the
-    // first file's header drives every reader, so a shard declaring a
-    // different INFO set would silently mis-parse. Headers are KB-sized
-    // and this runs once per table resolution, driver-side.
-    if (ps.length > 1 && opts.getBoolean("validateHeaders", true)) {
+    val (ps, first) = VcfDataSource.resolve(pathOf(opts), hadoopConf,
+      opts.getBoolean("validateHeaders", true))
+    new VcfTable(ps, first, schema, Option(opts.get("path")))
+  }
+
+  override def supportsExternalMetadata(): Boolean = false
+}
+
+private[sources] object VcfDataSource {
+  /** The data files a path names: the file itself, a glob's matches, or
+    * a directory's shards, sorted.
+    */
+  def files(p: String, conf: Configuration): Seq[String] = {
+    val hp = new Path(p)
+    val fs = FileSystem.get(hp.toUri, conf)
+    val stats = fs.globStatus(hp)
+    if (stats == null || stats.isEmpty) Seq(p)
+    else stats.flatMap { st =>
+      // the standard Hadoop hidden-file convention: _SUCCESS markers and
+      // . temporaries in a Spark-written directory are not data shards
+      if (st.isDirectory) fs.listStatus(st.getPath).toSeq
+        .filter(s => s.isFile && !s.getPath.getName.startsWith("_") &&
+          !s.getPath.getName.startsWith("."))
+        .map(_.getPath.toString)
+      else Seq(st.getPath.toString)
+    }.sorted.toSeq
+  }
+
+  def headerLines(path: String, conf: Configuration): Vector[String] = {
+    val hp = new Path(path)
+    val in = FileSystem.get(hp.toUri, conf).open(hp)
+    try {
+      val reader = new java.io.BufferedReader(new java.io.InputStreamReader(
+        VcfIo.maybeGunzip(path, in), "UTF-8"))
+      Iterator.continually(reader.readLine())
+        .takeWhile(l => l != null && l.startsWith("#"))
+        .toVector
+    } finally in.close()
+  }
+
+  /** The files of `path` and the first one's header lines. Multi-shard
+    * cohorts must agree on the header-derived schema: the first file's
+    * header drives every reader, so a shard declaring a different INFO
+    * set would silently mis-parse. Headers are KB-sized and this runs
+    * once per table resolution, driver-side.
+    */
+  def resolve(path: String, conf: Configuration,
+      validateHeaders: Boolean = true): (Seq[String], Vector[String]) = {
+    val ps = files(path, conf)
+    val first = headerLines(ps.head, conf)
+    if (ps.length > 1 && validateHeaders) {
       val want = VcfReader.variantSchema(VcfParser.parseHeader(first))
       ps.tail.foreach { p =>
-        val got = VcfReader.variantSchema(VcfParser.parseHeader(headerLines(p)))
+        val got = VcfReader.variantSchema(VcfParser.parseHeader(headerLines(p, conf)))
         require(got == want,
           s"VCF shard header mismatch: $p infers schema\n  $got\nbut ${ps.head} infers\n  $want" +
             "\n(harmonize shard headers, or read shards separately; " +
             "set option validateHeaders=false to force first-header semantics)")
       }
     }
-    new VcfTable(ps, first, schema, Option(opts.get("path")))
+    (ps, first)
+  }
+}
+
+/** Spark's file-source split rule (FilePartition.maxSplitBytes): a split
+  * holds at most `maxPartitionBytes` and at least `openCostInBytes`,
+  * and otherwise the total bytes (each file padded by the open cost)
+  * spread over `minPartitions` — the session's parallelism unless
+  * `spark.sql.files.minPartitionNum` says otherwise. Read from the
+  * session when a scan is built.
+  */
+private[graft] case class SplitRule(maxPartitionBytes: Long,
+    openCostInBytes: Long, minPartitions: Int) {
+  def maxSplitBytes(lengths: Seq[Long]): Long = {
+    val total = lengths.map(_ + openCostInBytes).sum
+    math.min(maxPartitionBytes, math.max(openCostInBytes, total / minPartitions))
+  }
+}
+
+private[graft] object SplitRule {
+  def of(spark: SparkSession): SplitRule = {
+    val c = spark.sessionState.conf
+    SplitRule(c.filesMaxPartitionBytes, c.filesOpenCostInBytes,
+      c.filesMinPartitionNum.getOrElse(spark.sparkContext.defaultParallelism))
   }
 
-  override def supportsExternalMetadata(): Boolean = false
+  /** The split size that cuts a `len`-byte file into as many pieces as
+    * `max` requires, all of one size: 15 MB at a 4.75 MB maximum reads as
+    * four 3.75 MB splits, not three full ones and a 0.75 MB straggler.
+    */
+  def evenSize(len: Long, max: Long): Long = {
+    val n = math.max(1L, (len + max - 1) / max)
+    math.max(1L, (len + n - 1) / n)
+  }
 }
 
 /** Compiled form of the pushable chrom/pos predicates — the region a
@@ -185,8 +240,13 @@ private[sources] object RegionFilter {
     }
 }
 
+/** `rows` and `passOnly` are internal scan shapes (VcfReader.forLoad):
+  * `format("vcf")` always reads decomposed variants, every record.
+  */
 private[sources] class VcfTable(paths: Seq[String], header: Vector[String],
-    tableSchema: StructType, rawPath: Option[String])
+    tableSchema: StructType, rawPath: Option[String],
+    rows: VcfReader.LineRows = VcfReader.LineRows.Variants,
+    passOnly: Boolean = false)
     extends Table with SupportsRead
     with org.apache.spark.sql.connector.catalog.SupportsWrite {
   override def name(): String = s"vcf(${paths.mkString(",")})"
@@ -197,8 +257,9 @@ private[sources] class VcfTable(paths: Seq[String], header: Vector[String],
   override def newScanBuilder(options: CaseInsensitiveStringMap): ScanBuilder =
     new VcfScanBuilder(paths, header, tableSchema,
       options.getBoolean("permissive", false),
-      options.getLong("splitSize", 128L * 1024 * 1024),
-      options.getBoolean("sorted", false))
+      // an explicit splitSize (bytes) overrides the derived split rule
+      Option(options.get("splitSize")).map(_.toLong),
+      options.getBoolean("sorted", false), rows, passOnly)
   override def newWriteBuilder(
       info: org.apache.spark.sql.connector.write.LogicalWriteInfo)
       : org.apache.spark.sql.connector.write.WriteBuilder = {
@@ -210,7 +271,8 @@ private[sources] class VcfTable(paths: Seq[String], header: Vector[String],
 }
 
 private[sources] class VcfScanBuilder(paths: Seq[String], header: Vector[String],
-    full: StructType, permissive: Boolean, splitSize: Long, sorted: Boolean)
+    full: StructType, permissive: Boolean, splitSize: Option[Long], sorted: Boolean,
+    rows: VcfReader.LineRows, passOnly: Boolean)
     extends ScanBuilder with SupportsPushDownRequiredColumns
     with SupportsPushDownFilters {
   private var required: StructType = full
@@ -232,21 +294,24 @@ private[sources] class VcfScanBuilder(paths: Seq[String], header: Vector[String]
 
   override def pushedFilters(): Array[Filter] = pushed
 
-  override def build(): Scan =
-    new VcfScan(paths, header, full, required, permissive, splitSize, sorted,
-      RegionFilter.compile(pushed.toSeq),
-      new SerializableConfiguration(
-        SparkSession.active.sessionState.newHadoopConf()))
+  override def build(): Scan = {
+    val spark = SparkSession.active
+    new VcfScan(paths, header, required, permissive, splitSize,
+      SplitRule.of(spark), sorted, RegionFilter.compile(pushed.toSeq),
+      new SerializableConfiguration(spark.sessionState.newHadoopConf()),
+      rows, passOnly)
+  }
 }
 
 private[sources] class VcfScan(paths: Seq[String], header: Vector[String],
-    full: StructType, required: StructType, permissive: Boolean,
-    splitSize: Long, sorted: Boolean, region: RegionFilter,
-    conf: SerializableConfiguration) extends Scan with Batch {
+    required: StructType, permissive: Boolean,
+    splitSize: Option[Long], rule: SplitRule, sorted: Boolean, region: RegionFilter,
+    conf: SerializableConfiguration, rows: VcfReader.LineRows, passOnly: Boolean)
+    extends Scan with Batch {
   override def readSchema(): StructType = required
   override def toBatch: Batch = this
   override def description(): String =
-    s"VcfScan pushed=$region splits=${splitSize}B sorted=$sorted"
+    s"VcfScan pushed=$region splits=${splitSize.fold("auto")(_ + "B")} sorted=$sorted"
 
   /** First owned BODY-line (chrom, pos) of a split — the split-pruning
     * index key. Mirrors the reader's line-ownership rule (a reader
@@ -368,7 +433,7 @@ private[sources] class VcfScan(paths: Seq[String], header: Vector[String],
     * degrades to one-shard-one-task rather than risking a bad split.
     */
   private def bgzfSplits(p: String, fs: FileSystem, hp: Path,
-      len: Long): Seq[VcfInputPartition] = {
+      len: Long, splitSize: Long): Seq[VcfInputPartition] = {
     val in = fs.open(hp)
     try {
       if (!Bgzf.isBgzf(in, len))
@@ -410,7 +475,7 @@ private[sources] class VcfScan(paths: Seq[String], header: Vector[String],
   }
 
   private def tabixSplits(p: String, fs: FileSystem, hp: Path,
-      len: Long): Option[Seq[VcfInputPartition]] = {
+      len: Long, splitSize: Long): Option[Seq[VcfInputPartition]] = {
     if (region.isTrivial) return None
     val chroms = region.chromIn.getOrElse(return None)
     val tbi = new Path(p + ".tbi")
@@ -462,19 +527,23 @@ private[sources] class VcfScan(paths: Seq[String], header: Vector[String],
   }
 
   override def planInputPartitions(): Array[InputPartition] = {
-    val all = pruneShards(paths).flatMap { p =>
-      if (p.endsWith(".gz") || p.endsWith(".bgz")) {
-        val hp = new Path(p)
-        val fs = FileSystem.get(hp.toUri, conf.value)
-        val len = fs.getFileStatus(hp).getLen
-        tabixSplits(p, fs, hp, len).getOrElse(bgzfSplits(p, fs, hp, len))
-      } else {
-        val hp = new Path(p)
-        val len = FileSystem.get(hp.toUri, conf.value).getFileStatus(hp).getLen
-        val n = math.max(1L, (len + splitSize - 1) / splitSize)
+    val files = pruneShards(paths).map { p =>
+      val hp = new Path(p)
+      val fs = FileSystem.get(hp.toUri, conf.value)
+      (p, fs, hp, fs.getFileStatus(hp).getLen)
+    }
+    // split size: the explicit option as given, else Spark's file-source
+    // rule over the files this scan reads, each file cut evenly
+    val maxSplit = splitSize.getOrElse(rule.maxSplitBytes(files.map(_._4)))
+    val all = files.flatMap { case (p, fs, hp, len) =>
+      val size = if (splitSize.isDefined) maxSplit else SplitRule.evenSize(len, maxSplit)
+      if (p.endsWith(".gz") || p.endsWith(".bgz"))
+        tabixSplits(p, fs, hp, len, size).getOrElse(bgzfSplits(p, fs, hp, len, size))
+      else {
+        val n = math.max(1L, (len + size - 1) / size)
         (0L until n).map(i =>
-          VcfInputPartition(p, i * splitSize,
-            if (i == n - 1) Long.MaxValue else (i + 1) * splitSize))
+          VcfInputPartition(p, i * size,
+            if (i == n - 1) Long.MaxValue else (i + 1) * size))
       }
     }
     val kept =
@@ -517,8 +586,8 @@ private[sources] class VcfScan(paths: Seq[String], header: Vector[String],
   }
 
   override def createReaderFactory(): PartitionReaderFactory =
-    new VcfReaderFactory(header, full.fieldNames, required.fieldNames,
-      permissive, region, conf)
+    new VcfReaderFactory(header, required.fieldNames, permissive, region, conf,
+      rows, passOnly)
 }
 
 private[sources] object VcfScan {
@@ -568,40 +637,56 @@ private[sources] case class VcfInputPartition(path: String, start: Long,
   * line: duplicated records at every boundary).
   */
 private[sources] class CountingLineReader(in: java.io.InputStream) {
-  private val bin = new java.io.BufferedInputStream(in, 1 << 16)
+  private val buf = new Array[Byte](1 << 16)
+  private var off = 0 // next unread byte of buf
+  private var len = 0 // valid bytes in buf
   /** Total bytes consumed from the stream so far (lines + terminators). */
   var bytesConsumed: Long = 0L
 
-  def readLine(): String = {
-    val first = bin.read()
-    if (first < 0) return null
-    val buf = new java.io.ByteArrayOutputStream(256)
-    var b = first
-    var consumed = 0L
-    while (b >= 0 && b != '\n' && b != '\r') {
-      buf.write(b); consumed += 1; b = bin.read()
-    }
-    if (b >= 0) {
-      consumed += 1
-      if (b == '\r') { // CRLF counts both bytes; lone CR pushes back
-        bin.mark(1)
-        val nb = bin.read()
-        if (nb == '\n') consumed += 1 else if (nb >= 0) bin.reset()
-      }
-    }
-    bytesConsumed += consumed
-    new String(buf.toByteArray, java.nio.charset.StandardCharsets.UTF_8)
+  private def fill(): Boolean = {
+    off = 0
+    len = in.read(buf, 0, buf.length)
+    while (len == 0) len = in.read(buf, 0, buf.length)
+    if (len < 0) { len = 0; false } else true
   }
 
-  def close(): Unit = bin.close()
+  def readLine(): String = {
+    if (off >= len && !fill()) return null
+    // bytes of a line that straddles a buffer refill
+    var head: java.io.ByteArrayOutputStream = null
+    while (true) {
+      var i = off
+      while (i < len && buf(i) != '\n' && buf(i) != '\r') i += 1
+      if (i < len) {
+        val line =
+          if (head == null) new String(buf, off, i - off, UTF_8)
+          else { head.write(buf, off, i - off); new String(head.toByteArray, UTF_8) }
+        bytesConsumed += i - off + 1
+        off = i + 1
+        // CRLF counts both bytes; a lone CR leaves the next byte unread
+        if (buf(i) == '\r' && (off < len || fill()) && buf(off) == '\n') {
+          off += 1; bytesConsumed += 1
+        }
+        return line
+      }
+      if (head == null) head = new java.io.ByteArrayOutputStream(2 * (len - off) + 16)
+      head.write(buf, off, len - off)
+      bytesConsumed += len - off
+      off = len
+      if (!fill()) return new String(head.toByteArray, UTF_8) // last line, no terminator
+    }
+    null // unreachable
+  }
+
+  def close(): Unit = in.close()
 }
 
 private[sources] object VcfIo {
   /** Transparent decompression for gzip/bgzip shards (`.vcf.gz`,
     * `.vcf.bgz`): BGZF is concatenated-member gzip, which Java's
-    * GZIPInputStream consumes natively. Each compressed shard stays
-    * one InputPartition (bgzip shards are the cohort's parallelism
-    * unit; gzip itself is unsplittable).
+    * GZIPInputStream consumes natively. Used for header reads and for
+    * unsplittable plain-gzip shards; splittable BGZF splits read
+    * through BgzfLineReader.
     */
   def maybeGunzip(path: String, in: java.io.InputStream): java.io.InputStream =
     if (path.endsWith(".gz") || path.endsWith(".bgz"))
@@ -610,31 +695,29 @@ private[sources] object VcfIo {
 }
 
 private[sources] class VcfReaderFactory(headerLines: Vector[String],
-    fullNames: Array[String], requiredNames: Array[String], permissive: Boolean,
-    region: RegionFilter, conf: SerializableConfiguration)
+    requiredNames: Array[String], permissive: Boolean,
+    region: RegionFilter, conf: SerializableConfiguration,
+    rows: VcfReader.LineRows, passOnly: Boolean)
     extends PartitionReaderFactory {
   override def createReader(partition: InputPartition): PartitionReader[InternalRow] = {
     val p = partition.asInstanceOf[VcfInputPartition]
-    new VcfPartitionReader(p, headerLines, fullNames, requiredNames,
-      permissive, region, conf)
+    new VcfPartitionReader(p, headerLines, requiredNames,
+      permissive, region, conf, rows, passOnly)
   }
 }
 
 private[sources] class VcfPartitionReader(part: VcfInputPartition,
-    headerLines: Vector[String],
-    fullNames: Array[String], requiredNames: Array[String], permissive: Boolean,
-    region: RegionFilter, conf: SerializableConfiguration)
+    headerLines: Vector[String], requiredNames: Array[String], permissive: Boolean,
+    region: RegionFilter, conf: SerializableConfiguration,
+    rows: VcfReader.LineRows, passOnly: Boolean)
     extends PartitionReader[InternalRow] {
 
   private val path = part.path
 
-  private val header = VcfParser.parseHeader(headerLines)
-  private val fullSchema = VcfReader.variantSchema(header)
-  private val required = StructType(
-    fullSchema.fields.filter(f => requiredNames.contains(f.name)))
-  private val keepIx: Array[Int] = required.fieldNames.map(fullSchema.fieldIndex)
-  private val toCatalyst =
-    CatalystTypeConverters.createToCatalystConverter(required)
+  // pruning reaches the PARSER, not just the row conversion: unneeded
+  // INFO coercions and per-sample arrays are never computed
+  private val parse = new VcfReader.LineParser(
+    VcfParser.parseHeader(headerLines), rows, requiredNames.toSeq, passOnly)
 
   // Left = plain-text/whole-gzip counting reader, Right = BGZF
   // block reader (splittable compressed shards; see BgzfLineReader)
@@ -671,7 +754,8 @@ private[sources] class VcfPartitionReader(part: VcfInputPartition,
       case Left(_) =>
     }
   }
-  private var pending: Iterator[InternalRow] = Iterator.empty
+  private var pending: Array[InternalRow] = Array.empty
+  private var at = 0
   private var current: InternalRow = _
 
   /** Reads one line, tracking its starting offset; a reader seeked to
@@ -690,22 +774,6 @@ private[sources] class VcfPartitionReader(part: VcfInputPartition,
     readRawLine()
   }
 
-  // pruning reaches the PARSER, not just the row conversion: unneeded
-  // INFO coercions and per-sample arrays are never computed (their
-  // full-arity slots stay null and keepIx never reads them)
-  private val neededSet: Set[String] = requiredNames.toSet
-  private def rowsOf(line: String): Iterator[InternalRow] = {
-    val rows =
-      if (permissive)
-        try VcfReader.decomposedRows(header, line, neededSet)
-        catch { case scala.util.control.NonFatal(_) => Seq.empty }
-      else VcfReader.decomposedRows(header, line, neededSet)
-    rows.iterator.map { row =>
-      val pruned = org.apache.spark.sql.Row.fromSeq(keepIx.map(row.get).toSeq)
-      toCatalyst(pruned).asInstanceOf[InternalRow]
-    }
-  }
-
   /** Pre-parse region skip: chrom/pos live in the first two tab fields,
     * so a pushed region filter rejects non-matching lines on a substring
     * compare — the full INFO/FORMAT parse (the expensive part) never
@@ -718,12 +786,16 @@ private[sources] class VcfPartitionReader(part: VcfInputPartition,
     }
 
   override def next(): Boolean = {
-    while (!pending.hasNext) {
+    while (at >= pending.length) {
       val line = nextOwnedLine()
       if (line == null) return false
-      if (VcfParser.isBodyLine(line) && regionAccepts(line)) pending = rowsOf(line)
+      if (VcfParser.isBodyLine(line) && regionAccepts(line)) {
+        pending = parse(line, permissive)
+        at = 0
+      }
     }
-    current = pending.next()
+    current = pending(at)
+    at += 1
     true
   }
 

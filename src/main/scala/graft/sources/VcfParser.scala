@@ -141,11 +141,30 @@ object VcfParser {
 
   private def opt(s: String): Option[String] = if (s == "." || s.isEmpty) None else Some(s)
 
-  def parseRecord(line: String): Record = {
-    // limit -1: a trailing EMPTY sample column must survive the split,
-    // or the genotype vector silently shrinks below the cohort width
-    // and every per-sample index join downstream mis-attributes
-    val f = line.split("\t", -1)
+  // limit -1: a trailing EMPTY sample column must survive the split,
+  // or the genotype vector silently shrinks below the cohort width
+  // and every per-sample index join downstream mis-attributes
+  def parseRecord(line: String): Record = recordOf(line.split("\t", -1))
+
+  /** The site part of a body line (columns 1–8: no FORMAT, no samples)
+    * — what an annotation-only read needs. Genotypes stay empty; the
+    * sample columns are never split.
+    */
+  def parseSite(line: String): Record = {
+    val f = new Array[String](8)
+    var n = 0
+    var start = 0
+    while (n < 8 && start <= line.length) {
+      val tab = line.indexOf('\t', start)
+      val end = if (tab < 0) line.length else tab
+      f(n) = line.substring(start, end)
+      n += 1
+      start = if (tab < 0) line.length + 1 else tab + 1
+    }
+    recordOf(if (n == 8) f else f.take(n))
+  }
+
+  private def recordOf(f: Array[String]): Record = {
     val info: ListMap[String, String] =
       if (f.length <= 7 || f(7) == ".") ListMap.empty
       else ListMap.from(f(7).split(';').iterator.map { kv =>
@@ -193,17 +212,52 @@ object VcfParser {
       if (t.isEmpty) "-" else t
     } else alt
 
-  /** Allele indices of a GT string ("0/1", "1|1", "./."); None = missing. */
-  def gtAlleles(gt: String): Vector[Option[Int]] =
-    gt.split("[/|]").toVector.map(a => if (a == "." || a.isEmpty) None else Some(a.toInt))
+  /** Allele indices of a GT string ("0/1", "1|1", "./."); None = missing.
+    * A char scan with `String.split("[/|]")`'s exact results — a token
+    * per separator, trailing empty tokens dropped, "" → one missing
+    * allele — without compiling a regex per sample per alt.
+    */
+  def gtAlleles(gt: String): Vector[Option[Int]] = {
+    val out = Vector.newBuilder[Option[Int]]
+    var sawSep = false
+    var pendingEmpty = 0 // empty tokens kept only if a non-empty one follows
+    var start = 0
+    var i = 0
+    while (i <= gt.length) {
+      if (i == gt.length || gt.charAt(i) == '/' || gt.charAt(i) == '|') {
+        if (i < gt.length) sawSep = true
+        if (i == start) pendingEmpty += 1
+        else {
+          while (pendingEmpty > 0) { out += None; pendingEmpty -= 1 }
+          out += allele(gt, start, i)
+        }
+        start = i + 1
+      }
+      i += 1
+    }
+    if (sawSep) out.result() else Vector(allele(gt, 0, gt.length))
+  }
+
+  private def allele(gt: String, start: Int, end: Int): Option[Int] =
+    if (end == start) None
+    else if (end == start + 1) {
+      val c = gt.charAt(start)
+      if (c == '.') None
+      else if (c >= '0' && c <= '9') Some(c - '0')
+      else Some(gt.substring(start, end).toInt) // throws like split + toInt
+    } else Some(gt.substring(start, end).toInt)
 
   /** GEMINI gt_type of one sample's GT w.r.t. alt allele index `altIx`
     * (1-based in the GT encoding). Any missing allele → UNKNOWN; alleles
     * of OTHER alts count as ref after decompose (vt-decompose keeps the
     * record bi-allelic by demoting other alts).
     */
-  def gtType(gt: String, altIx: Int = 1): Int = {
-    val alleles = gtAlleles(gt)
+  def gtType(gt: String, altIx: Int = 1): Int = gtTypeOf(gtAlleles(gt), altIx)
+
+  /** gtType over alleles parsed once per sample (a record's alts share
+    * them).
+    */
+  def gtTypeOf(alleles: Vector[Option[Int]], altIx: Int): Int = {
     if (alleles.isEmpty || alleles.exists(_.isEmpty)) Unknown
     else {
       val n = alleles.count(_.contains(altIx))

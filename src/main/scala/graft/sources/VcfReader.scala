@@ -1,8 +1,15 @@
 package graft.sources
 
-import org.apache.spark.sql.{DataFrame, Dataset, Row, SparkSession}
+import scala.collection.immutable.ArraySeq
+import scala.util.control.NonFatal
+
+import org.apache.spark.sql.{DataFrame, Dataset, GraftFrames, Row, SparkSession}
+import org.apache.spark.sql.catalyst.{CatalystTypeConverters, InternalRow}
 import org.apache.spark.sql.catalyst.encoders.RowEncoder
+import org.apache.spark.sql.catalyst.expressions.{GenericInternalRow, UnsafeArrayData}
+import org.apache.spark.sql.catalyst.util.{ArrayData, GenericArrayData}
 import org.apache.spark.sql.types._
+import org.apache.spark.unsafe.types.UTF8String
 
 import VcfParser._
 
@@ -11,9 +18,10 @@ import VcfParser._
   * The header (KB-sized) is parsed driver-side and DRIVES the variant
   * schema — every INFO field becomes a typed column exactly as the
   * reference infers SQL types from `##INFO` Type/Number. Body lines are
-  * parsed per-partition (pure function, embarrassingly parallel over a
-  * text scan — at 100 TB each bgzip shard/file split parses
-  * independently; nothing is collected to the driver).
+  * parsed per split by the `format("vcf")` partition reader (a pure
+  * line → rows function, embarrassingly parallel — at 100 TB each bgzip
+  * shard/file split parses independently; nothing is collected to the
+  * driver).
   *
   * Multi-allelic records are decomposed to one row per ALT (the
   * reference REQUIRES a vt-decomposed input; we do the decompose
@@ -89,32 +97,64 @@ object VcfReader {
       infoSpecs(h).map(s => StructField(sanitize(s.id), infoType(s))) ++
       statFields)
 
-  /** Per-alt value of an INFO field (post-decompose semantics). */
-  private def infoValue(spec: FieldSpec, raw: Option[String], altIx: Int): Any =
+  /** The worst impact of a variant row's own annotation entries — the
+    * reference's step 4 (gene, impact, impact_severity, and the rank
+    * that picked them). Null when no entry names the row's alt.
+    */
+  private val worstImpactFields: Seq[StructField] = Seq(
+    StructField("gene", StringType),
+    StructField("impact", StringType),
+    StructField("impact_severity", StringType),
+    StructField("severity_rank", IntegerType))
+
+  /** `variantSchema` plus the worst-impact columns: Vcf2Db's variants. */
+  def loadSchema(h: Header): StructType =
+    StructType(variantSchema(h).fields ++ worstImpactFields)
+
+  /** What each body line of a scan yields. */
+  private[graft] sealed trait LineRows extends Serializable
+  private[graft] object LineRows {
+    /** One decomposed variant per (record, alt): `variantSchema`. */
+    case object Variants extends LineRows
+    /** Variants carrying their record's worst impact: `loadSchema`. */
+    case object VariantsWorstImpact extends LineRows
+    /** One row per (annotation entry, alt it names): `impactSchema`. */
+    case object Impacts extends LineRows
+  }
+
+  def schemaOf(h: Header, rows: LineRows): StructType = rows match {
+    case LineRows.Variants => variantSchema(h)
+    case LineRows.VariantsWorstImpact => loadSchema(h)
+    case LineRows.Impacts => impactSchema(h)
+  }
+
+  /** Per-alt Catalyst value of an INFO field (post-decompose semantics). */
+  private def infoValue(spec: FieldSpec, dt: DataType, raw: Option[String],
+      altIx: Int): Any =
     (spec.number, raw) match {
       case ("0", r) => r.isDefined
-      case (_, None) => if (infoType(spec) == BooleanType) false else null
+      case (_, None) => if (dt == BooleanType) false else null
       case ("A", Some(v)) =>
         val parts = v.split(',')
         val x = if (altIx - 1 < parts.length) parts(altIx - 1) else "."
         lenientScalar(spec, x)
       case ("1", Some(v)) => lenientScalar(spec, v)
       case (_, Some(v)) =>
-        infoType(spec) match {
+        dt match {
           case _: ArrayType =>
             val parts = v.split(',')
             def at(i: Int): Any =
               if (i >= parts.length) null else lenientScalar(spec, parts(i))
-            spec.number match {
-              case "R" => Seq(at(0), at(altIx)) // ref + this alt
+            new GenericArrayData(spec.number match {
+              case "R" => Array[Any](at(0), at(altIx)) // ref + this alt
               case "G" =>
                 // diploid genotype index (j,k): k(k+1)/2 + j → this
                 // alt's [0/0, 0/alt, alt/alt] triple after decompose
                 val half = altIx * (altIx + 1) / 2
-                Seq(at(0), at(half), at(half + altIx))
-              case _ => parts.indices.map(at)
-            }
-          case _ => v
+                Array[Any](at(0), at(half), at(half + altIx))
+              case _ => Array.tabulate[Any](parts.length)(at)
+            })
+          case _ => UTF8String.fromString(v)
         }
     }
 
@@ -131,7 +171,7 @@ object VcfReader {
     else spec.vcfType match {
       case "Integer" => v.toInt
       case "Float" => v.toDouble
-      case _ => v
+      case _ => UTF8String.fromString(v)
     }
 
   /** Missing-value sentinel for numeric FORMAT sub-fields (the
@@ -178,102 +218,240 @@ object VcfReader {
     if (gIx >= parts.length || parts(gIx) == ".") Missing
     else try parts(gIx).toInt catch { case _: NumberFormatException => Missing }
 
-  /** One decomposed variant row per (record, alt). `needed` gates the
-    * expensive per-column work (INFO coercion, per-sample arrays): a
-    * pruned scan leaves unneeded slots null — the row keeps FULL-schema
-    * arity, the projection downstream never reads those slots, and a
-    * 2-column query over a 100-INFO, 1000-sample VCF costs 2 columns of
-    * parse, not the whole record.
+  private def intArray(a: Array[Int]): ArrayData = UnsafeArrayData.fromPrimitiveArray(a)
+
+  private def utf8(s: String): UTF8String = UTF8String.fromString(s)
+
+  /** One annotation entry of a record: its fields (padded or cut to the
+    * header's list, so a malformed entry cannot break the row arity)
+    * and the severity of its first consequence term.
     */
-  private def variantRows(h: Header, specs: Seq[FieldSpec], rec: Record,
-      needed: String => Boolean): Seq[Row] = {
-    val gtIx = rec.formatKeys.indexOf("GT")
-    val dpIx = rec.formatKeys.indexOf("DP")
-    val gqIx = rec.formatKeys.indexOf("GQ")
-    val adIx = rec.formatKeys.indexOf("AD")
-    val plIx = rec.formatKeys.indexOf("PL")
-    val needStats = Seq("call_rate", "aaf", "num_hom_ref", "num_het",
+  private final class AnnEntry(val vals: Array[String], val rank: Int,
+      val severity: String)
+
+  /** A body line → Catalyst rows of one [[LineRows]] shape, computing
+    * only the `columns` asked for, in that order. A pruned scan of a
+    * 100-INFO, 1000-sample VCF parses 2 columns, not the whole record;
+    * an impacts scan parses the site (columns 1–8) and never splits the
+    * sample columns. Values go straight into InternalRows (UTF8String,
+    * unsafe primitive arrays): no external Row and no per-row converter.
+    * With `passOnly` a record whose FILTER failed (anything but PASS or
+    * missing) yields no rows — vcf2db's --passonly, applied inside each
+    * table's own parse.
+    *
+    * Every scan of graft's batch reads parses through this class: the
+    * `format("vcf")` partition reader, `fromPath`, Vcf2Db's load and
+    * `fromLines`.
+    */
+  private[graft] final class LineParser(h: Header, rows: LineRows,
+      columns: Seq[String], passOnly: Boolean = false) {
+    private val full = schemaOf(h, rows)
+    private val keep: Array[Int] = columns.map(full.fieldIndex).toArray
+    private val whole = keep.sameElements(full.indices)
+    private val needed: Set[String] = columns.toSet
+    private val specs: Array[FieldSpec] = infoSpecs(h).toArray
+    private val specTypes: Array[DataType] = specs.map(infoType)
+    private val specNeeded: Array[Boolean] = specs.map(s => needed(sanitize(s.id)))
+    private val needStats = Seq("call_rate", "aaf", "num_hom_ref", "num_het",
       "num_hom_alt", "num_unknown").exists(needed)
-    val needGtTypes = needStats || needed("gt_types")
-    val needGts = needed("gts") || needed("gt_phases")
-    val needPl = Seq("gt_phred_ll_homref", "gt_phred_ll_het",
+    private val needGtTypes = needStats || needed("gt_types")
+    private val needGts = needed("gts") || needed("gt_phases")
+    private val needPl = Seq("gt_phred_ll_homref", "gt_phred_ll_het",
       "gt_phred_ll_homalt").exists(needed)
-    // Per-sample, alt-independent arrays computed once per record.
-    // fmtAt handles gtIx < 0 (FORMAT without GT) and truncated sample
-    // columns alike: the arrays stay cohort-width with "" → UNKNOWN,
-    // never shorter than the sample list (index-aligned consumers
-    // would silently mis-attribute on a short array).
-    val gts: Seq[String] =
-      if (needGts) rec.genotypes.map(s => fmtAt(s, gtIx)) else null
-    val phases: Seq[Int] =
-      if (needed("gt_phases")) gts.map(g => if (g.contains('|')) 1 else 0) else null
-    val depths: Seq[Int] =
-      if (needed("gt_depths")) rec.genotypes.map(s => fmtInt(s, dpIx)) else null
-    val quals: Seq[Int] =
-      if (needed("gt_quals")) rec.genotypes.map(s => fmtInt(s, gqIx)) else null
-    val refDepths: Seq[Int] =
-      if (needed("gt_ref_depths")) rec.genotypes.map(s => adAt(s, adIx, 0)) else null
-    val pls: Seq[Array[String]] =
-      if (needPl) rec.genotypes.map(s => plParts(s, plIx)) else null
-    val plHomRef: Seq[Int] =
-      if (needed("gt_phred_ll_homref")) pls.map(p => plAt(p, 0)) else null
-    rec.alts.zipWithIndex.map { case (alt, i0) =>
-      val altIx = i0 + 1
-      val gtTypes: Seq[Int] =
-        if (needGtTypes) rec.genotypes.map(s => gtType(fmtAt(s, gtIx), altIx))
+    private val needWorst = rows == LineRows.VariantsWorstImpact &&
+      Seq("gene", "impact", "impact_severity", "severity_rank").exists(needed)
+
+    private val annFields = h.annFields
+    private val alleleIx = annFields.indexWhere(f => f == "Allele" || f == "ALLELE")
+    private val consIx = annFields.indexWhere(f => f.equalsIgnoreCase("Consequence") ||
+      f.equalsIgnoreCase("Annotation"))
+    // the worst impact's gene and impact come from the same impacts
+    // columns Etl.geneCol / Etl.consequenceCol resolve (VEP SYMBOL /
+    // Consequence, SnpEff Gene_Name / Annotation); -1 → null
+    private val annCols = annFields.map(sanitize)
+    private def firstCol(names: String*): Int =
+      names.map(annCols.indexOf).find(_ >= 0).getOrElse(-1)
+    private val geneIx = firstCol("symbol", "gene_name", "gene")
+    private val impactIx = firstCol("consequence", "annotation")
+
+    def apply(line: String): Array[InternalRow] = rows match {
+      case LineRows.Impacts => impactRows(parseSite(line))
+      case _ => variantRows(parseRecord(line))
+    }
+
+    /** `apply`, but a line that fails to parse yields no rows. */
+    def apply(line: String, permissive: Boolean): Array[InternalRow] =
+      if (!permissive) apply(line)
+      else try apply(line) catch { case NonFatal(_) => Array.empty }
+
+    private def passes(rec: Record): Boolean =
+      !passOnly || rec.filter.forall(_ == "PASS")
+
+    private def row(fullValues: Array[Any]): InternalRow =
+      new GenericInternalRow(
+        if (whole) fullValues else keep.map(i => fullValues(i)))
+
+    private def entries(rec: Record): Array[AnnEntry] =
+      h.annKey.flatMap(rec.info.get) match {
+        case None => Array.empty
+        case Some(v) => v.split(',').map { entry =>
+          val vals = entry.split('|').padTo(annFields.length, "").take(annFields.length)
+          val cons = if (consIx >= 0) vals(consIx).split('&').head else ""
+          new AnnEntry(vals, severityRank.getOrElse(cons, 99), severityBucket(cons))
+        }
+      }
+
+    /** The entry attaches to the alt its Allele field names — raw ALT or
+      * VEP's minimised form (indel entries carry the latter; raw
+      * matching alone silently drops every indel annotation). All alts
+      * if the annotation has no Allele column.
+      */
+    private def names(e: AnnEntry, ref: String, alt: String): Boolean =
+      alleleIx < 0 || e.vals(alleleIx) == alt || e.vals(alleleIx) == vepAllele(ref, alt)
+
+    /** CSQ/ANN/BCSQ expansion: one row per (entry, alt it names), in
+      * entry order — the reference's `variant_impacts` table.
+      */
+    private def impactRows(rec: Record): Array[InternalRow] =
+      if (!passes(rec)) Array.empty
+      else {
+        val chrom = utf8(rec.chrom)
+        val ref = utf8(rec.ref)
+        entries(rec).flatMap { e =>
+          rec.alts.filter(names(e, rec.ref, _)).map { alt =>
+            row(Array[Any](chrom, rec.pos, ref, utf8(alt)) ++
+              e.vals.map(utf8) ++ Array[Any](e.rank, utf8(e.severity)))
+          }
+        }
+      }
+
+    /** The alt's worst entry: least (severity rank, impact), ties to the
+      * earlier entry — the order `Vcf2Db.denormalizeWorstImpact` sorts
+      * by, with the tie its row_number leaves open made definite.
+      */
+    private def worst(es: Array[AnnEntry], ref: String, alt: String): Array[Any] = {
+      var best: AnnEntry = null
+      var bestImpact: UTF8String = null
+      es.foreach { e =>
+        if (names(e, ref, alt)) {
+          val impact = if (impactIx >= 0) utf8(e.vals(impactIx)) else null
+          val better = best == null || e.rank < best.rank ||
+            (e.rank == best.rank && bestImpact != null && impact.compareTo(bestImpact) < 0)
+          if (better) { best = e; bestImpact = impact }
+        }
+      }
+      if (best == null) Array[Any](null, null, null, null)
+      else Array[Any](if (geneIx >= 0) utf8(best.vals(geneIx)) else null,
+        bestImpact, utf8(best.severity), best.rank)
+    }
+
+    /** One decomposed variant row per (record, alt). Number=A INFO
+      * fields pick the alt's value; genotype classes are recomputed per
+      * alt. Unneeded columns are never computed.
+      */
+    private def variantRows(rec: Record): Array[InternalRow] = {
+      if (!passes(rec)) return Array.empty
+      val gtIx = rec.formatKeys.indexOf("GT")
+      val dpIx = rec.formatKeys.indexOf("DP")
+      val gqIx = rec.formatKeys.indexOf("GQ")
+      val adIx = rec.formatKeys.indexOf("AD")
+      val plIx = rec.formatKeys.indexOf("PL")
+      val samples = rec.genotypes
+      // Per-sample, alt-independent values computed once per record.
+      // fmtAt handles gtIx < 0 (FORMAT without GT) and truncated sample
+      // columns alike: the arrays stay cohort-width with "" → UNKNOWN,
+      // never shorter than the sample list (index-aligned consumers
+      // would silently mis-attribute on a short array).
+      val gtStrings: Vector[String] =
+        if (needGts) samples.map(s => fmtAt(s, gtIx)) else null
+      val alleles: Vector[Vector[Option[Int]]] =
+        if (needGtTypes) samples.map(s => gtAlleles(fmtAt(s, gtIx))) else null
+      val gts: ArrayData =
+        if (needed("gts")) new GenericArrayData(gtStrings.map(g => utf8(g): Any).toArray)
         else null
-      val altDepths: Seq[Int] =
-        if (needed("gt_alt_depths")) rec.genotypes.map(s => adAt(s, adIx, altIx))
+      val phases: ArrayData =
+        if (needed("gt_phases"))
+          intArray(gtStrings.map(g => if (g.contains('|')) 1 else 0).toArray)
         else null
-      // PL's flat diploid index for (j, k): k(k+1)/2 + j — this alt's
-      // [0/0, 0/alt, alt/alt] triple after decompose
-      val half = altIx * (altIx + 1) / 2
-      val plHet: Seq[Int] =
-        if (needed("gt_phred_ll_het")) pls.map(p => plAt(p, half)) else null
-      val plHomAlt: Seq[Int] =
-        if (needed("gt_phred_ll_homalt")) pls.map(p => plAt(p, half + altIx))
-        else null
-      val st = if (needStats) gtStats(gtTypes) else null
-      val infoVals = specs.map(s =>
-        if (needed(sanitize(s.id))) infoValue(s, rec.info.get(s.id), altIx)
-        else null)
-      Row.fromSeq(
-        Seq(rec.chrom, rec.pos, rec.id.orNull, rec.ref, alt,
-          rec.qual.map(Double.box).orNull, rec.filter.orNull) ++ infoVals ++
-          // Seq[Any] explicitly: an unascribed Seq(Double, …, Int, …)
-          // unifies to Seq[Double] and silently WIDENS the int stats
-          (if (st == null) Seq[Any](null, null, null, null, null, null)
-           else Seq[Any](st.callRate, st.aaf, st.numHomRef, st.numHet,
+      def perSample(name: String)(f: Vector[String] => Int): ArrayData =
+        if (needed(name)) intArray(samples.map(f).toArray) else null
+      val depths = perSample("gt_depths")(fmtInt(_, dpIx))
+      val quals = perSample("gt_quals")(fmtInt(_, gqIx))
+      val refDepths = perSample("gt_ref_depths")(adAt(_, adIx, 0))
+      val pls: Vector[Array[String]] =
+        if (needPl) samples.map(s => plParts(s, plIx)) else null
+      val plHomRef: ArrayData =
+        if (needed("gt_phred_ll_homref")) intArray(pls.map(plAt(_, 0)).toArray) else null
+      val annEntries = if (needWorst) entries(rec) else null
+      val chrom = utf8(rec.chrom)
+      val vid = rec.id.map(utf8).orNull
+      val ref = utf8(rec.ref)
+      val qual = rec.qual.map(Double.box).orNull
+      val filter = rec.filter.map(utf8).orNull
+      rec.alts.iterator.zipWithIndex.map { case (alt, i0) =>
+        val altIx = i0 + 1
+        val gtTypes: Array[Int] =
+          if (needGtTypes) alleles.map(gtTypeOf(_, altIx)).toArray else null
+        val altDepths = perSample("gt_alt_depths")(adAt(_, adIx, altIx))
+        // PL's flat diploid index for (j, k): k(k+1)/2 + j — this alt's
+        // [0/0, 0/alt, alt/alt] triple after decompose
+        val half = altIx * (altIx + 1) / 2
+        val plHet: ArrayData =
+          if (needed("gt_phred_ll_het")) intArray(pls.map(plAt(_, half)).toArray) else null
+        val plHomAlt: ArrayData =
+          if (needed("gt_phred_ll_homalt")) intArray(pls.map(plAt(_, half + altIx)).toArray)
+          else null
+        val st = if (needStats) gtStats(ArraySeq.unsafeWrapArray(gtTypes)) else null
+        val infoVals = specs.indices.map(j =>
+          if (specNeeded(j)) infoValue(specs(j), specTypes(j), rec.info.get(specs(j).id), altIx)
+          else null)
+        row(Array[Any](chrom, rec.pos, vid, ref, utf8(alt), qual, filter) ++
+          infoVals ++
+          (if (st == null) Array[Any](null, null, null, null, null, null)
+           else Array[Any](st.callRate, st.aaf, st.numHomRef, st.numHet,
              st.numHomAlt, st.numUnknown)) ++
-          Seq(if (needed("gt_types")) gtTypes else null,
-            if (needed("gts")) gts else null,
-            depths, refDepths, altDepths, quals,
-            plHomRef, plHet, plHomAlt, phases))
+          Array[Any](if (needed("gt_types")) intArray(gtTypes) else null,
+            gts, depths, refDepths, altDepths, quals, plHomRef, plHet, plHomAlt,
+            phases) ++
+          (if (rows != LineRows.VariantsWorstImpact) Array.empty[Any]
+           else if (needWorst) worst(annEntries, rec.ref, alt)
+           else Array[Any](null, null, null, null)))
+      }.toArray
     }
   }
 
-  /** Decomposed variant rows of one body line (shared by the Dataset
-    * path below and the DataSourceV2 PartitionReader); the pruned form
-    * computes only the columns `needed` accepts.
+  /** Decomposed variant rows of one body line as external Rows of the
+    * full variants schema, through the scan's own [[LineParser]]; the
+    * pruned form computes only the columns `needed` accepts and leaves
+    * the other slots null.
     */
   def decomposedRows(h: Header, line: String): Seq[Row] =
     decomposedRows(h, line, _ => true)
 
-  def decomposedRows(h: Header, line: String, needed: String => Boolean): Seq[Row] =
-    variantRows(h, infoSpecs(h), parseRecord(line), needed)
+  def decomposedRows(h: Header, line: String, needed: String => Boolean): Seq[Row] = {
+    val schema = variantSchema(h)
+    val names = schema.fieldNames.toSeq.filter(needed)
+    val toRow = CatalystTypeConverters.createToScalaConverter(
+      StructType(names.map(schema(_))))
+    new LineParser(h, LineRows.Variants, names)(line).toSeq.map { ir =>
+      val r = toRow(ir).asInstanceOf[Row]
+      Row.fromSeq(schema.fieldNames.toSeq.map(n =>
+        if (needed(n)) r.get(names.indexOf(n)) else null))
+    }
+  }
 
+  /** Variants of a Dataset of lines — the streaming read's parse (a
+    * streaming Dataset has no batch scan to plug a reader into), the
+    * same [[LineParser]] with its rows converted to external Rows.
+    */
   def variants(h: Header, body: Dataset[String], permissive: Boolean = false): DataFrame = {
     val schema = variantSchema(h)
-    val specs = infoSpecs(h)
     implicit val enc = RowEncoder.encoderFor(schema)
-    if (permissive)
-      body.filter(isBodyLine _).mapPartitions(_.flatMap(l =>
-        VcfParser.tryParseRecord(l).toSeq.flatMap(r =>
-          try variantRows(h, specs, r, _ => true)
-          catch { case scala.util.control.NonFatal(_) => Seq.empty })))
-    else
-      body.filter(isBodyLine _)
-        .mapPartitions(_.flatMap(l => variantRows(h, specs, parseRecord(l), _ => true)))
+    body.filter(isBodyLine _).mapPartitions { lines =>
+      val parse = new LineParser(h, LineRows.Variants, schema.fieldNames.toSeq)
+      val toRow = CatalystTypeConverters.createToScalaConverter(schema)
+      lines.flatMap(l => parse(l, permissive)).map(r => toRow(r).asInstanceOf[Row])
+    }
   }
 
   // ------------------------------------------------------------- impacts
@@ -288,90 +466,61 @@ object VcfReader {
         Seq(StructField("severity_rank", IntegerType, nullable = false),
           StructField("impact_severity", StringType)))
 
-  /** CSQ/ANN/BCSQ expansion: one row per (variant-alt, annotation entry),
-    * entries `,`-separated, fields `|`-separated with names from the
-    * header Description — the reference's `variant_impacts` table.
-    */
-  def impacts(h: Header, body: Dataset[String]): DataFrame = {
-    val schema = impactSchema(h)
-    val key = h.annKey.getOrElse(
-      throw new IllegalArgumentException("no CSQ/ANN/BCSQ INFO field in header"))
-    val fields = h.annFields
-    val alleleIx = fields.indexWhere(f => f == "Allele" || f == "ALLELE")
-    val consIx = fields.indexWhere(f => f.equalsIgnoreCase("Consequence") ||
-      f.equalsIgnoreCase("Annotation"))
-    implicit val enc = RowEncoder.encoderFor(schema)
-    body.filter(isBodyLine _).mapPartitions(_.flatMap { l =>
-      val rec = parseRecord(l)
-      rec.info.get(key).toSeq.flatMap(_.split(',')).flatMap { entry =>
-        // pad short entries, drop extras beyond the header's field list
-        // (a malformed entry must not break the row arity)
-        val vals = entry.split('|').padTo(fields.length, "").take(fields.length)
-        val cons = if (consIx >= 0) vals(consIx).split('&').head else ""
-        val rank = severityRank.getOrElse(cons, 99)
-        val sev = severityBucket(cons)
-        // attach the entry to the alt its Allele field names — raw ALT
-        // or VEP's minimised form (indel entries carry the latter; raw
-        // matching alone silently drops every indel annotation). All
-        // alts if the annotation has no Allele column.
-        val alts =
-          if (alleleIx >= 0) rec.alts.filter(a =>
-            vals(alleleIx) == a || vals(alleleIx) == vepAllele(rec.ref, a))
-          else rec.alts
-        alts.map(alt => Row.fromSeq(
-          Seq(rec.chrom, rec.pos, rec.ref, alt) ++ vals ++ Seq(rank, sev)))
-      }
-    })
-  }
-
   // ------------------------------------------------------------ entry API
 
   def headerOf(lines: Seq[String]): Header = parseHeader(lines)
 
-  /** impacts when the header declares an annotation key; an EMPTY
-    * impacts table (fixed columns only) otherwise — an unannotated VCF
-    * is a legal input, not an error.
+  /** An EMPTY impacts table (fixed columns only) — an unannotated VCF is
+    * a legal input, not an error.
     */
-  private def maybeImpacts(spark: SparkSession, h: Header,
-      body: Dataset[String]): DataFrame =
-    if (h.annKey.isDefined) impacts(h, body)
-    else spark.createDataFrame(
-      spark.sparkContext.emptyRDD[Row], impactSchema(h))
+  private def noImpacts(spark: SparkSession, h: Header): DataFrame =
+    spark.createDataFrame(spark.sparkContext.emptyRDD[Row], impactSchema(h))
 
-  /** Reads a VCF from literal lines (tests / fixtures). */
+  /** Reads a VCF from literal lines (tests / fixtures): the lines are
+    * already on the driver, so they parse there into a local relation.
+    */
   def fromLines(spark: SparkSession, lines: Seq[String]): (Header, DataFrame, DataFrame) = {
-    import spark.implicits._
     val h = parseHeader(lines)
-    val body = spark.createDataset(lines.filter(isBodyLine))
-    (h, variants(h, body), maybeImpacts(spark, h, body))
+    val body = lines.filter(isBodyLine)
+    def frame(rows: LineRows): DataFrame = {
+      val schema = schemaOf(h, rows)
+      val parse = new LineParser(h, rows, schema.fieldNames.toSeq)
+      GraftFrames.ofLocalRows(spark, schema, body.flatMap(parse(_)))
+    }
+    (h, frame(LineRows.Variants),
+      if (h.annKey.isDefined) frame(LineRows.Impacts) else noImpacts(spark, h))
   }
 
-  /** Reads a VCF file path: header via a driver-side bounded read of the
-    * `#`-prefix (through Hadoop FileSystem + transparent gunzip, the same
-    * path the DSv2 source uses — spark.read.textFile decompresses `.gz`
-    * bodies, so the header read must too or a compressed input would
-    * silently parse garbage header bytes into an empty schema), body as
-    * a distributed text scan.
+  /** Reads a VCF path (a file, a directory of shards or a glob) through
+    * the `format("vcf")` scan: header read once driver-side (gunzipped
+    * when compressed), body split by byte range across executors.
+    * Returns the header, the variants (the `format("vcf")` schema) and
+    * the impacts table — empty when the header declares no annotation
+    * key. Each table is its own scan of the text.
     */
-  def fromPath(spark: SparkSession, path: String): (Header, DataFrame, DataFrame) = {
-    import spark.implicits._
-    val hp = new org.apache.hadoop.fs.Path(path)
-    val fs = org.apache.hadoop.fs.FileSystem.get(
-      hp.toUri, spark.sessionState.newHadoopConf())
-    val in = fs.open(hp)
-    val headerLines =
-      try {
-        val reader = new java.io.BufferedReader(new java.io.InputStreamReader(
-          VcfIo.maybeGunzip(path, in), "UTF-8"))
-        Iterator.continually(reader.readLine())
-          .takeWhile(l => l != null && l.startsWith("#"))
-          .toVector
-      } finally in.close()
+  def fromPath(spark: SparkSession, path: String): (Header, DataFrame, DataFrame) =
+    read(spark, path, LineRows.Variants, passOnly = false)
+
+  /** Vcf2Db's read: `fromPath`, but the variants carry their record's
+    * worst impact (`loadSchema`) when the header declares an annotation
+    * key, and with `passOnly` a record whose FILTER failed yields no
+    * variants and no impacts.
+    */
+  def forLoad(spark: SparkSession, path: String,
+      passOnly: Boolean): (Header, DataFrame, DataFrame) =
+    read(spark, path, LineRows.VariantsWorstImpact, passOnly)
+
+  private def read(spark: SparkSession, path: String, variantRows: LineRows,
+      passOnly: Boolean): (Header, DataFrame, DataFrame) = {
+    val (files, headerLines) =
+      VcfDataSource.resolve(path, spark.sessionState.newHadoopConf())
     require(headerLines.exists(_.startsWith("#CHROM")),
       s"$path: no #CHROM header line — not a VCF (or header not at file start)")
     val h = parseHeader(headerLines)
-    val body = spark.read.textFile(path)
-    (h, variants(h, body), maybeImpacts(spark, h, body))
+    def frame(rows: LineRows): DataFrame = GraftFrames.ofTable(spark,
+      new VcfTable(files, headerLines, schemaOf(h, rows), Some(path), rows, passOnly))
+    if (h.annKey.isEmpty) (h, frame(LineRows.Variants), noImpacts(spark, h))
+    else (h, frame(variantRows), frame(LineRows.Impacts))
   }
 
   // ------------------------------------------------------ cohort merge

@@ -678,6 +678,78 @@ class Vcf2DbSpec extends SparkSpec {
     assert(imp.count() == 3)
   }
 
+  /** CSQ cases the worst-impact pick has to settle: rank ties, a tie
+    * broken by the consequence text, duplicate (chrom, pos, ref, alt)
+    * records with a failing FILTER, and per-alt entries.
+    */
+  private val pickLines = Vector(
+    "##fileformat=VCFv4.2",
+    "##INFO=<ID=CSQ,Number=.,Type=String,Description=\"VEP. Format: Allele|Consequence|SYMBOL\">",
+    "##FORMAT=<ID=GT,Number=1,Type=String,Description=\"Genotype\">",
+    "#CHROM\tPOS\tID\tREF\tALT\tQUAL\tFILTER\tINFO\tFORMAT\ts1",
+    "1\t100\t.\tA\tG\t50\tPASS\tCSQ=G|missense_variant|TIE_B,G|missense_variant|TIE_A\tGT\t0/1",
+    "1\t150\t.\tA\tG\t50\tPASS\t" +
+      "CSQ=G|missense_variant&splice_region_variant|LONGER,G|missense_variant|SHORTER\tGT\t0/1",
+    "1\t200\t.\tC\tT\t50\tPASS\tCSQ=T|stop_gained|DUP_PASS\tGT\t0/1",
+    "1\t200\t.\tC\tT\t50\tq10\tCSQ=T|synonymous_variant|DUP_FAIL\tGT\t0/1",
+    "1\t300\t.\tG\tA,T\t50\tPASS\tCSQ=A|intron_variant|ALT_A,T|stop_lost|ALT_T\tGT\t1/2")
+
+  private def loadPicks(passOnly: Boolean): (String, Map[(Long, String, String), String]) = {
+    val dir = Files.createTempDirectory("worstpick")
+    val vcf = dir.resolve("in.vcf")
+    Files.writeString(vcf, pickLines.mkString("\n") + "\n")
+    val out = dir.resolve("db").toString
+    Vcf2Db.run(spark, vcf.toString, None, out, passOnly = passOnly)
+    val genes = GraftDb.variants(spark, out).collect().map(r =>
+      (r.getAs[Long]("pos"), r.getAs[String]("alt"),
+        Option(r.getAs[String]("filter")).getOrElse(".")) -> r.getAs[String]("gene")).toMap
+    (out, genes)
+  }
+
+  test("in-row worst impact: CSQ-order ties, each duplicate record its own pick") {
+    val (out, genes) = loadPicks(passOnly = false)
+    assert(genes == Map(
+      (100L, "G", "PASS") -> "TIE_B", // equal (rank, consequence): first entry
+      (150L, "G", "PASS") -> "SHORTER", // equal rank: lesser consequence text
+      (200L, "T", "PASS") -> "DUP_PASS",
+      (200L, "T", "q10") -> "DUP_FAIL", // its own entry, not the key's union
+      (300L, "A", "PASS") -> "ALT_A",
+      (300L, "T", "PASS") -> "ALT_T"))
+    val v150 = GraftDb.variants(spark, out).filter("pos = 150").head()
+    assert(v150.getAs[String]("impact") == "missense_variant")
+    assert(v150.getAs[Int]("severity_rank") == 12)
+    val dupFail = GraftDb.variants(spark, out).filter("filter = 'q10'").head()
+    assert(dupFail.getAs[String]("impact_severity") == "LOW")
+    // the join reference gives both duplicates the worst of their union
+    val (_, v, i) = graft.sources.VcfReader.fromPath(spark,
+      s"${out.stripSuffix("/db")}/in.vcf")
+    assert(Vcf2Db.denormalizeWorstImpact(v, i).filter("pos = 200")
+      .select("gene").collect().map(_.getString(0)).toSeq == Seq("DUP_PASS", "DUP_PASS"))
+  }
+
+  test("--passonly drops a failing duplicate's variant and impacts, keeps the PASS one") {
+    val (out, genes) = loadPicks(passOnly = true)
+    assert(genes.keySet.filter(_._1 == 200L) == Set((200L, "T", "PASS")))
+    assert(genes((200L, "T", "PASS")) == "DUP_PASS")
+    // a key-based semi-join would keep DUP_FAIL's entry: the key survives
+    assert(GraftDb.impacts(spark, out).filter("pos = 200")
+      .select("symbol").collect().map(_.getString(0)).toSeq == Seq("DUP_PASS"))
+    assert(GraftDb.impacts(spark, out).count() == 7)
+  }
+
+  test("in-row worst impact equals the denormalizeWorstImpact join on unique keys") {
+    val dir = Files.createTempDirectory("worstref")
+    val vcf = dir.resolve("in.vcf").toString
+    Files.writeString(dir.resolve("in.vcf"), VcfFixture.lines.mkString("\n") + "\n")
+    val inRow = graft.sources.VcfReader.forLoad(spark, vcf, passOnly = false)._2
+    val (_, v, i) = graft.sources.VcfReader.fromPath(spark, vcf)
+    val joined = Vcf2Db.denormalizeWorstImpact(v, i)
+    assert(inRow.schema == joined.schema)
+    assert(inRow.count() == 5)
+    assert(inRow.exceptAll(joined).count() == 0)
+    assert(joined.exceptAll(inRow).count() == 0)
+  }
+
   test("amendSamples replaces the stored PED, rejects a non-covering one") {
     val dir = Files.createTempDirectory("amend")
     val vcf = dir.resolve("in.vcf")

@@ -577,6 +577,55 @@ class VcfSplitSpec extends SparkSpec {
   }
 }
 
+/** Default split size: Spark's file-source rule, so a plain VCF larger
+  * than the open cost times the core count reads as one split per core
+  * at least — not as one task per 128 MB.
+  */
+class VcfSplitRuleSpec extends SparkSpec {
+  import java.nio.file.Files
+
+  test("a >4 MB plain VCF plans into at least defaultParallelism splits") {
+    val cores = spark.sparkContext.defaultParallelism
+    // past the open-cost floor, so the rule's total / cores term decides
+    val target = spark.sessionState.conf.filesOpenCostInBytes * cores + (1L << 20)
+    val sb = new StringBuilder
+    sb ++= "##fileformat=VCFv4.2\n"
+    sb ++= "##INFO=<ID=DP,Number=1,Type=Integer,Description=\"Depth\">\n"
+    sb ++= "#CHROM\tPOS\tID\tREF\tALT\tQUAL\tFILTER\tINFO\tFORMAT\ts1\ts2\n"
+    var n = 0
+    while (sb.length < target) {
+      n += 1
+      sb ++= s"1\t$n\t.\tA\tG\t.\tPASS\tDP=$n\tGT:DP\t0/1:$n\t1/1:$n\n"
+    }
+    val f = Files.createTempDirectory("vcfsplitrule").resolve("big.vcf")
+    Files.writeString(f, sb.toString)
+    assert(Files.size(f) > 4L * 1024 * 1024)
+
+    val df = spark.read.format("vcf").load(f.toString)
+    assert(df.rdd.getNumPartitions >= cores,
+      s"${Files.size(f)} bytes planned into ${df.rdd.getNumPartitions} splits")
+    assert(df.count() == n) // every record owned by exactly one split
+    assert(df.agg(org.apache.spark.sql.functions.sum("dp")).head().getLong(0) ==
+      n.toLong * (n + 1) / 2)
+    // an explicit splitSize still overrides the rule
+    assert(spark.read.format("vcf").option("splitSize", Files.size(f))
+      .load(f.toString).rdd.getNumPartitions == 1)
+  }
+
+  test("split rule: open-cost floor, total spread over the cores, even cuts") {
+    import graft.sources.SplitRule
+    val mb = 1L << 20
+    val rule = SplitRule(maxPartitionBytes = 128 * mb, openCostInBytes = 4 * mb,
+      minPartitions = 4)
+    assert(rule.maxSplitBytes(Seq(1 * mb)) == 4 * mb)
+    assert(rule.maxSplitBytes(Seq(15 * mb)) == 19 * mb / 4)
+    assert(rule.maxSplitBytes(Seq(4000 * mb)) == 128 * mb)
+    // 15 MB at a 4.75 MB maximum: four equal 3.75 MB splits
+    assert(SplitRule.evenSize(15 * mb, 19 * mb / 4) == 15 * mb / 4)
+    assert(SplitRule.evenSize(0L, 4 * mb) == 1L)
+  }
+}
+
 /** Tabix interop: a sibling .tbi drives block-range pruning for region
   * queries over an indexed BGZF shard — no first-key head-reads, exact
   * results, graceful fallback on a corrupt index.

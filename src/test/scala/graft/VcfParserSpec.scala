@@ -54,6 +54,42 @@ class VcfParserSpec extends AnyFunSuite {
     assert(gtType("./1") == Unknown)
   }
 
+  test("gtAlleles char scan gives split(\"[/|]\")'s results, exceptions included") {
+    import org.scalacheck.Gen
+    import org.scalacheck.rng.Seed
+    // the regex form the char scan replaced, kept as the reference
+    def reference(gt: String): Vector[Option[Int]] =
+      gt.split("[/|]").toVector.map(a => if (a == "." || a.isEmpty) None else Some(a.toInt))
+    def outcome(f: String => Vector[Option[Int]], gt: String)
+        : Either[String, Vector[Option[Int]]] =
+      try Right(f(gt)) catch { case e: NumberFormatException => Left(e.getClass.getName) }
+    def same(gt: String): Unit =
+      assert(outcome(gtAlleles, gt) == outcome(reference, gt), s"GT '$gt'")
+    Seq("0/", "", ".", "./1", "10|2", "1", "0/1", "1|1", "./.", "/", "//1",
+      "1//", "|0", "x/1", "+1|0", "-1/2", "01/1").foreach(same)
+    val gtGen = Gen.choose(0, 8).flatMap(n =>
+      Gen.listOfN(n, Gen.oneOf('0', '1', '2', '9', '.', '/', '|', 'x', '+', '-'))
+        .map(_.mkString))
+    var seed = Seed(7L)
+    (1 to 3000).foreach { _ =>
+      gtGen.apply(Gen.Parameters.default, seed).foreach(same)
+      seed = seed.next
+    }
+  }
+
+  test("site parse reads columns 1-8 like the full parse, samples unsplit") {
+    val line = "1\t100\trs1\tA\tG,T\t50.5\tq10\tDP=7;CSQ=G|x\tGT:DP\t0/1:3\t./."
+    val full = parseRecord(line)
+    val site = parseSite(line)
+    assert(site == full.copy(formatKeys = Vector.empty, genotypes = Vector.empty))
+    val sitesOnly = "2\t5\t.\tC\tA\t.\t.\tCSQ=A|y"
+    assert(parseSite(sitesOnly) == parseRecord(sitesOnly))
+    assert(parseSite("3\t9\t.\tG\tC\t.\t.") == parseRecord("3\t9\t.\tG\tC\t.\t."))
+    // a truncated line fails the same way in both
+    intercept[ArrayIndexOutOfBoundsException](parseSite("3\t9\t.\tG\tC"))
+    intercept[ArrayIndexOutOfBoundsException](parseRecord("3\t9\t.\tG\tC"))
+  }
+
   test("gt stats: call_rate and aaf") {
     val st = gtStats(Seq(HomRef, Het, HomAlt, Unknown))
     assert(st.callRate == 0.75)
