@@ -1,7 +1,5 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
-
 /** Per-round benchmark: headline sf-scaling queries, one warmup pass
   * (JIT + codegen + broadcast build amortized out, the steady-state a
   * long-lived cluster job actually runs at) then MULTIPLE timed passes,
@@ -119,17 +117,44 @@ object Bench {
     // "cpus honored?" from output instead of inferring it
     "q42_pseudonym_digest")
 
-  /** SPARK_GRAFT_CPUS as the core count the run uses: a positive
-    * integer, or `*` (as in `local[*]`) for every available processor.
-    * It is echoed into the JSON output as a number.
-    */
-  private[graft] def cpuCount(raw: String): Int = raw.trim match {
-    case "*" => Runtime.getRuntime.availableProcessors()
-    case n =>
-      val c = n.toInt
-      require(c > 0, s"SPARK_GRAFT_CPUS must be a positive integer or '*', got '$raw'")
-      c
+  /** One key set's timings: a warm-up pass, then the timed passes. */
+  private[graft] final case class Timings(warmup: Seq[(String, Double)],
+      passes: Seq[Seq[(String, Double)]], failed: Seq[String]) {
+    /** Per-key min across the timed passes = the reproducible cost of
+      * the plan; the per-pass spread is the environment's noise.
+      */
+    def best: Seq[(String, Double)] =
+      warmup.map { case (n, _) => n -> passes.map(_.toMap.apply(n)).min }
   }
+
+  /** Runs `keys` once to warm up, then `nPasses` timed times. A key
+    * that throws in any pass is failed: it is not run again and gets
+    * no time anywhere — a query that dies at once must never read as a
+    * fast one.
+    */
+  private[graft] def time(keys: Seq[String], nPasses: Int)(run: String => Unit): Timings = {
+    val failed = scala.collection.mutable.LinkedHashSet.empty[String]
+    def pass(): Seq[(String, Double)] = keys.filterNot(failed).flatMap { n =>
+      val t0 = System.nanoTime()
+      try { run(n); Some(n -> (System.nanoTime() - t0) / 1e9) }
+      catch { case e: Throwable =>
+        System.err.println(s"[bench] $n failed: ${e.getMessage}")
+        failed += n
+        None
+      }
+    }
+    val warmup = pass()
+    val passes = Seq.fill(nPasses)(pass())
+    def ok(p: Seq[(String, Double)]) = p.filterNot { case (n, _) => failed(n) }
+    Timings(ok(warmup), passes.map(ok), failed.toSeq)
+  }
+
+  /** The `"failed":[…],` member naming every failed key; empty when
+    * none failed, so a clean run's line keeps its keys.
+    */
+  private[graft] def failedJson(failed: Seq[String]): String =
+    if (failed.isEmpty) ""
+    else failed.map("\"" + _ + "\"").mkString("\"failed\":[", ",", "],")
 
   def main(args: Array[String]): Unit = {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
@@ -138,29 +163,16 @@ object Bench {
     val only = sys.env.get("SPARK_GRAFT_BENCH_ONLY")
       .map(_.split(",").map(_.trim).toSet)
     val bench = headline.filter(n => only.forall(_.contains(n)))
-    val cpus = cpuCount(sys.env.getOrElse("SPARK_GRAFT_CPUS", "4"))
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus.toString)
-      .config("spark.sql.adaptive.enabled", "true")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val cpus = GraftSession.envCpus(4)
+    val spark = GraftSession.build(s"local[$cpus]", cpus)
 
-    def run(name: String): Double = {
+    def run(name: String): Unit = {
       // label the jobs (guide §1.5) so an event log / UI of a bench run
       // maps stages back to keys; thread-local, cleared after the run
       spark.sparkContext.setJobDescription(s"bench: $name")
-      val t0 = System.nanoTime()
       try SparkEntry.queries(name)(spark, sfDir)
         .write.format("noop").mode("overwrite").save()
-      catch { case e: Throwable =>
-        System.err.println(s"[bench] $name failed: ${e.getMessage}")
-      }
       finally spark.sparkContext.setJobDescription(null)
-      (System.nanoTime() - t0) / 1e9
     }
 
     def jsonMap(m: Seq[(String, Double)]): String =
@@ -172,13 +184,11 @@ object Bench {
 
     val nPasses = sys.env.getOrElse("SPARK_GRAFT_BENCH_PASSES", "3").toInt
     require(nPasses >= 1, s"SPARK_GRAFT_BENCH_PASSES must be >= 1, got $nPasses")
-    val warmup = bench.map(n => n -> run(n)) // JIT, codegen cache, file listing
-    val passes = (1 to nPasses).map(_ => bench.map(n => n -> run(n)))
-    // min across timed passes = the reproducible cost of the plan; the
-    // per-pass spread (visible in `passes`) is the environment's noise.
-    val best = bench.map(n => n -> passes.map(_.toMap.apply(n)).min)
+    // the warm-up pass amortizes JIT, codegen cache and file listing
+    val head = time(bench, nPasses)(run)
+    val best = head.best
     val total = best.map(_._2).sum
-    val passesJson = passes.map(jsonMap).mkString("[", ",", "]")
+    val passesJson = head.passes.map(jsonMap).mkString("[", ",", "]")
     // TIER 2: every registered query outside the 3-pass headline set
     // gets one shared warmup pass then TWO timed runs, min reported —
     // round 12's single cold pass produced phantom 2–4x "regressions"
@@ -191,11 +201,10 @@ object Bench {
     val tier2Keys =
       if (tier2on) SparkEntry.queries.keys.toSeq.sorted.filterNot(headline.toSet)
       else Seq.empty
-    val tier2Warmup = tier2Keys.map(n => n -> run(n))
-    val tier2Passes = (1 to 2).map(_ => tier2Keys.map(n => n -> run(n)))
-    val tier2 = tier2Keys.map(n =>
-      n -> tier2Passes.map(_.toMap.apply(n)).min)
+    val t2 = time(tier2Keys, 2)(run)
+    val tier2 = t2.best
     val tier2Total = tier2.map(_._2).sum
+    val failed = failedJson(head.failed ++ t2.failed)
     // PHASE SPLIT for the MLlib-fit operators (round-8 verdict ask #6):
     // their composite timings are ~all constant-size quantizer fitting
     // at toy SF, which hides query-path regressions. Time the bounded
@@ -286,13 +295,13 @@ object Bench {
       if (tier2on)
         s""""tier2_total":${String.format(java.util.Locale.ROOT, "%.3f",
           Double.box(tier2Total))},"tier2":${jsonMap(tier2)},""" +
-          s""""tier2_warmup":${jsonMap(tier2Warmup)},""" +
-          s""""tier2_passes":${tier2Passes.map(jsonMap).mkString("[", ",", "]")},""" +
+          s""""tier2_warmup":${jsonMap(t2.warmup)},""" +
+          s""""tier2_passes":${t2.passes.map(jsonMap).mkString("[", ",", "]")},""" +
           (if (phases.nonEmpty) s""""phases":${jsonMap(phases)},""" else "") +
           (if (jobs.nonEmpty) s""""jobs":${jsonMap(jobs)},""" else "")
       else ""
     val fullLine =
-      s"""{"metric":"total","value":$total,"unit":"sec","sf":"$sfDir","cpus":$cpus,"warmup":${jsonMap(warmup)},"passes":$passesJson,$tier2Json"queries":${jsonMap(best)}}"""
+      s"""{"metric":"total","value":$total,"unit":"sec","sf":"$sfDir","cpus":$cpus,"warmup":${jsonMap(head.warmup)},"passes":$passesJson,$tier2Json$failed"queries":${jsonMap(best)}}"""
     try java.nio.file.Files.write(
       java.nio.file.Paths.get("BENCH_FULL.json"),
       (fullLine + "\n").getBytes("UTF-8"))
@@ -314,7 +323,7 @@ object Bench {
     // check can tell "env var ignored" from "overhead-bound at this
     // sf" straight from the output (round-14 verdict ask #2)
     val line =
-      s"""{"metric":"total","value":$totalStr,"unit":"sec","sf":"$sfDir","cpus":$cpus,${tier2TotalJson}"full":"BENCH_FULL.json","queries":${jsonMap(compact)}}"""
+      s"""{"metric":"total","value":$totalStr,"unit":"sec","sf":"$sfDir","cpus":$cpus,${tier2TotalJson}"full":"BENCH_FULL.json",$failed"queries":${jsonMap(compact)}}"""
     if (line.length > 1900)
       System.err.println(s"[bench] stdout line ${line.length} chars — " +
         "nearing the driver's 2000-char tail; trim the headline set")

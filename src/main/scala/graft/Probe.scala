@@ -18,8 +18,8 @@ import org.apache.spark.scheduler.{SparkListener, SparkListenerStageCompleted}
 object Probe {
   def main(args: Array[String]): Unit = {
     val Array(sfDir, keyCsv) = args
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val spark = GraftSession.build(s"local[$cpus]", cpus.toInt)
+    val cpus = GraftSession.envCpus(32)
+    val spark = GraftSession.build(s"local[$cpus]", cpus)
     val shuffle = new SparkListener {
       @volatile var total = 0L
       @volatile var peakStage = 0L

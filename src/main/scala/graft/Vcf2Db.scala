@@ -4,7 +4,8 @@ import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 
-import graft.functions.GraftFunctions
+import graft.functions.GraftFunctions.{snappyPack, snappyUnpack, zlibPack,
+  zlibPackStr, zlibUnpack, zlibUnpackStr}
 import graft.sinks.DbSink
 import graft.sources.{PedSource, VcfReader}
 
@@ -83,11 +84,12 @@ object Vcf2Db {
     */
   def packGenotypeBlobs(variants: DataFrame, codec: String = "zlib"): DataFrame = {
     require(codec == "zlib" || codec == "snappy", s"unknown blob codec: $codec")
+    val pack: Column => Column = if (codec == "zlib") zlibPack else snappyPack
     intArrayCols
       .filter(variants.columns.contains)
-      .foldLeft(variants)((df, c) => df.withColumn(c, expr(s"${codec}_pack($c)")))
+      .foldLeft(variants)((df, c) => df.withColumn(c, pack(col(c))))
       .transform(df =>
-        if (df.columns.contains("gts")) df.withColumn("gts", expr("zlib_pack_str(gts)"))
+        if (df.columns.contains("gts")) df.withColumn("gts", zlibPackStr(col("gts")))
         else df)
   }
 
@@ -112,7 +114,6 @@ object Vcf2Db {
       sortedOutput: Int = 0, jdbcUrl: Option[String] = None,
       jdbcBatchSize: Int = 10000, passOnly: Boolean = false): Unit = {
     import spark.implicits._
-    GraftFunctions.register(spark)
     // variants arrive with their worst impact already picked (when the
     // header declares an annotation key). The reference's --passonly:
     // a record whose FILTER failed (anything but PASS or missing '.')
@@ -250,15 +251,16 @@ object GraftDb {
     */
   def expandGenotypes(spark: SparkSession, dir: String,
       codec: String = "auto"): DataFrame = {
-    GraftFunctions.register(spark)
     // "auto" (the default everywhere on the read side) resolves from
     // the codec marker the writer recorded in vcf_header
     val resolved = resolveCodec(spark, dir, codec)
+    require(resolved == "zlib" || resolved == "snappy", s"unknown blob codec: $resolved")
+    val unpack: Column => Column = if (resolved == "zlib") zlibUnpack else snappyUnpack
     Vcf2Db.intArrayCols
       .foldLeft(variants(spark, dir))((df, c) =>
-        if (df.columns.contains(c)) df.withColumn(c, expr(s"${resolved}_unpack($c)")) else df)
+        if (df.columns.contains(c)) df.withColumn(c, unpack(col(c))) else df)
       .transform(df =>
-        if (df.columns.contains("gts")) df.withColumn("gts", expr("zlib_unpack_str(gts)"))
+        if (df.columns.contains("gts")) df.withColumn("gts", zlibUnpackStr(col("gts")))
         else df)
   }
   def impacts(spark: SparkSession, dir: String): DataFrame =
@@ -472,7 +474,6 @@ object GraftDb {
   def exportVcf(spark: SparkSession, dir: String, outDir: String,
       shards: Int = 1, codec: String = "auto"): Unit = {
     import spark.implicits._
-    GraftFunctions.register(spark)
     val rawHeader = vcfHeader(spark, dir).orderBy("line_no")
       .select("line").collect().map(_.getString(0)).toVector
       .filterNot(_.startsWith("##graft_blob_codec="))

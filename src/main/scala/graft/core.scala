@@ -25,6 +25,24 @@ object GraftSession {
     spark.sparkContext.setLogLevel("WARN")
     spark
   }
+
+  /** SPARK_GRAFT_CPUS as the core count a tool runs with: a positive
+    * integer, or `*` (as in `local[*]`) for every available processor.
+    * Tools echo it into JSON output as a number and use it for both
+    * `local[n]` and the shuffle partitions, so only a number may get
+    * through.
+    */
+  def cpuCount(raw: String): Int = raw.trim match {
+    case "*" => Runtime.getRuntime.availableProcessors()
+    case n =>
+      val c = n.toInt
+      require(c > 0, s"SPARK_GRAFT_CPUS must be a positive integer or '*', got '$raw'")
+      c
+  }
+
+  /** [[cpuCount]] of SPARK_GRAFT_CPUS in `env`, `default` when unset. */
+  def envCpus(default: Int, env: Map[String, String] = sys.env): Int =
+    env.get("SPARK_GRAFT_CPUS").map(cpuCount).getOrElse(default)
 }
 
 /** Loaders for the driver-generated testdata tables (TESTDATA.md). */
@@ -45,8 +63,4 @@ object Tables {
         org.apache.spark.sql.functions.expr("ts div 1000")))
     else df
   }
-
-  /** Session config required to read the testdata (nanos timestamps). */
-  val readConf: Map[String, String] =
-    Map("spark.sql.legacy.parquet.nanosAsLong" -> "true")
 }

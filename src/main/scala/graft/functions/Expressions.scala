@@ -1,6 +1,5 @@
 package graft.functions
 
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.catalyst.expressions.{Expression, UnaryExpression}
 import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
 import org.apache.spark.sql.catalyst.util.{ArrayData, GenericArrayData}
@@ -394,100 +393,74 @@ object Kernels {
   }
 }
 
-/** `zlib_pack(array<int>) → binary` */
-case class ZlibPack(child: Expression) extends UnaryExpression {
+/** A one-argument kernel: `child` must be of type `input` (array
+  * element nullability aside), and eval and generated code both call
+  * the static `Kernels.<kernel>(child<args>)` — so the expression stays
+  * inside whole-stage codegen without the UDF serialization tax.
+  * Serializable itself, so Java deserialization of a plan never needs a
+  * no-arg constructor for it.
+  */
+abstract class UnaryKernel(input: DataType, output: DataType, kernel: String,
+    args: String = "") extends UnaryExpression with Serializable {
   import org.apache.spark.sql.catalyst.analysis.TypeCheckResult
-  override def checkInputDataTypes(): TypeCheckResult = child.dataType match {
-    case ArrayType(IntegerType, _) => TypeCheckResult.TypeCheckSuccess
-    case t => TypeCheckResult.TypeCheckFailure(s"$prettyName expects array<int>, got $t")
+  private def shape(t: DataType): DataType = t match {
+    case ArrayType(e, _) => ArrayType(e)
+    case o => o
   }
-  override def dataType: DataType = BinaryType
-  override protected def nullSafeEval(input: Any): Any =
-    Kernels.zlibPackInts(input.asInstanceOf[ArrayData])
+  override def dataType: DataType = output
+  override def checkInputDataTypes(): TypeCheckResult =
+    if (shape(child.dataType) == shape(input)) TypeCheckResult.TypeCheckSuccess
+    else TypeCheckResult.TypeCheckFailure(
+      s"$prettyName expects ${input.simpleString}, got ${child.dataType}")
   override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-    defineCodeGen(ctx, ev, c => s"graft.functions.Kernels.zlibPackInts($c)")
-  override protected def withNewChildInternal(newChild: Expression): ZlibPack =
-    copy(child = newChild)
+    defineCodeGen(ctx, ev, c => s"graft.functions.Kernels.$kernel($c$args)")
+}
+
+/** `zlib_pack(array<int>) → binary` */
+case class ZlibPack(child: Expression)
+    extends UnaryKernel(ArrayType(IntegerType), BinaryType, "zlibPackInts") {
+  override protected def nullSafeEval(v: Any): Any = Kernels.zlibPackInts(v.asInstanceOf[ArrayData])
+  override protected def withNewChildInternal(c: Expression): ZlibPack = copy(child = c)
 }
 
 /** `zlib_unpack(binary) → array<int>` */
-case class ZlibUnpack(child: Expression) extends UnaryExpression {
-  import org.apache.spark.sql.catalyst.analysis.TypeCheckResult
-  override def checkInputDataTypes(): TypeCheckResult = child.dataType match {
-    case BinaryType => TypeCheckResult.TypeCheckSuccess
-    case t => TypeCheckResult.TypeCheckFailure(s"$prettyName expects binary, got $t")
-  }
-  override def dataType: DataType = ArrayType(IntegerType)
-  override protected def nullSafeEval(input: Any): Any =
-    Kernels.zlibUnpackInts(input.asInstanceOf[Array[Byte]])
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-    defineCodeGen(ctx, ev, c => s"graft.functions.Kernels.zlibUnpackInts($c)")
-  override protected def withNewChildInternal(newChild: Expression): ZlibUnpack =
-    copy(child = newChild)
+case class ZlibUnpack(child: Expression)
+    extends UnaryKernel(BinaryType, ArrayType(IntegerType), "zlibUnpackInts") {
+  override protected def nullSafeEval(v: Any): Any =
+    Kernels.zlibUnpackInts(v.asInstanceOf[Array[Byte]])
+  override protected def withNewChildInternal(c: Expression): ZlibUnpack = copy(child = c)
 }
 
 /** `zlib_pack_str(array<string>) → binary` */
-case class ZlibPackStr(child: Expression) extends UnaryExpression {
-  import org.apache.spark.sql.catalyst.analysis.TypeCheckResult
-  override def checkInputDataTypes(): TypeCheckResult = child.dataType match {
-    case ArrayType(StringType, _) => TypeCheckResult.TypeCheckSuccess
-    case t => TypeCheckResult.TypeCheckFailure(s"$prettyName expects array<string>, got $t")
-  }
-  override def dataType: DataType = BinaryType
-  override protected def nullSafeEval(input: Any): Any =
-    Kernels.zlibPackStrings(input.asInstanceOf[ArrayData])
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-    defineCodeGen(ctx, ev, c => s"graft.functions.Kernels.zlibPackStrings($c)")
-  override protected def withNewChildInternal(newChild: Expression): ZlibPackStr =
-    copy(child = newChild)
+case class ZlibPackStr(child: Expression)
+    extends UnaryKernel(ArrayType(StringType), BinaryType, "zlibPackStrings") {
+  override protected def nullSafeEval(v: Any): Any =
+    Kernels.zlibPackStrings(v.asInstanceOf[ArrayData])
+  override protected def withNewChildInternal(c: Expression): ZlibPackStr = copy(child = c)
 }
 
 /** `zlib_unpack_str(binary) → array<string>` */
-case class ZlibUnpackStr(child: Expression) extends UnaryExpression {
-  import org.apache.spark.sql.catalyst.analysis.TypeCheckResult
-  override def checkInputDataTypes(): TypeCheckResult = child.dataType match {
-    case BinaryType => TypeCheckResult.TypeCheckSuccess
-    case t => TypeCheckResult.TypeCheckFailure(s"$prettyName expects binary, got $t")
-  }
-  override def dataType: DataType = ArrayType(StringType)
-  override protected def nullSafeEval(input: Any): Any =
-    Kernels.zlibUnpackStrings(input.asInstanceOf[Array[Byte]])
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-    defineCodeGen(ctx, ev, c => s"graft.functions.Kernels.zlibUnpackStrings($c)")
-  override protected def withNewChildInternal(newChild: Expression): ZlibUnpackStr =
-    copy(child = newChild)
+case class ZlibUnpackStr(child: Expression)
+    extends UnaryKernel(BinaryType, ArrayType(StringType), "zlibUnpackStrings") {
+  override protected def nullSafeEval(v: Any): Any =
+    Kernels.zlibUnpackStrings(v.asInstanceOf[Array[Byte]])
+  override protected def withNewChildInternal(c: Expression): ZlibUnpackStr = copy(child = c)
 }
 
 /** `snappy_pack(array<int>) → binary` */
-case class SnappyPack(child: Expression) extends UnaryExpression {
-  import org.apache.spark.sql.catalyst.analysis.TypeCheckResult
-  override def checkInputDataTypes(): TypeCheckResult = child.dataType match {
-    case ArrayType(IntegerType, _) => TypeCheckResult.TypeCheckSuccess
-    case t => TypeCheckResult.TypeCheckFailure(s"$prettyName expects array<int>, got $t")
-  }
-  override def dataType: DataType = BinaryType
-  override protected def nullSafeEval(input: Any): Any =
-    Kernels.snappyPackInts(input.asInstanceOf[ArrayData])
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-    defineCodeGen(ctx, ev, c => s"graft.functions.Kernels.snappyPackInts($c)")
-  override protected def withNewChildInternal(newChild: Expression): SnappyPack =
-    copy(child = newChild)
+case class SnappyPack(child: Expression)
+    extends UnaryKernel(ArrayType(IntegerType), BinaryType, "snappyPackInts") {
+  override protected def nullSafeEval(v: Any): Any =
+    Kernels.snappyPackInts(v.asInstanceOf[ArrayData])
+  override protected def withNewChildInternal(c: Expression): SnappyPack = copy(child = c)
 }
 
 /** `snappy_unpack(binary) → array<int>` */
-case class SnappyUnpack(child: Expression) extends UnaryExpression {
-  import org.apache.spark.sql.catalyst.analysis.TypeCheckResult
-  override def checkInputDataTypes(): TypeCheckResult = child.dataType match {
-    case BinaryType => TypeCheckResult.TypeCheckSuccess
-    case t => TypeCheckResult.TypeCheckFailure(s"$prettyName expects binary, got $t")
-  }
-  override def dataType: DataType = ArrayType(IntegerType)
-  override protected def nullSafeEval(input: Any): Any =
-    Kernels.snappyUnpackInts(input.asInstanceOf[Array[Byte]])
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-    defineCodeGen(ctx, ev, c => s"graft.functions.Kernels.snappyUnpackInts($c)")
-  override protected def withNewChildInternal(newChild: Expression): SnappyUnpack =
-    copy(child = newChild)
+case class SnappyUnpack(child: Expression)
+    extends UnaryKernel(BinaryType, ArrayType(IntegerType), "snappyUnpackInts") {
+  override protected def nullSafeEval(v: Any): Any =
+    Kernels.snappyUnpackInts(v.asInstanceOf[Array[Byte]])
+  override protected def withNewChildInternal(c: Expression): SnappyUnpack = copy(child = c)
 }
 
 /** `vec_dot(array<float|double>, array<float|double>) → double` —
@@ -533,20 +506,11 @@ case class VecDot(left: Expression, right: Expression)
 /** `minhash_sig(array<string>) → array<bigint>` — 64 MinHash lanes
   * (see Kernels.minhashSig).
   */
-case class MinHashSig(child: Expression) extends UnaryExpression {
-  import org.apache.spark.sql.catalyst.analysis.TypeCheckResult
-  override def dataType: DataType = ArrayType(LongType)
-  override def checkInputDataTypes(): TypeCheckResult = child.dataType match {
-    case ArrayType(StringType, _) => TypeCheckResult.TypeCheckSuccess
-    case t => TypeCheckResult.TypeCheckFailure(
-      s"minhash_sig expects array<string>, got $t")
-  }
-  override protected def nullSafeEval(input: Any): Any =
-    Kernels.minhashSig(input.asInstanceOf[ArrayData], 64)
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-    defineCodeGen(ctx, ev, c => s"graft.functions.Kernels.minhashSig($c, 64)")
-  override protected def withNewChildInternal(newChild: Expression): MinHashSig =
-    copy(child = newChild)
+case class MinHashSig(child: Expression)
+    extends UnaryKernel(ArrayType(StringType), ArrayType(LongType), "minhashSig", ", 64") {
+  override protected def nullSafeEval(v: Any): Any =
+    Kernels.minhashSig(v.asInstanceOf[ArrayData], 64)
+  override protected def withNewChildInternal(c: Expression): MinHashSig = copy(child = c)
 }
 
 /** `sig_eq_count(array<bigint>, array<bigint>) → int` — equal-lane
@@ -586,73 +550,39 @@ case class SigEqCount(left: Expression, right: Expression)
 /** `mds_pairs(array<int>) → array<bigint>` — packed co-called sample
   * pairs with squared copy differences (see Kernels.mdsPairs).
   */
-case class MdsPairs(child: Expression) extends UnaryExpression {
-  import org.apache.spark.sql.catalyst.analysis.TypeCheckResult
-  override def dataType: DataType = ArrayType(LongType, containsNull = false)
-  override def checkInputDataTypes(): TypeCheckResult = child.dataType match {
-    case ArrayType(IntegerType, _) => TypeCheckResult.TypeCheckSuccess
-    case t => TypeCheckResult.TypeCheckFailure(
-      s"mds_pairs expects array<int>, got $t")
-  }
-  override protected def nullSafeEval(input: Any): Any =
-    Kernels.mdsPairs(input.asInstanceOf[ArrayData])
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-    defineCodeGen(ctx, ev, c => s"graft.functions.Kernels.mdsPairs($c)")
-  override protected def withNewChildInternal(newChild: Expression): MdsPairs =
-    copy(child = newChild)
+case class MdsPairs(child: Expression) extends UnaryKernel(ArrayType(IntegerType),
+    ArrayType(LongType, containsNull = false), "mdsPairs") {
+  override protected def nullSafeEval(v: Any): Any = Kernels.mdsPairs(v.asInstanceOf[ArrayData])
+  override protected def withNewChildInternal(c: Expression): MdsPairs = copy(child = c)
 }
 
 /** `shingles(array<string>, n) → array<string>` — distinct word
   * n-grams (see Kernels.wordShingles). `n` is a literal.
   */
-case class WordShingles(child: Expression, n: Int) extends UnaryExpression {
+case class WordShingles(child: Expression, n: Int) extends UnaryKernel(ArrayType(StringType),
+    ArrayType(StringType, containsNull = false), "wordShingles", s", $n") {
   import org.apache.spark.sql.catalyst.analysis.TypeCheckResult
-  override def dataType: DataType = ArrayType(StringType, containsNull = false)
-  override def checkInputDataTypes(): TypeCheckResult = child.dataType match {
-    case ArrayType(StringType, _) if n >= 1 => TypeCheckResult.TypeCheckSuccess
-    case ArrayType(StringType, _) => TypeCheckResult.TypeCheckFailure(
-      s"shingles n must be >= 1, got $n")
-    case t => TypeCheckResult.TypeCheckFailure(
-      s"shingles expects array<string>, got $t")
-  }
-  override protected def nullSafeEval(input: Any): Any =
-    Kernels.wordShingles(input.asInstanceOf[ArrayData], n)
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-    defineCodeGen(ctx, ev, c => s"graft.functions.Kernels.wordShingles($c, $n)")
-  override protected def withNewChildInternal(newChild: Expression): WordShingles =
-    copy(child = newChild)
+  override def checkInputDataTypes(): TypeCheckResult =
+    if (n >= 1) super.checkInputDataTypes()
+    else TypeCheckResult.TypeCheckFailure(s"shingles n must be >= 1, got $n")
+  override protected def nullSafeEval(v: Any): Any =
+    Kernels.wordShingles(v.asInstanceOf[ArrayData], n)
+  override protected def withNewChildInternal(c: Expression): WordShingles = copy(child = c)
 }
 
 /** `simhash64(array<string>) → bigint` */
-case class SimHash64(child: Expression) extends UnaryExpression {
-  import org.apache.spark.sql.catalyst.analysis.TypeCheckResult
-  override def checkInputDataTypes(): TypeCheckResult = child.dataType match {
-    case ArrayType(StringType, _) => TypeCheckResult.TypeCheckSuccess
-    case t => TypeCheckResult.TypeCheckFailure(s"$prettyName expects array<string>, got $t")
-  }
-  override def dataType: DataType = LongType
-  override protected def nullSafeEval(input: Any): Any =
-    Kernels.simHash64(input.asInstanceOf[ArrayData])
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-    defineCodeGen(ctx, ev, c => s"graft.functions.Kernels.simHash64($c)")
-  override protected def withNewChildInternal(newChild: Expression): SimHash64 =
-    copy(child = newChild)
+case class SimHash64(child: Expression)
+    extends UnaryKernel(ArrayType(StringType), LongType, "simHash64") {
+  override protected def nullSafeEval(v: Any): Any = Kernels.simHash64(v.asInstanceOf[ArrayData])
+  override protected def withNewChildInternal(c: Expression): SimHash64 = copy(child = c)
 }
 
 /** `rolling_minhash(string) → bigint` (16-char windows) */
-case class RollingMinHash(child: Expression) extends UnaryExpression {
-  import org.apache.spark.sql.catalyst.analysis.TypeCheckResult
-  override def checkInputDataTypes(): TypeCheckResult = child.dataType match {
-    case StringType => TypeCheckResult.TypeCheckSuccess
-    case t => TypeCheckResult.TypeCheckFailure(s"$prettyName expects string, got $t")
-  }
-  override def dataType: DataType = LongType
-  override protected def nullSafeEval(input: Any): Any =
-    Kernels.rollingMinHash(input.asInstanceOf[UTF8String], 16)
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-    defineCodeGen(ctx, ev, c => s"graft.functions.Kernels.rollingMinHash($c, 16)")
-  override protected def withNewChildInternal(newChild: Expression): RollingMinHash =
-    copy(child = newChild)
+case class RollingMinHash(child: Expression)
+    extends UnaryKernel(StringType, LongType, "rollingMinHash", ", 16") {
+  override protected def nullSafeEval(v: Any): Any =
+    Kernels.rollingMinHash(v.asInstanceOf[UTF8String], 16)
+  override protected def withNewChildInternal(c: Expression): RollingMinHash = copy(child = c)
 }
 
 /** Per-thread deserialized-Bloom-filter cache behind
@@ -766,17 +696,27 @@ case class BloomContainsTag(bf: Expression, value: Expression,
     copy(bf = newChildren(0), value = newChildren(1), shard = newChildren(2))
 }
 
-/** Registers the custom expressions as SQL functions so both the
-  * DataFrame API (`expr("simhash64(t)")`) and `spark.sql` can use them —
-  * native Catalyst expressions, codegen-friendly, no UDF boxing.
+/** graft's native kernels as ONE table of (SQL name, expression class,
+  * usage, builder), reached two ways: by SQL name through the
+  * [[GraftExtensions]] session hook (`spark.sql`, `expr`, user code),
+  * and by the typed Column helpers below, which call the same builders
+  * directly — so operators run on any session, with or without the
+  * extension, and a builder's argument checks live in one place.
   */
 object GraftFunctions {
-  /** Shared by register() and GraftExtensions — the literal-n extraction
-    * must stay identical in both registration paths. n must be a
-    * non-null foldable integer; anything else gets a clear resolution
-    * error, not an internal NPE / "Cannot evaluate" stack trace.
+  import org.apache.spark.sql.Column
+  import org.apache.spark.sql.GraftFrames
+  import org.apache.spark.sql.catalyst.expressions.{BloomFilterMightContain, Literal}
+  import org.apache.spark.sql.catalyst.expressions.aggregate.{AggregateFunction,
+    BloomFilterAggregate}
+
+  final case class Kernel(name: String, clazz: Class[_], usage: String,
+      builder: Seq[Expression] => Expression)
+
+  /** `n` must be a non-null foldable integer; anything else gets a clear
+    * resolution error, not an internal NPE / "Cannot evaluate" trace.
     */
-  private[functions] val shinglesBuilder: Seq[Expression] => Expression = { es =>
+  private val shinglesBuilder: Seq[Expression] => Expression = { es =>
     require(es.length == 2, "shingles(array<string>, n) takes exactly 2 arguments")
     val n = es(1) match {
       // integral literals only — Number.intValue would silently
@@ -793,40 +733,11 @@ object GraftFunctions {
       "shingles: n must be a non-null integer literal")))
   }
 
-  def register(spark: SparkSession): Unit = {
-    val reg = spark.sessionState.functionRegistry
-    // Skip names already present: createOrReplaceTempFunction WARNs on
-    // every replacement, and register() is called at the top of every
-    // operator — one bench/driver run otherwise tails ~40 noise lines.
-    // The builders are deterministic, so first registration wins safely.
-    def add(name: String, b: Seq[Expression] => Expression): Unit =
-      if (!reg.functionExists(org.apache.spark.sql.catalyst.FunctionIdentifier(name)))
-        reg.createOrReplaceTempFunction(name, b, "built-in")
-    add("zlib_pack", es => ZlibPack(es.head))
-    add("zlib_unpack", es => ZlibUnpack(es.head))
-    add("zlib_pack_str", es => ZlibPackStr(es.head))
-    add("zlib_unpack_str", es => ZlibUnpackStr(es.head))
-    add("snappy_pack", es => SnappyPack(es.head))
-    add("snappy_unpack", es => SnappyUnpack(es.head))
-    add("vec_dot", es => VecDot(es(0), es(1)))
-    add("minhash_sig", es => MinHashSig(es.head))
-    add("shingles", shinglesBuilder)
-    add("simhash64", es => SimHash64(es.head))
-    add("rolling_minhash", es => RollingMinHash(es.head))
-    add("mds_pairs", es => MdsPairs(es.head))
-    add("sig_eq_count", es => SigEqCount(es(0), es(1)))
-    add("bloom_agg", GraftFunctions.bloomAggBuilder)
-    add("bloom_contains", es =>
-      org.apache.spark.sql.catalyst.expressions.BloomFilterMightContain(es(0), es(1)))
-    add("bloom_contains_tag", bloomContainsTagBuilder)
-    add("bpe_count", es => BpeCount(es(0), es(1)))
-  }
-
-  /** Shared by register() and GraftExtensions: the tag must be a
-    * non-null foldable string (a plan-construction-unique UUID), pulled
-    * out at build time so the cache key needs no per-row evaluation.
+  /** The tag must be a non-null foldable string (a
+    * plan-construction-unique UUID), pulled out at build time so the
+    * cache key needs no per-row evaluation.
     */
-  private[functions] val bloomContainsTagBuilder: Seq[Expression] => Expression = { es =>
+  private val bloomContainsTagBuilder: Seq[Expression] => Expression = { es =>
     require(es.length == 4,
       "bloom_contains_tag(bf, value, shard, tag) takes exactly 4 arguments")
     val tag = es(3) match {
@@ -848,14 +759,105 @@ object GraftFunctions {
     * engine's own filter beats hand-rolling one: same serialized form
     * AQE uses, tested split/merge, no extra dependency.
     */
-  val bloomAggBuilder: Seq[Expression] => Expression = {
-    import org.apache.spark.sql.catalyst.expressions.aggregate.BloomFilterAggregate
-    es => es match {
-      case Seq(c) => new BloomFilterAggregate(c)
-      case Seq(c, n) => new BloomFilterAggregate(c, n)
-      case Seq(c, n, b) => new BloomFilterAggregate(c, n, b)
-      case _ => throw new IllegalArgumentException(
-        "bloom_agg(child[, estimatedItems[, numBits]])")
-    }
+  private val bloomAggBuilder: Seq[Expression] => Expression = {
+    case Seq(c) => new BloomFilterAggregate(c)
+    case Seq(c, n) => new BloomFilterAggregate(c, n)
+    case Seq(c, n, b) => new BloomFilterAggregate(c, n, b)
+    case _ => throw new IllegalArgumentException(
+      "bloom_agg(child[, estimatedItems[, numBits]])")
   }
+
+  val table: Seq[Kernel] = Seq(
+    Kernel("zlib_pack", classOf[ZlibPack],
+      "zlib_pack(array<int>) - zlib-compressed LE int32 bytes",
+      es => ZlibPack(es.head)),
+    Kernel("zlib_unpack", classOf[ZlibUnpack],
+      "zlib_unpack(binary) - inverse of zlib_pack",
+      es => ZlibUnpack(es.head)),
+    Kernel("zlib_pack_str", classOf[ZlibPackStr],
+      "zlib_pack_str(array<string>) - zlib-compressed NUL-terminated strings",
+      es => ZlibPackStr(es.head)),
+    Kernel("zlib_unpack_str", classOf[ZlibUnpackStr],
+      "zlib_unpack_str(binary) - inverse of zlib_pack_str",
+      es => ZlibUnpackStr(es.head)),
+    Kernel("snappy_pack", classOf[SnappyPack],
+      "snappy_pack(array<int>) - snappy-compressed LE int32 bytes",
+      es => SnappyPack(es.head)),
+    Kernel("snappy_unpack", classOf[SnappyUnpack],
+      "snappy_unpack(binary) - inverse of snappy_pack",
+      es => SnappyUnpack(es.head)),
+    Kernel("shingles", classOf[WordShingles],
+      "shingles(array<string>, n) - distinct space-joined word n-grams",
+      shinglesBuilder),
+    Kernel("minhash_sig", classOf[MinHashSig],
+      "minhash_sig(array<string>) - 64-lane MinHash signature (xxhash64 seed 42)",
+      es => MinHashSig(es.head)),
+    Kernel("vec_dot", classOf[VecDot],
+      "vec_dot(array<float|double>, array<float|double>) - sequential-fold dot product",
+      es => VecDot(es(0), es(1))),
+    Kernel("simhash64", classOf[SimHash64],
+      "simhash64(array<string>) - 64-bit SimHash of a token bag",
+      es => SimHash64(es.head)),
+    Kernel("rolling_minhash", classOf[RollingMinHash],
+      "rolling_minhash(string) - winnowing min rolling-window hash",
+      es => RollingMinHash(es.head)),
+    Kernel("mds_pairs", classOf[MdsPairs],
+      "mds_pairs(array<int>) - packed co-called pairs with squared copy diffs",
+      es => MdsPairs(es.head)),
+    Kernel("sig_eq_count", classOf[SigEqCount],
+      "sig_eq_count(array<bigint>, array<bigint>) - equal MinHash lanes",
+      es => SigEqCount(es(0), es(1))),
+    Kernel("bloom_agg", classOf[BloomFilterAggregate],
+      "bloom_agg(xxhash64-long[, items[, bits]]) - Spark bloom filter build",
+      bloomAggBuilder),
+    Kernel("bloom_contains", classOf[BloomFilterMightContain],
+      "bloom_contains(binary, xxhash64-long) - bloom membership probe",
+      es => BloomFilterMightContain(es(0), es(1))),
+    Kernel("bloom_contains_tag", classOf[BloomContainsTag],
+      "bloom_contains_tag(bf-col, xxhash64-long, shard, 'tag') - " +
+        "sharded bloom probe (filter as a column, cached per (tag, shard))",
+      bloomContainsTagBuilder),
+    Kernel("bpe_count", classOf[BpeCount],
+      "bpe_count(string, merges_path) - exact byte-level BPE token count",
+      es => BpeCount(es(0), es(1))))
+
+  private val builders: Map[String, Seq[Expression] => Expression] =
+    table.map(k => k.name -> k.builder).toMap
+
+  /** The kernel `name` over `args`, then an optional trailing literal.
+    * Columns stay unresolved until their Dataset resolves them; the
+    * literal (shingles' n, the bloom tag) goes in as a Catalyst
+    * Literal, because its builder reads it at build time.
+    */
+  private def build(name: String, args: Seq[Column], literal: Option[Any] = None): Expression =
+    builders(name)(args.map(GraftFrames.expression) ++ literal.map(Literal(_)))
+
+  private def call(name: String, args: Column*): Column =
+    GraftFrames.column(build(name, args))
+
+  def zlibPack(ints: Column): Column = call("zlib_pack", ints)
+  def zlibUnpack(blob: Column): Column = call("zlib_unpack", blob)
+  def zlibPackStr(strs: Column): Column = call("zlib_pack_str", strs)
+  def zlibUnpackStr(blob: Column): Column = call("zlib_unpack_str", blob)
+  def snappyPack(ints: Column): Column = call("snappy_pack", ints)
+  def snappyUnpack(blob: Column): Column = call("snappy_unpack", blob)
+  def shingles(toks: Column, n: Int): Column =
+    GraftFrames.column(build("shingles", Seq(toks), Some(n)))
+  def minhashSig(shingles: Column): Column = call("minhash_sig", shingles)
+  def vecDot(a: Column, b: Column): Column = call("vec_dot", a, b)
+  def simhash64(toks: Column): Column = call("simhash64", toks)
+  def rollingMinhash(text: Column): Column = call("rolling_minhash", text)
+  def mdsPairs(gtTypes: Column): Column = call("mds_pairs", gtTypes)
+  def sigEqCount(a: Column, b: Column): Column = call("sig_eq_count", a, b)
+  def bloomContains(bf: Column, value: Column): Column =
+    call("bloom_contains", bf, value)
+  def bloomContainsTag(bf: Column, value: Column, shard: Column, tag: String): Column =
+    GraftFrames.column(build("bloom_contains_tag", Seq(bf, value, shard), Some(tag)))
+
+  /** The aggregate, wrapped as the analyzer wraps a registry-resolved
+    * AggregateFunction (not distinct, no filter).
+    */
+  def bloomAgg(value: Column, items: Column, bits: Column): Column =
+    GraftFrames.column(build("bloom_agg", Seq(value, items, bits))
+      .asInstanceOf[AggregateFunction].toAggregateExpression())
 }

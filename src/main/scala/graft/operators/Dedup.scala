@@ -1,11 +1,12 @@
 package graft.operators
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 
 import graft.Tables
-import graft.functions.GraftFunctions
+import graft.functions.GraftFunctions.{bloomAgg, bloomContains, bloomContainsTag,
+  minhashSig, shingles, sigEqCount, simhash64}
 
 /** Deduplication operators (SURVEY.md §2.3) — the four standard scales:
   * exact (hash group), MinHash+LSH (banded), SimHash (bit-chunk
@@ -52,14 +53,19 @@ object Dedup {
   def minhashSignatures(docs: DataFrame): DataFrame = {
     val s = docs.sparkSession
     import s.implicits._
-    GraftFunctions.register(s)
     docs
       .select($"doc_id", split($"text", " ").as("toks"))
       .filter(size($"toks") >= 3)
-      .withColumn("shingles", expr("shingles(toks, 3)"))
-      .withColumn("sig", expr("minhash_sig(shingles)"))
+      .withColumn("shingles", shingles($"toks", 3))
+      .withColumn("sig", minhashSig($"shingles"))
       .select($"doc_id", $"sig")
   }
+
+  /** Signature-agreement estimate of Jaccard: equal lanes / 64,
+    * rounded to 6 places (the oracle replays' `round(… / 64.0, 6)`).
+    */
+  private def estJaccard(a: String, b: String): Column =
+    round(sigEqCount(col(a), col(b)) / 64.0, 6)
 
   /** MinHash+LSH near-dup pairs over any (doc_id, text) frame — d02's
     * engine generalized (SURVEY §5.4's SCALE path: candidates come
@@ -102,7 +108,7 @@ object Dedup {
       .join(sig.select($"doc_id".as("doc_a"), $"sig".as("sig_a")), "doc_a")
       .join(sig.select($"doc_id".as("doc_b"), $"sig".as("sig_b")), "doc_b")
       .withColumn("est_jaccard",
-        expr("round(sig_eq_count(sig_a, sig_b) / 64.0e0, 6)"))
+        estJaccard("sig_a", "sig_b"))
       .filter($"est_jaccard" >= lit(minJaccard))
       .select($"doc_a", $"doc_b", $"est_jaccard")
   }
@@ -149,7 +155,6 @@ object Dedup {
     * bit-for-bit (see `oracle` below).
     */
   def d03(s: SparkSession, dir: String): DataFrame = {
-    GraftFunctions.register(s)
     import s.implicits._
     d03Pairs(s, T(s, dir, "documents").select($"doc_id", $"text"))
   }
@@ -159,8 +164,7 @@ object Dedup {
     */
   def d03Pairs(s: SparkSession, docs: DataFrame): DataFrame = {
     import s.implicits._
-    GraftFunctions.register(s)
-    val sh = docs.select($"doc_id", expr("simhash64(split(text, ' '))").as("sh"))
+    val sh = docs.select($"doc_id", simhash64(split($"text", " ")).as("sh"))
     val chunks = sh
       .select($"doc_id", $"sh", explode(expr("sequence(0, 3)")).as("c"))
       .withColumn("chunk", expr("(sh >> (c * 16)) & 65535"))
@@ -225,7 +229,6 @@ object Dedup {
   private def gramCandidateJoin(docsIn: DataFrame): DataFrame = {
     val s = docsIn.sparkSession
     import s.implicits._
-    GraftFunctions.register(s)
     // One cut, one spread, one kernel pass (minhashPairs' recipe for
     // the gram stage): `grams` is referenced THREE ways below (the
     // explode feeding the candidate join and both exact-verify sides
@@ -235,7 +238,7 @@ object Dedup {
     // under-split (no-op at scale).
     val grams = Scale.spread(docsIn, $"doc_id")
       .select($"doc_id", split($"text", " ").as("w"))
-      .withColumn("gs", expr("shingles(w, 2)"))
+      .withColumn("gs", shingles($"w", 2))
       .select($"doc_id", $"gs")
       .transform(graft.Lineage.cut)
     val ex = grams.select($"doc_id", explode($"gs").as("g"))
@@ -530,7 +533,6 @@ object Dedup {
     */
   private[graft] def d05At(s: SparkSession, dir: String, np: Int): DataFrame = {
     import s.implicits._
-    GraftFunctions.register(s)
     // squared norm HOISTED to one column per vector: the confirm ran
     // THREE vec_dots per candidate pair, but a·a and b·b are per-vector
     // constants — computing them once per row cuts the pair loop (the
@@ -542,7 +544,7 @@ object Dedup {
     // sides root at the ONE spread exchange, which Spark reuses
     val e = Scale.spread(T(s, dir, "embeddings"), $"vec_id")
       .select($"vec_id", $"embedding",
-        expr("vec_dot(embedding, embedding)").as("n2"),
+        Similarity.sqNorm("embedding").as("n2"),
         Similarity.bucketCol("embedding", np).as("bucket"))
     val probes = 0 +: (0 until np).map(1 << _)
     val probed = e
@@ -550,8 +552,7 @@ object Dedup {
       .select($"vec_id", $"embedding", $"n2", expr("bucket ^ probe").as("jbucket"))
     probed.as("a")
       .join(e.as("b"), $"a.jbucket" === $"b.bucket" && $"a.vec_id" < $"b.vec_id")
-      .withColumn("cos", expr(
-        s"${Similarity.dot("a.embedding", "b.embedding")} / sqrt(a.n2 * b.n2)"))
+      .withColumn("cos", Similarity.cosine("a.embedding", "b.embedding", "a.n2", "b.n2"))
       .filter($"cos" >= 0.45)
       .select($"a.vec_id".as("vec_a"), $"b.vec_id".as("vec_b"),
         expr("round(cos, 6)").as("cos"))
@@ -565,14 +566,12 @@ object Dedup {
     */
   def d05Exact(s: SparkSession, dir: String): DataFrame = {
     import s.implicits._
-    GraftFunctions.register(s)
     val e = Scale.spread(T(s, dir, "embeddings"), $"vec_id")
       .select($"vec_id", $"embedding",
-        expr("vec_dot(embedding, embedding)").as("n2"))
+        Similarity.sqNorm("embedding").as("n2"))
     e.as("a")
       .join(broadcast(e.as("b")), $"a.vec_id" < $"b.vec_id")
-      .withColumn("cos", expr(
-        s"${Similarity.dot("a.embedding", "b.embedding")} / sqrt(a.n2 * b.n2)"))
+      .withColumn("cos", Similarity.cosine("a.embedding", "b.embedding", "a.n2", "b.n2"))
       .filter($"cos" >= 0.45)
       .select($"a.vec_id".as("vec_a"), $"b.vec_id".as("vec_b"),
         expr("round(cos, 6)").as("cos"))
@@ -598,7 +597,6 @@ object Dedup {
     */
   def d08(s: SparkSession, dir: String): DataFrame = {
     import s.implicits._
-    GraftFunctions.register(s)
     val docs = T(s, dir, "documents")
       .select($"doc_id", split($"text", " ").as("toks"))
     decontaminate(
@@ -612,11 +610,10 @@ object Dedup {
     */
   def decontaminate(corpus: DataFrame, benchmark: DataFrame, n: Int): DataFrame = {
     import corpus.sparkSession.implicits._
-    GraftFunctions.register(corpus.sparkSession)
     val bench = benchmark
-      .select(explode(expr(s"shingles(toks, $n)")).as("g")).distinct()
+      .select(explode(shingles($"toks", n)).as("g")).distinct()
     corpus
-      .select($"doc_id", explode(expr(s"shingles(toks, $n)")).as("g"))
+      .select($"doc_id", explode(shingles($"toks", n)).as("g"))
       .join(broadcast(bench), "g")
       .groupBy($"doc_id")
       .agg(count(lit(1)).as("n_benchmark_grams"))
@@ -994,7 +991,6 @@ object Dedup {
   def d11Scan(s: SparkSession, dir: String,
       model: org.apache.spark.ml.clustering.KMeansModel): DataFrame = {
     import s.implicits._
-    GraftFunctions.register(s)
     import org.apache.spark.ml.functions.array_to_vector
     // spread the under-split scan so assignment + the cell self-join's
     // cosine kernel run at cluster parallelism (no-op at scale)
@@ -1003,12 +999,11 @@ object Dedup {
     // squared norm hoisted per vector (d05's fix): one dot per
     // candidate pair instead of three, cosines bit-identical
     val corpus = model.transform(emb).select($"vec_id", $"embedding",
-      expr("vec_dot(embedding, embedding)").as("n2"), $"cell")
+      Similarity.sqNorm("embedding").as("n2"), $"cell")
     val dropped = corpus.as("a")
       .join(corpus.as("b"),
         $"a.cell" === $"b.cell" && $"a.vec_id" < $"b.vec_id")
-      .withColumn("cos", expr(
-        s"${Similarity.dot("a.embedding", "b.embedding")} / sqrt(a.n2 * b.n2)"))
+      .withColumn("cos", Similarity.cosine("a.embedding", "b.embedding", "a.n2", "b.n2"))
       .filter($"cos" >= 0.45)
       .select($"b.vec_id".as("vec_id"),
         lit(null).cast("int").as("cell"), lit(true).as("dropped"))
@@ -1070,14 +1065,13 @@ object Dedup {
     */
   def d13(s: SparkSession, dir: String): DataFrame = {
     import s.implicits._
-    GraftFunctions.register(s)
     // spread the under-split scan before the shingle explode: the
     // (source, gh) partial agg's ENTIRE map side (explode + md5 + 79 MB
     // of shuffle write at the sf1 probe) ran as one task (no-op at
     // scale — see Scale.spread)
     val sg = Scale.spread(T(s, dir, "documents"), $"doc_id")
       .select($"source", split($"text", " ").as("toks"))
-      .select($"source", explode(expr("shingles(toks, 3)")).as("g"))
+      .select($"source", explode(shingles($"toks", 3)).as("g"))
       .groupBy($"source", md5($"g").as("gh")).agg(count(lit(1)).as("_n"))
       .select($"source", $"gh")
     val n = sg.groupBy($"source").agg(count(lit(1)).as("n_grams"))
@@ -1141,7 +1135,7 @@ object Dedup {
       .join(sig.select($"doc_id".as("eval_id"), $"sig".as("sig_e")), "eval_id")
       .join(sig.select($"doc_id", $"sig".as("sig_c")), "doc_id")
       .select($"eval_id", $"doc_id",
-        expr("round(sig_eq_count(sig_e, sig_c) / 64.0e0, 6)")
+        estJaccard("sig_e", "sig_c")
           .as("est_jaccard"))
     val agg = est.groupBy($"eval_id")
       .agg(count(lit(1)).as("n_candidates"),
@@ -1230,11 +1224,10 @@ object Dedup {
     */
   def d16(s: SparkSession, dir: String): DataFrame = {
     import s.implicits._
-    GraftFunctions.register(s)
     val grams = T(s, dir, "documents")
       .select($"doc_id", split($"text", " ").as("w"))
       .filter(size($"w") >= 3)
-      .withColumn("gs", expr("shingles(w, 3)"))
+      .withColumn("gs", shingles($"w", 3))
       .select($"doc_id", $"gs")
     // compose the UNSORTED pair frame: d02's presentation orderBy is a
     // full range-partition exchange + sort that the joins right below
@@ -1625,21 +1618,19 @@ object Dedup {
     */
   def d18(s: SparkSession, dir: String): DataFrame = {
     import s.implicits._
-    GraftFunctions.register(s)
     val docs = T(s, dir, "documents").withColumn("h", md5($"text"))
     val baseKeys = docs.filter($"doc_id" % 2 === 0).select($"h").distinct()
     // One row, one bounded binary. lit() as the probe's DIRECT child
     // (foldable — the expression's documented contract) rather than an
     // aliased column, and the BUILD itself ran distributed.
     val bloomBytes = baseKeys
-      .agg(call_function("bloom_agg", xxhash64($"h"),
-        lit(100000L), lit(800000L)).as("bf"))
+      .agg(bloomAgg(xxhash64($"h"), lit(100000L), lit(800000L)).as("bf"))
       .head().getAs[Array[Byte]]("bf")
     val delta = docs.filter($"doc_id" % 2 === 1).select($"doc_id", $"h")
     val firsts = delta.groupBy($"h").agg(min($"doc_id").as("first_id"))
     val probed = delta.join(firsts, "h")
       .withColumn("maybe_base",
-        call_function("bloom_contains", lit(bloomBytes), xxhash64($"h")))
+        bloomContains(lit(bloomBytes), xxhash64($"h")))
     // Bloom misses: cannot be base_dup; within-delta classes still apply.
     val misses = probed.filter(!$"maybe_base")
       .select($"doc_id", $"h",
@@ -1711,7 +1702,6 @@ object Dedup {
   def d19Screen(s: SparkSession, dir: String, nShards: Long,
       totalItems: Long, totalBits: Long): DataFrame = {
     import s.implicits._
-    GraftFunctions.register(s)
     // plan-construction-unique cache tag: a (tag, shard) cache entry
     // can never outlive its plan's meaning
     val tag = java.util.UUID.randomUUID().toString
@@ -1720,7 +1710,7 @@ object Dedup {
     val blooms = baseKeys
       .withColumn("shard", pmod(xxhash64($"h"), lit(nShards)))
       .groupBy($"shard")
-      .agg(call_function("bloom_agg", xxhash64($"h"),
+      .agg(bloomAgg(xxhash64($"h"),
         lit(totalItems / nShards), lit(totalBits / nShards)).as("bf"))
     // Hint only when the whole filter frame (totalBits/8 payload plus
     // per-row overhead) fits the session's broadcast threshold; above
@@ -1737,7 +1727,7 @@ object Dedup {
       .join(bloomSide, Seq("shard"), "left")
       .withColumn("maybe_base",
         coalesce(
-          expr(s"bloom_contains_tag(bf, xxhash64(h), shard, '$tag')"),
+          bloomContainsTag($"bf", xxhash64($"h"), $"shard", tag),
           lit(false)))
     val misses = probed.filter(!$"maybe_base")
       .select($"doc_id", $"h",
@@ -1937,7 +1927,7 @@ object Dedup {
       .join(allSigs.select($"doc_id".as("oid"), $"sig".as("sig_o"),
         $"is_base"), "oid")
       .select($"did", $"oid", $"is_base",
-        expr("round(sig_eq_count(sig_d, sig_o) / 64.0e0, 6)")
+        estJaccard("sig_d", "sig_o")
           .as("ej"))
       .filter($"ej" >= DeltaNearTau)
     val agg = conf.groupBy($"did")
@@ -2065,10 +2055,9 @@ object Dedup {
   private def gramSets(docs: DataFrame): DataFrame = {
     val s = docs.sparkSession
     import s.implicits._
-    GraftFunctions.register(s)
     docs
       .select($"doc_id", split($"text", " ").as("w"))
-      .withColumn("gs", expr("shingles(w, 2)"))
+      .withColumn("gs", shingles($"w", 2))
       .select($"doc_id", $"gs")
   }
 

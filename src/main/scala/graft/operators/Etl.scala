@@ -6,7 +6,7 @@ import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types.DecimalType
 
 import graft.Tables
-import graft.functions.GraftFunctions
+import graft.functions.GraftFunctions.zlibPack
 import graft.sources.VcfReader
 
 /** The reference's ETL surface (SURVEY.md §2.2), Spark-first.
@@ -330,14 +330,13 @@ object Etl {
     */
   def e08(s: SparkSession, dir: String): DataFrame = {
     import s.implicits._
-    GraftFunctions.register(s)
     T(s, dir, "lineitem")
       .groupBy($"l_orderkey")
       .agg(sort_array(collect_list(struct($"l_linenumber",
         round($"l_quantity" * 100).cast("int").as("q")))).as("items"))
       .select($"l_orderkey",
         size($"items").as("n_items"),
-        expr("zlib_pack(transform(items, x -> x.q))").as("qty_blob"))
+        zlibPack(expr("transform(items, x -> x.q)")).as("qty_blob"))
       .orderBy($"l_orderkey")
   }
 

@@ -5,6 +5,7 @@ import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 
 import graft.Tables
+import graft.functions.GraftFunctions.vecDot
 
 /** Similarity search over the embeddings table (SURVEY.md §2.3).
   *
@@ -48,29 +49,38 @@ object Similarity {
     */
   private final val SqCand = 30
 
-  /** Sequential-fold dot product — same left-to-right double
-    * accumulation DuckDB's list_inner_product does, so cosines are
-    * bit-comparable across engines. `vec_dot` is the native codegen
-    * expression (graft.functions.VecDot); Spark's `aggregate`/`zip_with`
-    * higher-order functions would run INTERPRETED per element in the
-    * hottest loop of the similarity family.
+  /** Cosines over `vecDot`, the sequential-fold dot product — same
+    * left-to-right double accumulation DuckDB's list_inner_product
+    * does, so cosines are bit-comparable across engines. It is the
+    * native codegen expression (graft.functions.VecDot); Spark's
+    * `aggregate`/`zip_with` higher-order functions would run
+    * INTERPRETED per element in the hottest loop of the similarity
+    * family. `a·b / sqrt(an2 · bn2)` keeps the oracle replays'
+    * multiplication order, so every cosine is bit-identical.
     */
-  private[operators] def dot(a: String, b: String): String = s"vec_dot($a, $b)"
+  private[operators] def cosine(a: String, b: String, an2: String, bn2: String): Column =
+    vecDot(col(a), col(b)) / sqrt(col(an2) * col(bn2))
+
+  /** [[cosine]] with both squared norms computed in place. */
+  private[operators] def cosine(a: String, b: String): Column =
+    vecDot(col(a), col(b)) / sqrt(sqNorm(a) * sqNorm(b))
+
+  /** Squared norm of a vector column (hoisted per row by the callers). */
+  private[operators] def sqNorm(v: String): Column = vecDot(col(v), col(v))
 
   /** s01: exact cosine top-k — brute force over a broadcast query set. */
   def s01(s: SparkSession, dir: String): DataFrame = {
     import s.implicits._
-    graft.functions.GraftFunctions.register(s)
     // squared norms hoisted per side: the scan ran three vec_dots per
     // (corpus row × query) — n2/qn2 are per-row constants, so one dot
     // per scored row remains. sqrt(n2 * qn2) keeps the multiplication
     // order, every cosine bit-identical.
     val emb = T(s, dir, "embeddings")
-      .withColumn("n2", expr("vec_dot(embedding, embedding)"))
+      .withColumn("n2", sqNorm("embedding"))
     val queries = emb.filter($"vec_id" < 5)
       .select($"vec_id".as("q_id"), $"embedding".as("q_emb"), $"n2".as("qn2"))
     val scored = emb.crossJoin(broadcast(queries))
-      .withColumn("cos", expr(s"${dot("embedding", "q_emb")} / sqrt(n2 * qn2)"))
+      .withColumn("cos", cosine("embedding", "q_emb", "n2", "qn2"))
     val w = Window.partitionBy($"q_id").orderBy($"cos".desc, $"vec_id".asc)
     scored
       .withColumn("rn", row_number().over(w))
@@ -162,13 +172,11 @@ object Similarity {
     else df.sample(withReplacement = false, budget.toDouble / n, seed)
   }
 
-  /** Random-hyperplane sign bucket of an embedding column (caller must
-    * have GraftFunctions registered — vec_dot resolves by name).
-    */
+  /** Random-hyperplane sign bucket of an embedding column. */
   private[operators] def bucketCol(emb: String, np: Int): Column = {
     val bits = (0 until np).map { j =>
       val p = typedLit(plane(j, Dims))
-      val d = call_function("vec_dot", col(emb), p) // same fold as zip_with/aggregate
+      val d = vecDot(col(emb), p) // same fold as zip_with/aggregate
       when(d > 0.0, lit(1 << j)).otherwise(lit(0))
     }
     bits.reduce(_ + _)
@@ -232,17 +240,16 @@ object Similarity {
     */
   def s12(s: SparkSession, dir: String): DataFrame = {
     import s.implicits._
-    graft.functions.GraftFunctions.register(s)
     // squared norms hoisted per side (s01's fix) — the label-gated scan
     // still scores corpus-scale row counts, cosines bit-identical
     val emb = T(s, dir, "embeddings")
-      .withColumn("n2", expr("vec_dot(embedding, embedding)"))
+      .withColumn("n2", sqNorm("embedding"))
     val queries = emb.filter($"vec_id" < 5)
       .select($"vec_id".as("q_id"), $"embedding".as("q_emb"),
         $"n2".as("qn2"), $"label".as("q_label"))
     val w = Window.partitionBy($"q_id").orderBy($"cos".desc, $"vec_id".asc)
     emb.join(broadcast(queries), $"label" === $"q_label")
-      .withColumn("cos", expr(s"${dot("embedding", "q_emb")} / sqrt(n2 * qn2)"))
+      .withColumn("cos", cosine("embedding", "q_emb", "n2", "qn2"))
       .withColumn("rn", row_number().over(w))
       .filter($"rn" <= K)
       .select($"q_id", $"label", $"vec_id", expr("round(cos, 6)").as("cos"), $"rn")
@@ -272,7 +279,6 @@ object Similarity {
     */
   def s11(s: SparkSession, dir: String): DataFrame = {
     import s.implicits._
-    graft.functions.GraftFunctions.register(s)
     val quant = T(s, dir, "embeddings")
       .withColumn("e", $"embedding".cast("array<double>"))
       .withColumn("scale", expr("array_max(transform(e, x -> abs(x)))"))
@@ -284,12 +290,10 @@ object Similarity {
     val wA = Window.partitionBy($"q_id").orderBy($"qcos".desc, $"vec_id".asc)
     val wE = Window.partitionBy($"q_id").orderBy($"cos".desc, $"vec_id".asc)
     quant.crossJoin(broadcast(queries))
-      .withColumn("qcos", expr(
-        s"${dot("qv", "qqv")} / sqrt(${dot("qv", "qv")} * ${dot("qqv", "qqv")})"))
+      .withColumn("qcos", cosine("qv", "qqv"))
       .withColumn("arn", row_number().over(wA))
       .filter($"arn" <= SqCand)
-      .withColumn("cos", expr(
-        s"${dot("e", "qe")} / sqrt(${dot("e", "e")} * ${dot("qe", "qe")})"))
+      .withColumn("cos", cosine("e", "qe"))
       .withColumn("rn", row_number().over(wE))
       .filter($"rn" <= K)
       .select($"q_id", $"vec_id", expr("round(qcos, 6)").as("qcos"),
@@ -321,7 +325,6 @@ object Similarity {
     */
   def s14(s: SparkSession, dir: String): DataFrame = {
     import s.implicits._
-    graft.functions.GraftFunctions.register(s)
     val np = nPlanesOf(s, dir)
     val quant = T(s, dir, "embeddings")
       .withColumn("e", $"embedding".cast("array<double>"))
@@ -341,12 +344,10 @@ object Similarity {
     val wA = Window.partitionBy($"q_id").orderBy($"qcos".desc, $"vec_id".asc)
     val wE = Window.partitionBy($"q_id").orderBy($"cos".desc, $"vec_id".asc)
     quant.join(broadcast(queries), "bucket")
-      .withColumn("qcos", expr(
-        s"${dot("qv", "qqv")} / sqrt(${dot("qv", "qv")} * ${dot("qqv", "qqv")})"))
+      .withColumn("qcos", cosine("qv", "qqv"))
       .withColumn("arn", row_number().over(wA))
       .filter($"arn" <= SqCand)
-      .withColumn("cos", expr(
-        s"${dot("e", "qe")} / sqrt(${dot("e", "e")} * ${dot("qe", "qe")})"))
+      .withColumn("cos", cosine("e", "qe"))
       .withColumn("rn", row_number().over(wE))
       .filter($"rn" <= K)
       .select($"q_id", $"vec_id", expr("round(qcos, 6)").as("qcos"),
@@ -377,7 +378,6 @@ object Similarity {
   private def lshCand(s: SparkSession, dir: String, maxHamming: Int,
       np: Int): DataFrame = {
     import s.implicits._
-    graft.functions.GraftFunctions.register(s)
     val emb = T(s, dir, "embeddings")
     val corpus = emb.select($"vec_id", $"embedding", bucketCol("embedding", np).as("bucket"))
     val probes = probeMasks(np, maxHamming)
@@ -388,8 +388,7 @@ object Similarity {
       .withColumn("bucket", expr("q_bucket ^ probe"))
       .select($"q_id", $"q_emb", $"bucket")
     corpus.join(broadcast(queries), "bucket")
-      .withColumn("cos", expr(
-        s"${dot("embedding", "q_emb")} / sqrt(${dot("embedding", "embedding")} * ${dot("q_emb", "q_emb")})"))
+      .withColumn("cos", cosine("embedding", "q_emb"))
   }
 
   /** s03 (rows-only): IVF approximate NN — MLlib KMeans (fixed seed,
@@ -425,7 +424,6 @@ object Similarity {
   def s03Scan(s: SparkSession, dir: String,
       model: org.apache.spark.ml.clustering.KMeansModel): DataFrame = {
     import s.implicits._
-    graft.functions.GraftFunctions.register(s)
     import org.apache.spark.ml.functions.array_to_vector
     val nProbe = 2
     val emb = T(s, dir, "embeddings")
@@ -434,7 +432,7 @@ object Similarity {
     // nProbe/k of the corpus — still corpus-scale — so one dot per
     // candidate row instead of three; cosines bit-identical
     val corpus = model.transform(emb).select($"vec_id", $"embedding",
-      expr("vec_dot(embedding, embedding)").as("n2"), $"cell")
+      sqNorm("embedding").as("n2"), $"cell")
     val centers = model.clusterCenters.zipWithIndex.toSeq
       .map { case (c, i) => (i, c.toArray) }
       .toDF("c_cell", "c_vec")
@@ -448,9 +446,9 @@ object Similarity {
         Window.partitionBy($"q_id").orderBy($"dist".asc, $"c_cell".asc)))
       .filter($"cr" <= nProbe)
       .select($"q_id", $"q_emb",
-        expr("vec_dot(q_emb, q_emb)").as("qn2"), $"c_cell".as("cell"))
+        sqNorm("q_emb").as("qn2"), $"c_cell".as("cell"))
     val cand = corpus.join(broadcast(qCells), "cell")
-      .withColumn("cos", expr(s"${dot("embedding", "q_emb")} / sqrt(n2 * qn2)"))
+      .withColumn("cos", cosine("embedding", "q_emb", "n2", "qn2"))
     val w = Window.partitionBy($"q_id").orderBy($"cos".desc, $"vec_id".asc)
     cand
       .withColumn("rn", row_number().over(w))
@@ -566,7 +564,6 @@ object Similarity {
   def s04Scan(s: SparkSession, dir: String,
       models: Seq[org.apache.spark.ml.clustering.KMeansModel]): DataFrame = {
     import s.implicits._
-    graft.functions.GraftFunctions.register(s)
     val nCand = 3 * K              // ADC candidates re-ranked exactly
     val emb = T(s, dir, "embeddings")
     val withSubs = withSubVectors(emb)
@@ -598,8 +595,7 @@ object Similarity {
     adc
       .withColumn("ar", row_number().over(wA))
       .filter($"ar" <= nCand)
-      .withColumn("cos", expr(
-        s"${dot("embedding", "q_emb")} / sqrt(${dot("embedding", "embedding")} * ${dot("q_emb", "q_emb")})"))
+      .withColumn("cos", cosine("embedding", "q_emb"))
       .withColumn("rn", row_number().over(
         Window.partitionBy($"q_id").orderBy($"cos".desc, $"vec_id".asc)))
       .filter($"rn" <= K)
@@ -624,16 +620,15 @@ object Similarity {
     */
   def s05(s: SparkSession, dir: String): DataFrame = {
     import s.implicits._
-    graft.functions.GraftFunctions.register(s)
     // squared norms hoisted per side (s01's fix) — one dot per scored
     // row on the full corpus scan, cosines bit-identical
     val emb = T(s, dir, "embeddings")
-      .withColumn("n2", expr("vec_dot(embedding, embedding)"))
+      .withColumn("n2", sqNorm("embedding"))
     val queries = emb.filter($"vec_id" < 5)
       .select($"vec_id".as("q_id"), $"embedding".as("q_emb"), $"n2".as("qn2"))
     emb.crossJoin(broadcast(queries))
       .filter($"vec_id" =!= $"q_id")
-      .withColumn("cos", expr(s"${dot("embedding", "q_emb")} / sqrt(n2 * qn2)"))
+      .withColumn("cos", cosine("embedding", "q_emb", "n2", "qn2"))
       .filter($"cos" >= RangeTau)
       .select($"q_id", $"vec_id", expr("round(cos, 6)").as("cos"))
       .orderBy($"q_id", $"vec_id")
@@ -770,7 +765,6 @@ object Similarity {
     */
   def s13(s: SparkSession, dir: String): DataFrame = {
     import s.implicits._
-    graft.functions.GraftFunctions.register(s)
     val np = nPlanesOf(s, dir)
     val occ = T(s, dir, "embeddings")
       .select(bucketCol("embedding", np).as("bucket"))
@@ -811,7 +805,6 @@ object Similarity {
     */
   def s15(s: SparkSession, dir: String): DataFrame = {
     import s.implicits._
-    graft.functions.GraftFunctions.register(s)
     val np = nPlanesOf(s, dir)
     val b = T(s, dir, "embeddings")
       .select($"vec_id", bucketCol("embedding", np).as("bucket"))
@@ -894,7 +887,6 @@ object Similarity {
     */
   def s17(s: SparkSession, dir: String): DataFrame = {
     import s.implicits._
-    graft.functions.GraftFunctions.register(s)
     val np = nPlanesOf(s, dir)
     val occ = T(s, dir, "embeddings")
       .select(bucketCol("embedding", np).as("bucket"))
@@ -949,7 +941,6 @@ object Similarity {
       * one key space.
       */
     def merge(delta: DataFrame): VecIndex = {
-      graft.functions.GraftFunctions.register(buckets.sparkSession)
       VecIndex(buckets.unionByName(delta.select(col("vec_id"),
         col("embedding"), bucketCol("embedding", nPlanes).as("bucket"))),
         nPlanes)
@@ -971,7 +962,6 @@ object Similarity {
     def probe(queries: DataFrame, maxHamming: Int = 1, k: Int = K): DataFrame = {
       val s = buckets.sparkSession
       import s.implicits._
-      graft.functions.GraftFunctions.register(s)
       val probes = probeMasks(nPlanes, maxHamming)
       val q = queries
         .select($"vec_id".as("q_id"), $"embedding".as("q_emb"),
@@ -981,8 +971,7 @@ object Similarity {
         .select($"q_id", $"q_emb", $"bucket")
       val w = Window.partitionBy($"q_id").orderBy($"cos".desc, $"vec_id".asc)
       buckets.join(q, "bucket")
-        .withColumn("cos", expr(
-          s"${dot("embedding", "q_emb")} / sqrt(${dot("embedding", "embedding")} * ${dot("q_emb", "q_emb")})"))
+        .withColumn("cos", cosine("embedding", "q_emb"))
         .withColumn("rn", row_number().over(w))
         .filter($"rn" <= k)
         .select($"q_id", $"vec_id", expr("round(cos, 6)").as("cos"), $"rn")
@@ -993,7 +982,6 @@ object Similarity {
   object VecIndex {
     /** Builds at the auto-sized geometry for THIS corpus (one count). */
     def build(emb: DataFrame): VecIndex = {
-      graft.functions.GraftFunctions.register(emb.sparkSession)
       val np = nPlanesFor(emb.count())
       VecIndex(emb.select(col("vec_id"), col("embedding"),
         bucketCol("embedding", np).as("bucket")), np)
@@ -1298,7 +1286,6 @@ object Similarity {
     */
   def s06(s: SparkSession, dir: String): DataFrame = {
     import s.implicits._
-    graft.functions.GraftFunctions.register(s)
     val np = nPlanesOf(s, dir)
     // spread the under-split scan so the bucket/cosine kernels run at
     // cluster parallelism (no-op at scale — see Scale.spread; round-15
@@ -1307,7 +1294,7 @@ object Similarity {
     // squared norm hoisted per vector (s01's fix): one dot per
     // candidate pair in the bucket join instead of three — bit-identical
     val corpus = emb.select($"vec_id", $"embedding",
-      expr("vec_dot(embedding, embedding)").as("n2"),
+      sqNorm("embedding").as("n2"),
       bucketCol("embedding", np).as("bucket"))
     val probes = (0 to np).map(i => if (i == 0) 0 else 1 << (i - 1))
     val sources = corpus
@@ -1318,8 +1305,7 @@ object Similarity {
       .select($"src_id", $"src_emb", $"src_n2", $"bucket")
     val cand = corpus.join(sources, "bucket")
       .filter($"vec_id" =!= $"src_id")
-      .withColumn("cos", expr(
-        s"${dot("embedding", "src_emb")} / sqrt(n2 * src_n2)"))
+      .withColumn("cos", cosine("embedding", "src_emb", "n2", "src_n2"))
     val w = Window.partitionBy($"src_id").orderBy($"cos".desc, $"vec_id".asc)
     cand.withColumn("rn", row_number().over(w))
       .filter($"rn" <= KnnK)
@@ -1354,13 +1340,12 @@ object Similarity {
     */
   def s07(s: SparkSession, dir: String): DataFrame = {
     import s.implicits._
-    graft.functions.GraftFunctions.register(s)
     // squared norms hoisted (s01's fix): the vector's per-row, the
     // cell sum's per-bucket on the broadcast side — one dot per scored
     // row instead of three, centrality bit-identical
     val emb = T(s, dir, "embeddings")
       .select($"vec_id", $"embedding",
-        expr("vec_dot(embedding, embedding)").as("n2"),
+        sqNorm("embedding").as("n2"),
         bucketCol("embedding", nPlanesOf(s, dir)).as("bucket"))
     val sums = emb
       .select($"bucket", posexplode($"embedding".cast("array<double>")))
@@ -1369,11 +1354,10 @@ object Similarity {
       .groupBy($"bucket")
       .agg(transform(array_sort(collect_list(struct($"pos", $"sx"))),
         p => p.getField("sx").cast("double")).as("cell_sum"))
-      .withColumn("cs_n2", expr("vec_dot(cell_sum, cell_sum)"))
+      .withColumn("cs_n2", sqNorm("cell_sum"))
     val w = Window.partitionBy($"bucket").orderBy($"cen".desc, $"vec_id".asc)
     emb.join(broadcast(sums), "bucket")
-      .withColumn("cen", expr(
-        s"round(${dot("embedding", "cell_sum")} / sqrt(n2 * cs_n2), 6)"))
+      .withColumn("cen", round(cosine("embedding", "cell_sum", "n2", "cs_n2"), 6))
       .withColumn("rn", row_number().over(w))
       .filter($"rn" <= DivQuota)
       .select($"bucket", $"vec_id", $"cen", $"rn")
@@ -1404,18 +1388,21 @@ object Similarity {
     */
   def s08(s: SparkSession, dir: String): DataFrame = {
     import s.implicits._
-    graft.functions.GraftFunctions.register(s)
+    // round(10⁶·a·b / sqrt(an2·bn2)) as a long: the scale multiplies the
+    // dot BEFORE the division, as the oracle's CTEs do
+    def micro(a: String, b: String, an2: String, bn2: String): Column =
+      round(lit(1000000) * vecDot(col(a), col(b)) / sqrt(col(an2) * col(bn2)))
+        .cast("bigint")
     // squared norms hoisted per vector (s01's fix): one dot per scored
     // row / candidate pair instead of three — bit-identical micro-cosines
     val emb = T(s, dir, "embeddings")
-      .withColumn("n2", expr("vec_dot(embedding, embedding)"))
+      .withColumn("n2", sqNorm("embedding"))
     val queries = emb.filter($"vec_id" < 3)
       .select($"vec_id".as("q_id"), $"embedding".as("q_emb"), $"n2".as("qn2"))
     val wRel = Window.partitionBy($"q_id").orderBy($"rel6".desc, $"vec_id".asc)
     val cand = emb.crossJoin(broadcast(queries))
       .filter($"vec_id" =!= $"q_id")
-      .withColumn("rel6", expr(s"CAST(round(1000000 * ${dot("embedding", "q_emb")} " +
-        s"/ sqrt(n2 * qn2)) AS BIGINT)"))
+      .withColumn("rel6", micro("embedding", "q_emb", "n2", "qn2"))
       .withColumn("rn", row_number().over(wRel))
       .filter($"rn" <= MmrPoolC)
       .select($"q_id", $"vec_id", $"rel6", $"embedding", $"n2")
@@ -1423,8 +1410,7 @@ object Similarity {
     val pair = cand.select($"q_id", $"vec_id".as("a"), $"embedding".as("ea"), $"n2".as("na2"))
       .join(cand.select($"q_id", $"vec_id".as("b"), $"embedding".as("eb"), $"n2".as("nb2")), Seq("q_id"))
       .filter($"a" =!= $"b")
-      .withColumn("sim6", expr(s"CAST(round(1000000 * ${dot("ea", "eb")} " +
-        s"/ sqrt(na2 * nb2)) AS BIGINT)"))
+      .withColumn("sim6", micro("ea", "eb", "na2", "nb2"))
       .select($"q_id", $"a", $"b", $"sim6")
       .transform(graft.Lineage.cut)
     val first = cand

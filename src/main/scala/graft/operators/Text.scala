@@ -5,7 +5,7 @@ import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 
 import graft.Tables
-import graft.functions.GraftFunctions
+import graft.functions.GraftFunctions.{rollingMinhash, shingles}
 
 /** Text-analysis operators for training-data pipelines (SURVEY.md §2.3):
   * language-ID heuristic, quality scoring, token stats, content
@@ -119,9 +119,8 @@ object Text {
     */
   def t05(s: SparkSession, dir: String): DataFrame = {
     import s.implicits._
-    GraftFunctions.register(s)
     T(s, dir, "documents")
-      .select($"doc_id", expr("rolling_minhash(text)").as("fp"))
+      .select($"doc_id", rollingMinhash($"text").as("fp"))
       .orderBy($"doc_id")
   }
 
@@ -360,11 +359,10 @@ object Text {
     * any (text) frame — the filter signals CurateCorpus cuts on.
     */
   def qualitySignals(df: DataFrame): DataFrame = {
-    GraftFunctions.register(df.sparkSession)
     df.withColumn("q_score", expr(scoreExpr))
-      .withColumn("q_dup3", expr(
-        "1.0e0 - CAST(size(shingles(split(text, ' '), 3)) AS DOUBLE) / " +
-          "nullif(greatest(size(split(text, ' ')) - 2, 0), 0)"))
+      .withColumn("q_dup3", lit(1.0) -
+        size(shingles(split(col("text"), " "), 3)).cast("double") /
+          expr("nullif(greatest(size(split(text, ' ')) - 2, 0), 0)"))
   }
 
   /** t08: PII scrub — count and redact emails / IPv4s before a corpus
@@ -400,14 +398,13 @@ object Text {
     */
   def t09(s: SparkSession, dir: String): DataFrame = {
     import s.implicits._
-    GraftFunctions.register(s)
     T(s, dir, "documents")
       .select($"doc_id", split($"text", " ").as("toks"))
       .select($"doc_id",
         greatest(size($"toks") - 1, lit(0)).as("n_2grams"),
-        expr("size(shingles(toks, 2))").as("n_distinct_2grams"),
+        size(shingles($"toks", 2)).as("n_distinct_2grams"),
         greatest(size($"toks") - 2, lit(0)).as("n_3grams"),
-        expr("size(shingles(toks, 3))").as("n_distinct_3grams"))
+        size(shingles($"toks", 3)).as("n_distinct_3grams"))
       .withColumn("dup_2gram_frac", expr(
         "round(1.0e0 - CAST(n_distinct_2grams AS DOUBLE) / nullif(n_2grams, 0), 6)"))
       .withColumn("dup_3gram_frac", expr(
@@ -1152,9 +1149,8 @@ object Text {
     */
   def t29(s: SparkSession, dir: String): DataFrame = {
     import s.implicits._
-    GraftFunctions.register(s)
     val grams = T(s, dir, "documents")
-      .select($"doc_id", explode(expr("shingles(split(text, ' '), 3)")).as("g"))
+      .select($"doc_id", explode(shingles(split($"text", " "), 3)).as("g"))
     val first = grams.groupBy($"g").agg(min($"doc_id").as("first_doc"))
     grams.join(first, Seq("g"))
       .groupBy($"doc_id")
@@ -1335,9 +1331,8 @@ object Text {
     */
   def t33(s: SparkSession, dir: String): DataFrame = {
     import s.implicits._
-    GraftFunctions.register(s)
     val grams = T(s, dir, "documents")
-      .select($"doc_id", explode(expr("shingles(split(text, ' '), 3)")).as("g"))
+      .select($"doc_id", explode(shingles(split($"text", " "), 3)).as("g"))
     val df = grams.groupBy($"g").agg(count(lit(1)).as("df"))
     grams.join(df, Seq("g"))
       .groupBy($"doc_id")

@@ -2,7 +2,7 @@ package graft
 
 import org.apache.spark.sql.functions._
 
-import graft.functions.GraftFunctions
+import graft.functions.GraftFunctions.{bloomAgg, bloomContains}
 import graft.operators.Dedup
 
 /** Pins d18's bloom screen: the filter must have ZERO false negatives
@@ -23,9 +23,8 @@ class BloomScreenSpec extends SparkSpec {
 
   private def baseBloomBytes: Array[Byte] = {
     import spark.implicits._
-    GraftFunctions.register(spark)
     docsWithHash.filter($"doc_id" % 2 === 0).select($"h").distinct()
-      .agg(call_function("bloom_agg", xxhash64($"h"),
+      .agg(bloomAgg(xxhash64($"h"),
         lit(100000L), lit(800000L)).as("bf"))
       .head().getAs[Array[Byte]]("bf")
   }
@@ -34,7 +33,7 @@ class BloomScreenSpec extends SparkSpec {
     import spark.implicits._
     val bf = baseBloomBytes
     val misses = docsWithHash.filter($"doc_id" % 2 === 0)
-      .filter(!call_function("bloom_contains", lit(bf), xxhash64($"h")))
+      .filter(!bloomContains(lit(bf), xxhash64($"h")))
       .count()
     assert(misses == 0L, s"$misses base keys missed their own filter")
   }
@@ -48,7 +47,7 @@ class BloomScreenSpec extends SparkSpec {
       .select(md5(concat($"text", lit("|graft-fp-probe"))).as("p"))
     val n = probes.count()
     val fp = probes
-      .filter(call_function("bloom_contains", lit(bf), xxhash64($"p")))
+      .filter(bloomContains(lit(bf), xxhash64($"p")))
       .count()
     // 800k bits for <=100k items is ~8 bits/key -> ~2% theoretical FPP
     // (and far lower at sf0.001's actual key count); 5% is a loose roof
@@ -74,12 +73,11 @@ class BloomScreenSpec extends SparkSpec {
 
   test("d19 per-shard filters have zero false negatives over their shard") {
     import spark.implicits._
-    GraftFunctions.register(spark)
     val tag = java.util.UUID.randomUUID().toString
     val base = docsWithHash.filter($"doc_id" % 2 === 0).select($"h").distinct()
       .withColumn("shard", pmod(xxhash64($"h"), lit(Dedup.D19Shards)))
     val blooms = base.groupBy($"shard")
-      .agg(call_function("bloom_agg", xxhash64($"h"),
+      .agg(bloomAgg(xxhash64($"h"),
         lit(100000L / Dedup.D19Shards), lit(800000L / Dedup.D19Shards)).as("bf"))
     // every base key must hit ITS OWN shard's filter
     val misses = base.join(broadcast(blooms), Seq("shard"))

@@ -1,13 +1,69 @@
 package graft
 
-import org.apache.spark.sql.functions._
+import java.nio.file.Files
+
+import org.apache.spark.sql.{DataFrame, Row, SparkSession}
+import org.apache.spark.sql.catalyst.FunctionIdentifier
+import org.apache.spark.sql.catalyst.analysis.FunctionRegistry
 
 import graft.functions.GraftFunctions
+import graft.operators.Dedup
+import graft.operators.Etl.VcfFixture
 
 class ExpressionsSpec extends SparkSpec {
 
+  private val dir = "/root/testdata/sf0.001"
+
+  test("the extension installs exactly the table's names with their usage") {
+    // a fresh session: builtins plus what the extension injected, and
+    // no temp function another suite may have registered
+    val reg = spark.newSession().sessionState.functionRegistry
+    val added = reg.listFunction().map(_.funcName).toSet --
+      FunctionRegistry.builtin.listFunction().map(_.funcName)
+    assert(added == GraftFunctions.table.map(_.name).toSet)
+    assert(GraftFunctions.table.size == 17)
+    GraftFunctions.table.foreach { k =>
+      val info = reg.lookupFunction(FunctionIdentifier(k.name)).get
+      assert(info.getUsage == k.usage, k.name)
+      assert(info.getClassName == k.clazz.getName, k.name)
+    }
+  }
+
+  test("operators run the kernels on a session without their SQL names") {
+    val bare = spark.newSession()
+    val reg = bare.sessionState.functionRegistry
+    GraftFunctions.table.foreach(k => assert(reg.dropFunction(FunctionIdentifier(k.name))))
+    intercept[org.apache.spark.sql.AnalysisException](
+      bare.sql("SELECT vec_dot(array(1.0D), array(1.0D))").collect())
+    def same(what: String)(f: SparkSession => DataFrame): Unit = {
+      val want = f(spark).collect().toSeq
+      assert(want.nonEmpty, s"$what: degenerate fixture")
+      assert(f(bare).collect().toSeq == want, what)
+    }
+    same("minhash signatures") { s =>
+      Dedup.minhashSignatures(Tables(s, dir, "documents")).orderBy("doc_id")
+    }
+    same("minhash pairs") { s =>
+      Dedup.minhashPairs(Tables(s, dir, "documents"), 0.0).orderBy("doc_a", "doc_b")
+    }
+    same("cosine top-k (vec_dot)")(SparkEntry.queries("s01_ann_bruteforce_topk")(_, dir))
+    same("mds_pairs stat")(SparkEntry.queries("e36_mds")(_, dir))
+    same("d18 bloom screen")(SparkEntry.queries("d18_bloom_delta")(_, dir))
+    val tmp = Files.createTempDirectory("graft_bare")
+    val vcf = tmp.resolve("in.vcf")
+    Files.writeString(vcf, VcfFixture.lines.mkString("\n") + "\n")
+    def expanded(s: SparkSession, codec: String): Seq[Row] = {
+      val out = tmp.resolve(s"db_${s.hashCode}_$codec").toString
+      Vcf2Db.run(s, vcf.toString, None, out, blobCodec = codec)
+      GraftDb.expandGenotypes(s, out).orderBy("pos", "alt").collect().toSeq
+    }
+    val want = expanded(spark, "zlib")
+    assert(want.nonEmpty)
+    assert(expanded(bare, "zlib") == want, "zlib packGenotypeBlobs -> expandGenotypes")
+    assert(expanded(bare, "snappy") == want, "snappy packGenotypeBlobs -> expandGenotypes")
+  }
+
   test("registered functions run inside SQL and round-trip") {
-    GraftFunctions.register(spark)
     val row = spark.sql(
       """SELECT zlib_unpack(zlib_pack(array(1, 2, 3, -4))) AS rt,
         |       simhash64(array('a', 'b')) AS sh,
@@ -19,7 +75,6 @@ class ExpressionsSpec extends SparkSpec {
   }
 
   test("expressions survive codegen over a real column") {
-    GraftFunctions.register(spark)
     import spark.implicits._
     val df = (1 to 100).map(i => (i.toLong, s"document number $i with some shared text"))
       .toDF("id", "text")
@@ -32,7 +87,6 @@ class ExpressionsSpec extends SparkSpec {
   }
 
   test("minhash_sig is bit-identical to the interpreted HOF formulation") {
-    GraftFunctions.register(spark)
     import spark.implicits._
     // the second half forces EVERY 3-gram shingle into 32..63 bytes —
     // XXH64's one-stripe path, exactly the slice the DuckDB oracle
@@ -56,7 +110,6 @@ class ExpressionsSpec extends SparkSpec {
   }
 
   test("sig_eq_count is bit-identical to the zip_with/filter/size chain") {
-    GraftFunctions.register(spark)
     import spark.implicits._
     // real signatures over a corpus with genuine near-dups, so the
     // equal-lane counts span the whole 0..64 range
@@ -85,7 +138,6 @@ class ExpressionsSpec extends SparkSpec {
   }
 
   test("shingles(toks, n) matches the HOF formulation for size >= n") {
-    GraftFunctions.register(spark)
     import spark.implicits._
     val df = (1 to 200).map(i =>
       (i.toLong, s"shingle test doc $i repeated shingle test doc ${i / 2} tail"))
@@ -102,7 +154,6 @@ class ExpressionsSpec extends SparkSpec {
   }
 
   test("vec_dot is bit-identical to the aggregate/zip_with fold") {
-    GraftFunctions.register(spark)
     import spark.implicits._
     val df = (1 to 100).map { i =>
       (i.toLong, Array.tabulate(64)(d => (math.sin(i * 64 + d) * 10).toFloat))
@@ -114,7 +165,6 @@ class ExpressionsSpec extends SparkSpec {
   }
 
   test("mistyped arguments fail analysis, not at runtime") {
-    graft.functions.GraftFunctions.register(spark)
     def fails(sql: String): Unit = {
       val e = intercept[Exception](spark.sql(sql).collect())
       assert(e.isInstanceOf[org.apache.spark.sql.AnalysisException] ||
@@ -129,7 +179,6 @@ class ExpressionsSpec extends SparkSpec {
   }
 
   test("null array elements are rejected by pack, tolerated by simhash") {
-    graft.functions.GraftFunctions.register(spark)
     val e = intercept[Exception](
       spark.sql("SELECT zlib_pack(array(1, CAST(NULL AS INT)))").collect())
     assert(e.getMessage.contains("null array element"))
@@ -141,7 +190,6 @@ class ExpressionsSpec extends SparkSpec {
   }
 
   test("mds_pairs packs co-called pairs, skips unknowns and nulls") {
-    graft.functions.GraftFunctions.register(spark)
     def unpack(v: Long) = ((v >> 40).toInt, ((v >> 16) & 0xffffff).toInt,
       (v & 0xffff).toInt)
     // gt_types: s0=hom_ref(0), s1=het(1), s2=unknown(2), s3=hom_alt(3),
@@ -161,7 +209,6 @@ class ExpressionsSpec extends SparkSpec {
   }
 
   test("a non-integral shingles n is rejected, not truncated") {
-    graft.functions.GraftFunctions.register(spark)
     val e = intercept[Exception](
       spark.sql("SELECT shingles(array('a','b','c'), 2.9)").collect())
     assert(e.getMessage.contains("integer literal"))

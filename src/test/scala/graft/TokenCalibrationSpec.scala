@@ -106,7 +106,6 @@ class TokenCalibrationSpec extends SparkSpec {
 
   test("bpe_count follows byte-level BPE exactly on hand-checked cases") {
     import spark.implicits._
-    graft.functions.GraftFunctions.register(spark)
     val path = mergesFixture
     val cases = Seq(
       // full merge chain: h e -> he, l l -> ll, he ll -> hell, hell o
@@ -129,7 +128,6 @@ class TokenCalibrationSpec extends SparkSpec {
 
   test("bpe_count honors merge lines whose symbols are '#'") {
     import spark.implicits._
-    graft.functions.GraftFunctions.register(spark)
     // byte 0x23 maps to itself in bytes-to-unicode, so "# #" and
     // "## #" are REAL merges in GPT-2-format files; only the
     // `#version` header line is a comment. A loader that drops every
@@ -145,7 +143,6 @@ class TokenCalibrationSpec extends SparkSpec {
 
   test("m11 exact mode: packed totals equal the tokenizer's own counts") {
     import spark.implicits._
-    graft.functions.GraftFunctions.register(spark)
     val path = mergesFixture
     val costSql = s"bpe_count(text, '$path')"
     val packed = Multimodal.m11With(spark, dir, costSql)

@@ -617,7 +617,6 @@ class Vcf2DbSpec extends SparkSpec {
     // genotype blobs land as real BLOBs and unpack back to the arrays
     import org.apache.spark.sql.types.BinaryType
     assert(variants.schema("gt_types").dataType == BinaryType)
-    graft.functions.GraftFunctions.register(spark)
     val e100 = variants.filter("pos = 100")
       .selectExpr("zlib_unpack(gt_types) AS t", "zlib_unpack_str(gts) AS g")
       .head()
