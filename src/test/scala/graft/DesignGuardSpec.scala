@@ -8,10 +8,11 @@ import org.scalatest.funsuite.AnyFunSuite
 
 import graft.functions.GraftFunctions
 
-/** Keeps one session factory and one kernel table: fails when main code
-  * builds a session outside GraftSession, brings back a hand-kept
-  * registration call, or names a graft kernel inside a SQL string
-  * (operators use the typed helpers, which need no registry).
+/** Keeps one session factory, one kernel table and one zlib encoder:
+  * fails when main code builds a session outside GraftSession, brings
+  * back a hand-kept registration call, names a graft kernel inside a
+  * SQL string (operators use the typed helpers, which need no registry),
+  * or deflates natively outside `Deflate`'s one large-payload fallback.
   */
 class DesignGuardSpec extends AnyFunSuite {
 
@@ -81,6 +82,15 @@ class DesignGuardSpec extends AnyFunSuite {
       k <- kernel.findFirstIn(lit)
     } yield s"$f: $k in \"$lit\""
     assert(offenders.isEmpty, s"use the typed helpers instead: ${offenders.mkString("; ")}")
+  }
+
+  test("java.util.zip.Deflater is built once, in Deflate") {
+    val users = sources.collect {
+      case (f, code) if "\\bDeflater|GZIPOutputStream".r.findFirstIn(code).isDefined => f.getFileName.toString
+    }
+    assert(users == Seq("Deflate.scala"), s"a second deflate path: $users")
+    val sites = sources.map { case (_, code) => "new\\s+(java\\.util\\.zip\\.)?Deflater\\b".r.findAllIn(code).size }.sum
+    assert(sites == 1, s"$sites Deflater constructions")
   }
 
   test("the guard sees a kernel name in a SQL string") {
