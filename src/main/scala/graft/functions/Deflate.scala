@@ -19,9 +19,7 @@ package graft.functions
   * The output is any inflater's input (GEMINI's `zlib.decompress`,
   * `java.util.zip.Inflater`), and its size tracks `Deflater(BEST_SPEED)`:
   * it picks zlib's matches, and only ties between equally frequent
-  * symbols may get their Huffman code lengths the other way round. Payloads of a few KiB and up, where
-  * set-up no longer dominates, go to the native deflater instead
-  * (`Deflate.zlib`).
+  * symbols may get their Huffman code lengths the other way round.
   */
 final class Deflate private {
   import Deflate._
@@ -586,37 +584,8 @@ object Deflate {
   /** This thread's encoder. */
   private[graft] def get(): Deflate = local.get()
 
-  /** `src(0 until len)` as a zlib stream: this thread's encoder, or a
-    * native `Deflater(BEST_SPEED)` above NativeAbove bytes.
-    */
-  def zlib(src: Array[Byte], len: Int): Array[Byte] =
-    if (len > NativeAbove) nativeZlib(src, len) else local.get().zlib(src, len)
-
-  // Above this payload size zlib's own level 1 is the faster of the two.
-  // Per cohort-shaped genotype row (nine int columns + gts; JDK 17,
-  // zlib 1.2.13, 4-vCPU Xeon; best of 7 alternating rounds), this
-  // encoder against native: 0.80 vs 0.97 ms at 1,250 samples, 0.79-0.89
-  // vs 0.92-0.94 ms at 1,500, 0.89 vs 0.96 ms at 1,750 (7,000-byte int
-  // payloads); at 2,000 samples (8,000 bytes) it read 0.95-1.15x native
-  // over ten runs, median 1.05x. At 20 samples it is 2.7x faster.
-  private final val NativeAbove = 7000
-
-  private val natives = ThreadLocal.withInitial[java.util.zip.Deflater](
-    () => new java.util.zip.Deflater(java.util.zip.Deflater.BEST_SPEED))
-
-  private def nativeZlib(src: Array[Byte], len: Int): Array[Byte] = {
-    val d = natives.get()
-    d.reset()
-    d.setInput(src, 0, len)
-    d.finish()
-    var out = new Array[Byte](len + (len >>> 8) + 64)
-    var n = 0
-    while (!d.finished()) {
-      if (n == out.length) out = java.util.Arrays.copyOf(out, 2 * out.length)
-      n += d.deflate(out, n, out.length - n)
-    }
-    java.util.Arrays.copyOf(out, n)
-  }
+  /** `src(0 until len)` as a zlib stream, by this thread's encoder. */
+  def zlib(src: Array[Byte], len: Int): Array[Byte] = local.get().zlib(src, len)
 
   /** One Huffman tree's arrays; `code` holds length << 16 | code.
     * `used` marks the symbols counted in the open block (and the two

@@ -19,12 +19,7 @@ object Kernels {
     * column per array, on `variants`.
     */
   // The blob contract is "any valid zlib stream" (inflate is
-  // level-agnostic). Deflate writes zlib's level-1 stream from
-  // per-thread state it never clears; a native Deflater spends most of
-  // a cohort-sized blob on per-stream set-up. Per cohort-shaped row of
-  // ten blobs at 20 samples (JDK 17, zlib 1.2.13, 4-vCPU Xeon) a reset
-  // native Deflater took 62-76 µs and Deflate 22-30 µs, for the same
-  // bytes (406 per row).
+  // level-agnostic); the stream is written by `Deflate`.
   def zlibPackInts(arr: ArrayData): Array[Byte] = {
     val raw = staging(4 * arr.numElements())
     Deflate.zlib(raw, putInts(arr, raw))

@@ -14,22 +14,7 @@ import graft.functions.Deflate
   * within 2 % of zlib's own level 1 on genotype-shaped arrays.
   */
 class DeflateSpec extends AnyFunSuite {
-
-  private def inflate(z: Array[Byte], expect: Int): Array[Byte] = {
-    val inf = new Inflater()
-    try {
-      inf.setInput(z)
-      val out = new Array[Byte](expect + 16)
-      var n = 0
-      while (!inf.finished()) {
-        val k = inf.inflate(out, n, out.length - n) // throws on a bad Adler-32
-        assert(k > 0 || inf.finished(), "stream ends early")
-        n += k
-      }
-      assert(inf.getRemaining == 0, "bytes after the Adler-32")
-      java.util.Arrays.copyOf(out, n)
-    } finally inf.end()
-  }
+  import DeflateSpec.inflate
 
   private def nativeLevel1(b: Array[Byte]): Array[Byte] = {
     val d = new Deflater(Deflater.BEST_SPEED)
@@ -48,7 +33,7 @@ class DeflateSpec extends AnyFunSuite {
     bb.array()
   }
 
-  private def pack(b: Array[Byte]): Array[Byte] = Deflate.get().zlib(b, b.length)
+  private def pack(b: Array[Byte]): Array[Byte] = Deflate.zlib(b, b.length)
 
   /** Round trip through Inflater and through Structure; returns the
     * structure.
@@ -56,7 +41,7 @@ class DeflateSpec extends AnyFunSuite {
   private def roundTrip(b: Array[Byte]): Structure = {
     val z = pack(b)
     assert(z(0) == 0x78.toByte && z(1) == 0x01.toByte, "zlib header 78 01")
-    assert(inflate(z, b.length).sameElements(b), s"Inflater round trip, ${b.length} bytes")
+    assert(inflate(z).sameElements(b), s"Inflater round trip, ${b.length} bytes")
     val s = Structure.read(z)
     assert(s.out.sameElements(b), s"block decoder round trip, ${b.length} bytes")
     s
@@ -130,6 +115,29 @@ class DeflateSpec extends AnyFunSuite {
       }
       assert(math.abs(ours - zlib) <= 0.02 * zlib, s"$name at $samples samples: $ours vs $zlib bytes")
     }
+  }
+}
+
+object DeflateSpec {
+  import org.scalatest.Assertions._
+
+  /** `z` inflated by java.util.zip.Inflater, which must find a finished
+    * stream with a valid Adler-32 and nothing after it.
+    */
+  def inflate(z: Array[Byte]): Array[Byte] = {
+    val inf = new Inflater()
+    try {
+      inf.setInput(z)
+      val out = new java.io.ByteArrayOutputStream()
+      val buf = new Array[Byte](4096)
+      while (!inf.finished()) {
+        val k = inf.inflate(buf) // throws on a bad Adler-32
+        assert(k > 0 || inf.finished(), "stream ends early")
+        out.write(buf, 0, k)
+      }
+      assert(inf.getRemaining == 0, "bytes after the Adler-32")
+      out.toByteArray
+    } finally inf.end()
   }
 }
 

@@ -28,6 +28,8 @@ class KernelsSpec extends AnyFunSuite {
     val packed = Kernels.zlibPackStrings(toks(gts: _*))
     val out = Kernels.zlibUnpackStrings(packed)
     assert((0 until out.numElements()).map(i => out.getUTF8String(i).toString) == gts)
+    // the blob is a plain zlib stream of NUL-terminated UTF-8
+    assert(DeflateSpec.inflate(packed).sameElements(gts.flatMap(_.getBytes("UTF-8") :+ 0.toByte)))
     // empty array round-trips to empty
     assert(Kernels.zlibUnpackStrings(Kernels.zlibPackStrings(toks())).numElements() == 0)
     // a LONE empty string keeps its element count (terminator encoding —
