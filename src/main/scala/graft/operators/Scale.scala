@@ -3,6 +3,8 @@ package graft.operators
 import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.functions._
 
+import graft.sinks.DbSink
+
 /** Scale utilities backing SURVEY.md §5: bucketed co-located joins and
   * salted (two-phase) aggregation for skewed keys. These are the knobs
   * a 100 TB deployment turns that the sf0.1 bench can't show — each is
@@ -53,13 +55,15 @@ object Scale {
     * prune whole files via parquet row-group min/max (and the vcf
     * source's `sorted` split pruning), and downstream merge-style scans
     * read in key order without a sort. Buy once at ingest; every
-    * region query after that touches only its slab.
+    * region query after that touches only its slab. Blob columns are
+    * written plain, like every DbSink parquet write
+    * (`DbSink.parquetOptions`).
     */
   def writeRangeSorted(df: DataFrame, path: String, partitions: Int,
       cols: Column*): Unit =
     df.repartitionByRange(partitions, cols: _*)
       .sortWithinPartitions(cols: _*)
-      .write.mode("overwrite").parquet(path)
+      .write.mode("overwrite").options(DbSink.parquetOptions(df.schema)).parquet(path)
 
   /** Distinct-count with the distinct phase spread over `salts`
     * sub-keys: values hash-partition into salt buckets, each bucket

@@ -2,7 +2,7 @@ package graft.sinks
 
 import org.apache.spark.sql.{Column, DataFrame, SaveMode}
 import org.apache.spark.sql.functions.{col, concat_ws}
-import org.apache.spark.sql.types.{ArrayType, StringType}
+import org.apache.spark.sql.types.{ArrayType, BinaryType, StringType, StructType}
 
 /** Relational-database sink — the reference's buffered `insert_many`
   * bulk loading, re-expressed as Spark's parallel JDBC writer.
@@ -60,8 +60,24 @@ object DbSink {
   }
 
   /** Container-friendly fallback: same "bounded writer parallelism"
-    * contract, parquet target.
+    * contract, parquet target, written with [[parquetOptions]].
     */
   def writeParquet(df: DataFrame, path: String, numPartitions: Int = 8): Unit =
-    df.coalesce(numPartitions).write.mode(SaveMode.Overwrite).parquet(path)
+    df.coalesce(numPartitions).write.mode(SaveMode.Overwrite)
+      .options(parquetOptions(df.schema)).parquet(path)
+
+  /** Parquet writer options for a table of `schema`: every `BinaryType`
+    * column — the packed genotype blobs — is written plain, with
+    * dictionary encoding off (parquet's per-column
+    * `parquet.enable.dictionary#<column>`). Nearly every blob is
+    * distinct, so a dictionary never pays: parquet builds one per
+    * column chunk, finds it too large and falls back to plain, after
+    * hashing and comparing every blob on the way. String columns
+    * (chrom, ref, alt, gene, …) keep their dictionaries. Every parquet
+    * write of a blob table takes its options from here.
+    */
+  def parquetOptions(schema: StructType): Map[String, String] =
+    schema.fields.collect {
+      case f if f.dataType == BinaryType => s"parquet.enable.dictionary#${f.name}" -> "false"
+    }.toMap
 }

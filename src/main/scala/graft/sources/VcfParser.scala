@@ -63,7 +63,10 @@ object VcfParser {
     }
   }
 
-  /** One parsed body line, still multi-allelic. */
+  /** The fixed columns (1–9) of one body line, still multi-allelic. The
+    * sample columns are not part of it: [[SampleFields]] reads them in
+    * place from the line.
+    */
   final case class Record(
       chrom: String,
       pos: Long,
@@ -73,8 +76,7 @@ object VcfParser {
       qual: Option[Double],
       filter: Option[String],
       info: ListMap[String, String], // raw values; Flag → ""
-      formatKeys: Vector[String],
-      genotypes: Vector[Vector[String]]) // per sample, aligned to formatKeys
+      formatKeys: Vector[String])
 
   /** GEMINI genotype classes (gt_types encoding). */
   val HomRef = 0; val Het = 1; val Unknown = 2; val HomAlt = 3
@@ -141,28 +143,40 @@ object VcfParser {
 
   private def opt(s: String): Option[String] = if (s == "." || s.isEmpty) None else Some(s)
 
-  // limit -1: a trailing EMPTY sample column must survive the split,
-  // or the genotype vector silently shrinks below the cohort width
-  // and every per-sample index join downstream mis-attributes
-  def parseRecord(line: String): Record = recordOf(line.split("\t", -1))
-
-  /** The site part of a body line (columns 1–8: no FORMAT, no samples)
-    * — what an annotation-only read needs. Genotypes stay empty; the
-    * sample columns are never split.
+  /** The first `n` tab-separated columns of a line (fewer when the line
+    * has fewer), and the offset just past them: where column `n + 1`
+    * starts, or `line.length + 1` when there is no such column.
     */
-  def parseSite(line: String): Record = {
-    val f = new Array[String](8)
-    var n = 0
+  private def leadingColumns(line: String, n: Int): (Array[String], Int) = {
+    val f = new Array[String](n)
+    var k = 0
     var start = 0
-    while (n < 8 && start <= line.length) {
+    while (k < n && start <= line.length) {
       val tab = line.indexOf('\t', start)
       val end = if (tab < 0) line.length else tab
-      f(n) = line.substring(start, end)
-      n += 1
-      start = if (tab < 0) line.length + 1 else tab + 1
+      f(k) = line.substring(start, end)
+      k += 1
+      start = end + 1
     }
-    recordOf(if (n == 8) f else f.take(n))
+    (if (k == n) f else f.take(k), start)
   }
+
+  /** Columns 1–9 of a body line: the site and its FORMAT keys. */
+  def parseRecord(line: String): Record = parseRecordAt(line)._1
+
+  /** `parseRecord`, and the offset in the line where its sample columns
+    * start (past the line's end when it has none) — what
+    * [[SampleFields.read]] takes.
+    */
+  def parseRecordAt(line: String): (Record, Int) = {
+    val (f, samplesFrom) = leadingColumns(line, 9)
+    (recordOf(f), samplesFrom)
+  }
+
+  /** The site part of a body line (columns 1–8: no FORMAT, no samples)
+    * — what an annotation-only read needs.
+    */
+  def parseSite(line: String): Record = recordOf(leadingColumns(line, 8)._1)
 
   private def recordOf(f: Array[String]): Record = {
     val info: ListMap[String, String] =
@@ -173,29 +187,137 @@ object VcfParser {
       })
     val formatKeys =
       if (f.length > 8) f(8).split(':').toVector else Vector.empty
-    val gts =
-      if (f.length > 9) f.drop(9).toVector.map(_.split(':').toVector)
-      else Vector.empty
     Record(
       chrom = f(0), pos = f(1).toLong, id = opt(f(2)), ref = f(3),
       alts = f(4).split(',').toVector.filter(_ != "."),
       qual = opt(f(5)).map(_.toDouble), filter = opt(f(6)),
-      info = info, formatKeys = formatKeys, genotypes = gts)
+      info = info, formatKeys = formatKeys)
   }
 
   def isBodyLine(line: String): Boolean =
     line.nonEmpty && !line.startsWith("#")
 
-  /** Permissive-mode parse: None for malformed lines (truncated columns,
-    * non-numeric POS/QUAL, bad genotype tokens) instead of failing the
-    * task — at cohort scale a handful of corrupt rows must not kill a
-    * multi-hour job; callers count the Nones.
+  // --------------------------------------------------------------- samples
+
+  /** Missing-value sentinel for numeric FORMAT sub-fields (the
+    * reference's unknown-depth/qual encoding).
     */
-  def tryParseRecord(line: String): Option[Record] =
-    try {
-      val r = parseRecord(line)
-      if (r.alts.isEmpty) None else Some(r)
-    } catch { case scala.util.control.NonFatal(_) => None }
+  val Missing = -1
+
+  /** The FORMAT sub-fields a variants row is built from — GT, DP, GQ, AD
+    * and PL — for every sample column of one record, read by field index
+    * straight from the line: no per-sample split and no per-sample
+    * field arrays. AD and PL are parsed to ints once per record, into
+    * flat rows of `alleles` = alts + 1 values per sample (AD) and of
+    * `genotypes` = alleles(alleles + 1)/2 values (PL, diploid order);
+    * components past those are never read.
+    *
+    * The values are those of splitting the sample on ':' and the list on
+    * ',' and parsing each piece with `toInt`: a field or component the
+    * sample does not reach, `.`, empty or not an int (overflow, stray
+    * characters) is [[Missing]], and a missing GT is "". A key that is
+    * not read leaves its array at those defaults.
+    *
+    * Scale note: one tab scan counts the samples, then one pass over
+    * each sample's chars up to the last field read; the only
+    * allocations are the arrays here and one GT string per sample.
+    */
+  final class SampleFields private (val count: Int, val alleles: Int) {
+    val genotypes: Int = alleles * (alleles + 1) / 2
+    val gt: Array[String] = Array.fill(count)("")
+    val dp: Array[Int] = Array.fill(count)(Missing)
+    val gq: Array[Int] = Array.fill(count)(Missing)
+    val ad: Array[Int] = Array.fill(count * alleles)(Missing)
+    val pl: Array[Int] = Array.fill(count * genotypes)(Missing)
+
+    /** Sample `s`'s AD component at allele index `allele` (0 = ref). */
+    def adAt(s: Int, allele: Int): Int = ad(s * alleles + allele)
+
+    /** Sample `s`'s PL at flat diploid genotype index `g` — (j, k) at
+      * k(k+1)/2 + j, the same indexing as Number=G INFO fields.
+      */
+    def plAt(s: Int, g: Int): Int = pl(s * genotypes + g)
+  }
+
+  object SampleFields {
+    /** FORMAT keys [[read]] can take. */
+    val Keys: Set[String] = Set("GT", "DP", "GQ", "AD", "PL")
+
+    /** Reads the sample columns of `line` from offset `from` (what
+      * `parseRecordAt` returns; no samples when it is past the line's
+      * end) for a record of `alts` alts whose FORMAT is `formatKeys`.
+      * Only the keys in `keys` are read.
+      */
+    def read(line: String, from: Int, formatKeys: Vector[String], alts: Int,
+        keys: Set[String] = Keys): SampleFields = {
+      def ix(k: String) = if (keys(k)) formatKeys.indexOf(k) else -1
+      val gtIx = ix("GT"); val dpIx = ix("DP"); val gqIx = ix("GQ")
+      val adIx = ix("AD"); val plIx = ix("PL")
+      val last = gtIx max dpIx max gqIx max adIx max plIx
+      var count = 0
+      if (from <= line.length) {
+        count = 1
+        var t = line.indexOf('\t', from)
+        while (t >= 0) { count += 1; t = line.indexOf('\t', t + 1) }
+      }
+      val out = new SampleFields(count, alts + 1)
+      var p = from
+      var s = 0
+      while (s < count) {
+        // fields [b, i) of sample s, up to the last one read
+        var k = 0
+        var b = p
+        var i = p
+        var end = -1
+        while (end < 0 && k <= last) {
+          val c = if (i < line.length) line.charAt(i) else '\t'
+          if (c == ':' || c == '\t') {
+            if (k == gtIx) out.gt(s) = line.substring(b, i)
+            else if (k == dpIx) out.dp(s) = intAt(line, b, i)
+            else if (k == gqIx) out.gq(s) = intAt(line, b, i)
+            else if (k == adIx) ints(line, b, i, out.ad, s * out.alleles, out.alleles)
+            else if (k == plIx) ints(line, b, i, out.pl, s * out.genotypes, out.genotypes)
+            if (c == '\t') end = i
+            k += 1
+            b = i + 1
+          }
+          i += 1
+        }
+        if (end < 0) {
+          val t = line.indexOf('\t', i)
+          end = if (t < 0) line.length else t
+        }
+        p = end + 1
+        s += 1
+      }
+      out
+    }
+
+    /** The first `n` components of the comma list at [b, e) into
+      * `out(at)`…`out(at + n - 1)`; components it lacks stay Missing.
+      */
+    private def ints(line: String, b: Int, e: Int, out: Array[Int], at: Int, n: Int): Unit = {
+      var j = 0
+      var cb = b
+      var i = b
+      while (j < n && i <= e) {
+        if (i == e || line.charAt(i) == ',') {
+          out(at + j) = intAt(line, cb, i)
+          j += 1
+          cb = i + 1
+        }
+        i += 1
+      }
+    }
+
+    /** `line.substring(b, e).toInt`, Missing where that throws or the
+      * piece is `.`.
+      */
+    private def intAt(line: String, b: Int, e: Int): Int =
+      if (e == b || (e == b + 1 && line.charAt(b) == '.')) Missing
+      else try Integer.parseInt(line, b, e, 10)
+      catch { case _: NumberFormatException => Missing }
+  }
 
   // ------------------------------------------------------------- genotypes
 

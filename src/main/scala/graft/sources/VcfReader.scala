@@ -159,8 +159,9 @@ object VcfReader {
     }
 
   /** scalarValue, but a malformed token degrades the cell to null (like
-    * fmtInt's -1) instead of failing a cohort-scale load — the TEXT
-    * passthrough these typed columns replaced tolerated any garbage.
+    * a malformed FORMAT field's -1) instead of failing a cohort-scale
+    * load — the TEXT passthrough these typed columns replaced tolerated
+    * any garbage.
     */
   private def lenientScalar(spec: FieldSpec, v: String): Any =
     try scalarValue(spec, v)
@@ -173,50 +174,6 @@ object VcfReader {
       case "Float" => v.toDouble
       case _ => UTF8String.fromString(v)
     }
-
-  /** Missing-value sentinel for numeric FORMAT sub-fields (the
-    * reference's unknown-depth/qual encoding).
-    */
-  private val Missing = -1
-
-  /** Sample's FORMAT sub-field at key index `ix`, "" when absent (a
-    * sample column may carry fewer fields than the FORMAT declares).
-    */
-  private def fmtAt(sample: Vector[String], ix: Int): String =
-    if (ix < 0 || ix >= sample.length) "" else sample(ix)
-
-  private def fmtInt(sample: Vector[String], ix: Int): Int = {
-    val v = fmtAt(sample, ix)
-    if (v.isEmpty || v == ".") Missing
-    else try v.toInt catch { case _: NumberFormatException => Missing }
-  }
-
-  /** AD ("ref,alt1,alt2,…") component at allele index `allele`. */
-  private def adAt(sample: Vector[String], ix: Int, allele: Int): Int = {
-    val v = fmtAt(sample, ix)
-    if (v.isEmpty || v == ".") Missing
-    else {
-      val parts = v.split(',')
-      if (allele >= parts.length || parts(allele) == ".") Missing
-      else try parts(allele).toInt catch { case _: NumberFormatException => Missing }
-    }
-  }
-
-  /** A sample's PL comma-list pre-split once per record (empty when
-    * absent) — the per-alt lookups below index into it without
-    * re-splitting on the parse hot path.
-    */
-  private def plParts(sample: Vector[String], ix: Int): Array[String] = {
-    val v = fmtAt(sample, ix)
-    if (v.isEmpty || v == ".") Array.empty else v.split(',')
-  }
-
-  /** Pre-split PL component at flat genotype index `gIx` — the same
-    * diploid k(k+1)/2+j indexing as Number=G INFO fields.
-    */
-  private def plAt(parts: Array[String], gIx: Int): Int =
-    if (gIx >= parts.length || parts(gIx) == ".") Missing
-    else try parts(gIx).toInt catch { case _: NumberFormatException => Missing }
 
   private def intArray(a: Array[Int]): ArrayData = UnsafeArrayData.fromPrimitiveArray(a)
 
@@ -258,6 +215,13 @@ object VcfReader {
     private val needGts = needed("gts") || needed("gt_phases")
     private val needPl = Seq("gt_phred_ll_homref", "gt_phred_ll_het",
       "gt_phred_ll_homalt").exists(needed)
+    // the FORMAT keys the needed columns are built from: the sample
+    // columns are not read at all when this is empty
+    private val sampleKeys: Set[String] = Map(
+      "GT" -> (needGtTypes || needGts), "DP" -> needed("gt_depths"),
+      "GQ" -> needed("gt_quals"),
+      "AD" -> (needed("gt_ref_depths") || needed("gt_alt_depths")),
+      "PL" -> needPl).collect { case (k, true) => k }.toSet
     private val needWorst = rows == LineRows.VariantsWorstImpact &&
       Seq("gene", "impact", "impact_severity", "severity_rank").exists(needed)
 
@@ -276,7 +240,9 @@ object VcfReader {
 
     def apply(line: String): Array[InternalRow] = rows match {
       case LineRows.Impacts => impactRows(parseSite(line))
-      case _ => variantRows(parseRecord(line))
+      case _ =>
+        val (rec, samplesFrom) = parseRecordAt(line)
+        variantRows(rec, line, samplesFrom)
     }
 
     /** `apply`, but a line that fails to parse yields no rows. */
@@ -347,41 +313,33 @@ object VcfReader {
 
     /** One decomposed variant row per (record, alt). Number=A INFO
       * fields pick the alt's value; genotype classes are recomputed per
-      * alt. Unneeded columns are never computed.
+      * alt. Unneeded columns are never computed. The sample columns
+      * (from `samplesFrom` in `line`) are read once per record.
       */
-    private def variantRows(rec: Record): Array[InternalRow] = {
+    private def variantRows(rec: Record, line: String, samplesFrom: Int): Array[InternalRow] = {
       if (!passes(rec)) return Array.empty
-      val gtIx = rec.formatKeys.indexOf("GT")
-      val dpIx = rec.formatKeys.indexOf("DP")
-      val gqIx = rec.formatKeys.indexOf("GQ")
-      val adIx = rec.formatKeys.indexOf("AD")
-      val plIx = rec.formatKeys.indexOf("PL")
-      val samples = rec.genotypes
-      // Per-sample, alt-independent values computed once per record.
-      // fmtAt handles gtIx < 0 (FORMAT without GT) and truncated sample
-      // columns alike: the arrays stay cohort-width with "" → UNKNOWN,
-      // never shorter than the sample list (index-aligned consumers
-      // would silently mis-attribute on a short array).
-      val gtStrings: Vector[String] =
-        if (needGts) samples.map(s => fmtAt(s, gtIx)) else null
-      val alleles: Vector[Vector[Option[Int]]] =
-        if (needGtTypes) samples.map(s => gtAlleles(fmtAt(s, gtIx))) else null
+      val nAlts = rec.alts.length
+      // Per-sample, alt-independent values read once per record. A
+      // FORMAT without GT and truncated sample columns alike leave the
+      // arrays cohort-width with "" → UNKNOWN, never shorter than the
+      // sample list (index-aligned consumers would silently
+      // mis-attribute on a short array).
+      val fields =
+        if (sampleKeys.isEmpty) null
+        else SampleFields.read(line, samplesFrom, rec.formatKeys, nAlts, sampleKeys)
+      val n = if (fields == null) 0 else fields.count
+      def perSample(name: String)(f: Int => Int): ArrayData =
+        if (needed(name)) intArray(Array.tabulate(n)(f)) else null
+      val alleles: Array[Vector[Option[Int]]] =
+        if (needGtTypes) fields.gt.map(gtAlleles) else null
       val gts: ArrayData =
-        if (needed("gts")) new GenericArrayData(gtStrings.map(g => utf8(g): Any).toArray)
+        if (needed("gts")) new GenericArrayData(fields.gt.map(g => utf8(g): Any))
         else null
-      val phases: ArrayData =
-        if (needed("gt_phases"))
-          intArray(gtStrings.map(g => if (g.contains('|')) 1 else 0).toArray)
-        else null
-      def perSample(name: String)(f: Vector[String] => Int): ArrayData =
-        if (needed(name)) intArray(samples.map(f).toArray) else null
-      val depths = perSample("gt_depths")(fmtInt(_, dpIx))
-      val quals = perSample("gt_quals")(fmtInt(_, gqIx))
-      val refDepths = perSample("gt_ref_depths")(adAt(_, adIx, 0))
-      val pls: Vector[Array[String]] =
-        if (needPl) samples.map(s => plParts(s, plIx)) else null
-      val plHomRef: ArrayData =
-        if (needed("gt_phred_ll_homref")) intArray(pls.map(plAt(_, 0)).toArray) else null
+      val phases = perSample("gt_phases")(s => if (fields.gt(s).contains('|')) 1 else 0)
+      val depths = if (needed("gt_depths")) intArray(fields.dp) else null
+      val quals = if (needed("gt_quals")) intArray(fields.gq) else null
+      val refDepths = perSample("gt_ref_depths")(fields.adAt(_, 0))
+      val plHomRef = perSample("gt_phred_ll_homref")(fields.plAt(_, 0))
       val annEntries = if (needWorst) entries(rec) else null
       val chrom = utf8(rec.chrom)
       val vid = rec.id.map(utf8).orNull
@@ -391,16 +349,13 @@ object VcfReader {
       rec.alts.iterator.zipWithIndex.map { case (alt, i0) =>
         val altIx = i0 + 1
         val gtTypes: Array[Int] =
-          if (needGtTypes) alleles.map(gtTypeOf(_, altIx)).toArray else null
-        val altDepths = perSample("gt_alt_depths")(adAt(_, adIx, altIx))
+          if (needGtTypes) alleles.map(gtTypeOf(_, altIx)) else null
+        val altDepths = perSample("gt_alt_depths")(fields.adAt(_, altIx))
         // PL's flat diploid index for (j, k): k(k+1)/2 + j — this alt's
         // [0/0, 0/alt, alt/alt] triple after decompose
         val half = altIx * (altIx + 1) / 2
-        val plHet: ArrayData =
-          if (needed("gt_phred_ll_het")) intArray(pls.map(plAt(_, half)).toArray) else null
-        val plHomAlt: ArrayData =
-          if (needed("gt_phred_ll_homalt")) intArray(pls.map(plAt(_, half + altIx)).toArray)
-          else null
+        val plHet = perSample("gt_phred_ll_het")(fields.plAt(_, half))
+        val plHomAlt = perSample("gt_phred_ll_homalt")(fields.plAt(_, half + altIx))
         val st = if (needStats) gtStats(ArraySeq.unsafeWrapArray(gtTypes)) else null
         val infoVals = specs.indices.map(j =>
           if (specNeeded(j)) infoValue(specs(j), specTypes(j), rec.info.get(specs(j).id), altIx)

@@ -12,7 +12,8 @@ import graft.functions.GraftFunctions
   * fails when main code builds a session outside GraftSession, brings
   * back a hand-kept registration call, names a graft kernel inside a
   * SQL string (operators use the typed helpers, which need no registry),
-  * or deflates through java.util.zip instead of `Deflate`.
+  * deflates through java.util.zip instead of `Deflate`, or names
+  * parquet's dictionary option outside `DbSink`.
   */
 class DesignGuardSpec extends AnyFunSuite {
 
@@ -89,6 +90,14 @@ class DesignGuardSpec extends AnyFunSuite {
       case (f, code) if "\\bDeflater|GZIPOutputStream".r.findFirstIn(code).isDefined => f.getFileName.toString
     }
     assert(users.isEmpty, s"a second deflate path: $users")
+  }
+
+  test("parquet.enable.dictionary appears only in DbSink: one list of plain-written columns") {
+    val users = sources.collect {
+      case (f, _) if Files.readString(f).contains("parquet.enable.dictionary") &&
+        f.getFileName.toString != "DbSink.scala" => f.toString
+    }
+    assert(users.isEmpty, s"take the options from DbSink.parquetOptions: $users")
   }
 
   test("the guard sees a kernel name in a SQL string") {

@@ -131,6 +131,100 @@ class PropertySpec extends AnyFunSuite {
       }
     }
   }
+
+  test("the in-place sample reader equals split-and-parse on every per-sample array") {
+    // the split-based parse the reader replaced, kept as the reference:
+    // each sample split on ':', AD and PL on ',', every piece `toInt`
+    def reference(samples: Vector[String], keys: Vector[String], alts: Int)
+        : Map[String, Seq[Seq[Any]]] = {
+      val split = samples.map(_.split(':').toVector)
+      def at(s: Vector[String], k: String): String = {
+        val ix = keys.indexOf(k)
+        if (ix < 0 || ix >= s.length) "" else s(ix)
+      }
+      def int(v: String): Int =
+        if (v.isEmpty || v == ".") -1
+        else try v.toInt catch { case _: NumberFormatException => -1 }
+      def list(v: String): Array[String] =
+        if (v.isEmpty || v == ".") Array.empty else v.split(',')
+      def comp(parts: Array[String], i: Int): Int =
+        if (i >= parts.length) -1 else int(parts(i))
+      val ad = split.map(s => list(at(s, "AD")))
+      val pl = split.map(s => list(at(s, "PL")))
+      Map("gt" -> Seq(split.map(at(_, "GT"))),
+        "dp" -> Seq(split.map(s => int(at(s, "DP")))),
+        "gq" -> Seq(split.map(s => int(at(s, "GQ")))),
+        "ad" -> (0 to alts).map(a => ad.map(comp(_, a))),
+        "pl" -> (0 to alts).flatMap { a =>
+          val half = a * (a + 1) / 2
+          Seq(pl.map(comp(_, half)), pl.map(comp(_, half + a)))
+        })
+    }
+    def read(line: String, alts: Int): Map[String, Seq[Seq[Any]]] = {
+      val (r, from) = VcfParser.parseRecordAt(line)
+      val f = VcfParser.SampleFields.read(line, from, r.formatKeys, alts)
+      val ss = 0 until f.count
+      Map("gt" -> Seq(f.gt.toSeq), "dp" -> Seq(f.dp.toSeq), "gq" -> Seq(f.gq.toSeq),
+        "ad" -> (0 to alts).map(a => ss.map(f.adAt(_, a))),
+        "pl" -> (0 to alts).flatMap { a =>
+          val half = a * (a + 1) / 2
+          Seq(ss.map(f.plAt(_, half)), ss.map(f.plAt(_, half + a)))
+        })
+    }
+
+    val key = Gen.frequency(8 -> Gen.oneOf("GT", "DP", "GQ", "AD", "PL"),
+      1 -> Gen.const("FT"), 1 -> Gen.const(""))
+    // ints, signed, overflowing, non-ASCII digits (Arabic-Indic three,
+    // fullwidth one) and malformed pieces
+    val piece = Gen.frequency(
+      6 -> Gen.chooseNum(0, 999).map(_.toString),
+      2 -> Gen.oneOf(".", ""),
+      1 -> Gen.oneOf("-7", "+7", "-", "+", "-0", "007"),
+      1 -> Gen.oneOf("2147483647", "2147483648", "-2147483648", "-2147483649",
+        "99999999999"),
+      1 -> Gen.oneOf("\u0663", "\uff11\uff12", "1\u0663"),
+      1 -> Gen.oneOf("x", "1.5", " 4", "4 ", "0x1", "1e3"))
+    val list = for {
+      n <- Gen.chooseNum(0, 12)
+      ps <- Gen.listOfN(n, piece)
+      trail <- Gen.oneOf("", "", ",")
+    } yield ps.mkString(",") + trail
+    val gt = Gen.oneOf("0/1", "1|1", "./.", "0/0", "1/2", "2|3", "", ".", "0/", "4")
+    val field = Gen.oneOf(gt, piece, list)
+    // a sample column: up to one more field than FORMAT declares, so
+    // truncated, complete and over-long columns all occur, with an
+    // optional trailing ':' or leading empty field
+    def sample(nKeys: Int) = for {
+      n <- Gen.chooseNum(0, nKeys + 1)
+      fs <- Gen.listOfN(n, field)
+      lead <- Gen.frequency(9 -> Gen.const(""), 1 -> Gen.const(":"))
+      trail <- Gen.frequency(8 -> Gen.const(""), 2 -> Gen.const(":"))
+    } yield lead + fs.mkString(":") + trail
+    val recGen = for {
+      nKeys <- Gen.chooseNum(1, 7)
+      keys <- Gen.listOfN(nKeys, key)
+      alts <- Gen.chooseNum(1, 4)
+      nSamples <- Gen.chooseNum(0, 6)
+      samples <- Gen.listOfN(nSamples, sample(nKeys))
+    } yield (keys, alts, samples.toVector)
+
+    var seed = Seed(23L)
+    var n = 0
+    while (n < 3000) {
+      recGen.apply(Gen.Parameters.default, seed).foreach { case (keys, alts, samples) =>
+        val site = Seq("1", "100", ".", "A", Seq("C", "G", "T", "AC").take(alts).mkString(","),
+          ".", "PASS", ".", keys.mkString(":"))
+        val line = (site ++ samples).mkString("\t")
+        val got = read(line, alts)
+        reference(samples, VcfParser.parseRecord(line).formatKeys, alts).foreach {
+          case (k, want) => assert(got(k) == want, s"$k of '$line'")
+        }
+        n += 1
+      }
+      seed = seed.next
+    }
+    assert(n == 3000)
+  }
 }
 
 /** Generator-based round-trip: random well-formed VCF body lines parse
@@ -232,11 +326,12 @@ class VcfRoundTripSpec extends org.scalatest.funsuite.AnyFunSuite {
         case (chrom, pos, ref, alts, dp, gts) =>
           val line = (Seq(chrom, pos.toString, ".", ref, alts.mkString(","),
             ".", "PASS", s"DP=$dp", "GT") ++ gts).mkString("\t")
-          val r = VcfParser.parseRecord(line)
+          val (r, from) = VcfParser.parseRecordAt(line)
           assert(r.chrom == chrom && r.pos == pos && r.ref == ref)
           assert(r.alts == alts.toVector)
           assert(r.info("DP") == dp.toString)
-          assert(r.genotypes.map(_.head) == gts.toVector)
+          assert(VcfParser.SampleFields.read(line, from, r.formatKeys, r.alts.length)
+            .gt.toSeq == gts)
           // stats are consistent with per-sample classes for every alt
           alts.indices.foreach { i =>
             val classes = gts.map(g => VcfParser.gtType(g, i + 1))

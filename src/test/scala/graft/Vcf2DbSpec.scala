@@ -210,6 +210,55 @@ class Vcf2DbSpec extends SparkSpec {
     }
   }
 
+  test("variants parquet: blob columns written plain, strings keep dictionaries") {
+    import scala.jdk.CollectionConverters._
+    import org.apache.hadoop.fs.Path
+    import org.apache.parquet.hadoop.ParquetFileReader
+    import org.apache.parquet.hadoop.util.HadoopInputFile
+    val dir = Files.createTempDirectory("vcf2db_plain")
+    val vcf = dir.resolve("in.vcf")
+    // the fixture's records 200 times over, shifted in pos: enough rows
+    // per file that a dictionary pays for chrom in every slab
+    val (head, body) = VcfFixture.lines.partition(_.startsWith("#"))
+    val copies = (0 until 200).flatMap(k => body.map { l =>
+      val f = l.split("\t", -1)
+      (f.updated(1, (f(1).toLong + k * 1000L).toString)).mkString("\t")
+    })
+    Files.writeString(vcf, (head ++ copies).mkString("\n") + "\n")
+    val blobCols = Seq("gt_types", "gts", "gt_depths", "gt_ref_depths",
+      "gt_alt_depths", "gt_quals", "gt_phred_ll_homref", "gt_phred_ll_het",
+      "gt_phred_ll_homalt", "gt_phases")
+    val conf = spark.sessionState.newHadoopConf()
+    // the default write (DbSink.writeParquet) and --sorted-output
+    // (Scale.writeRangeSorted) alike
+    Seq(0, 2).foreach { sorted =>
+      val out = dir.resolve(s"db$sorted").toString
+      Vcf2Db.run(spark, vcf.toString, None, out, sortedOutput = sorted)
+      val files = new java.io.File(s"$out/variants").listFiles()
+        .filter(_.getName.endsWith(".parquet")).toSeq
+      assert(files.nonEmpty)
+      val chunks = files.flatMap { f =>
+        val reader = ParquetFileReader.open(HadoopInputFile.fromPath(new Path(f.toString), conf))
+        try reader.getFooter.getBlocks.asScala.flatMap(_.getColumns.asScala).toSeq
+        finally reader.close()
+      }
+      assert(chunks.nonEmpty, s"no row groups under $out")
+      blobCols.foreach { c =>
+        val cc = chunks.filter(_.getPath.toDotString == c)
+        assert(cc.nonEmpty, s"$c missing from the footer")
+        cc.foreach { m =>
+          assert(!m.hasDictionaryPage, s"$c has a dictionary page (sorted=$sorted)")
+          assert(!m.getEncodings.asScala.exists(_.usesDictionary),
+            s"$c encodings ${m.getEncodings} (sorted=$sorted)")
+        }
+      }
+      val chrom = chunks.filter(_.getPath.toDotString == "chrom")
+      assert(chrom.nonEmpty && chrom.forall(m =>
+        m.hasDictionaryPage && m.getEncodings.asScala.exists(_.usesDictionary)),
+        s"chrom should stay dictionary-encoded (sorted=$sorted)")
+    }
+  }
+
   test("GEMINI --gt-filter wildcard DSL compiles and filters the loaded db") {
     import graft.operators.Inheritance
     val dir = Files.createTempDirectory("vcf2db_gtf")

@@ -33,12 +33,14 @@ class VcfParserSpec extends AnyFunSuite {
   }
 
   test("record parse: multi-allelic, flags, missing values") {
-    val r = parseRecord("1\t100\t.\tA\tG,T\t50.5\t.\tDP=7;DB\tGT\t0/1\t./.")
+    val line = "1\t100\t.\tA\tG,T\t50.5\t.\tDP=7;DB\tGT\t0/1\t./."
+    val (r, from) = parseRecordAt(line)
     assert(r.alts == Vector("G", "T"))
     assert(r.id.isEmpty && r.filter.isEmpty)
     assert(r.qual.contains(50.5))
     assert(r.info == scala.collection.immutable.ListMap("DP" -> "7", "DB" -> ""))
-    assert(r.genotypes == Vector(Vector("0/1"), Vector("./.")))
+    assert(r.formatKeys == Vector("GT"))
+    assert(SampleFields.read(line, from, r.formatKeys, 2).gt.toSeq == Seq("0/1", "./."))
   }
 
   test("genotype classes per alt (GEMINI encoding)") {
@@ -81,7 +83,7 @@ class VcfParserSpec extends AnyFunSuite {
     val line = "1\t100\trs1\tA\tG,T\t50.5\tq10\tDP=7;CSQ=G|x\tGT:DP\t0/1:3\t./."
     val full = parseRecord(line)
     val site = parseSite(line)
-    assert(site == full.copy(formatKeys = Vector.empty, genotypes = Vector.empty))
+    assert(site == full.copy(formatKeys = Vector.empty))
     val sitesOnly = "2\t5\t.\tC\tA\t.\t.\tCSQ=A|y"
     assert(parseSite(sitesOnly) == parseRecord(sitesOnly))
     assert(parseSite("3\t9\t.\tG\tC\t.\t.") == parseRecord("3\t9\t.\tG\tC\t.\t."))
@@ -137,8 +139,10 @@ class VcfParserEdgeSpec extends org.scalatest.funsuite.AnyFunSuite {
   }
 
   test("record with no FORMAT/samples yields empty genotype stats") {
-    val r = parseRecord("1\t5\t.\tA\tC\t.\t.\tDP=3")
-    assert(r.genotypes.isEmpty)
+    val line = "1\t5\t.\tA\tC\t.\t.\tDP=3"
+    val (r, from) = parseRecordAt(line)
+    assert(r.formatKeys.isEmpty)
+    assert(SampleFields.read(line, from, r.formatKeys, 1).count == 0)
     val st = gtStats(Seq.empty)
     assert(st.callRate == 0.0 && st.aaf == 0.0)
   }
@@ -149,9 +153,12 @@ class VcfParserEdgeSpec extends org.scalatest.funsuite.AnyFunSuite {
   }
 
   test("trailing empty sample columns keep the genotype vector cohort-width") {
-    val r = parseRecord("1\t5\t.\tA\tC\t.\t.\t.\tGT\t0/1\t\t")
-    assert(r.genotypes.length == 3, "empty trailing samples must survive")
-    assert(r.genotypes(1) == Vector("") && r.genotypes(2) == Vector(""))
+    val line = "1\t5\t.\tA\tC\t.\t.\t.\tGT:DP\t0/1:4\t\t"
+    val (r, from) = parseRecordAt(line)
+    val f = SampleFields.read(line, from, r.formatKeys, 1)
+    assert(f.count == 3, "empty trailing samples must survive")
+    assert(f.gt.toSeq == Seq("0/1", "", ""))
+    assert(f.dp.toSeq == Seq(4, -1, -1))
   }
 
   test("escaped quotes inside Description parse whole") {
