@@ -29,6 +29,13 @@ import graft.operators.{Dedup, Text}
   * Spark jobs, measured round 14). Peak cached footprint stays ~2
   * stages — the ContextCleaner drops cut blocks as stage frames go
   * out of scope.
+  *
+  * Near-dup clustering is [[Dedup.connectedComponents]]: a corpus's
+  * pair graph normally fits the broadcast threshold, so it is one
+  * collect of the cut pair frame and a driver union-find, and the
+  * labels join the scored docs as a local (broadcast) frame — no
+  * star-contraction round. No frame is counted twice: without a
+  * benchmark the decontaminated count is the quality count.
   */
 object CurateCorpus {
 
@@ -165,7 +172,8 @@ object CurateCorpus {
     val scored = Text.qualitySignals(lineD).persist()
 
     // 3. near-dup cluster dedup: d04 pairs → connected components
-    //    (d07) → the BEST-QUALITY member of each cluster survives
+    //    (d07; a small pair graph is labelled on the driver) → the
+    //    BEST-QUALITY member of each cluster survives
     //    (d09 rule: q_score desc, doc_id tie-break), not the arbitrary
     //    min-id. Unclustered docs pass through untouched (kept out of
     //    the window so NULL cluster ids never pile into one partition).
@@ -258,16 +266,17 @@ object CurateCorpus {
     // 5. decontamination (d08) on the RAW text — it must run before
     //    redaction, or contamination hidden behind a redacted span
     //    (an email inside a copied benchmark answer) slips through
-    val clean = benchmark match {
+    //    (without a benchmark `clean` IS `quality`, already counted)
+    val (clean, nClean) = benchmark match {
       case Some(b) =>
         val contaminated = Dedup.decontaminate(
           quality.select($"doc_id", split($"text", " ").as("toks")),
           b.select(split($"text", " ").as("toks")), ngram)
           .select($"doc_id")
-        quality.join(contaminated, Seq("doc_id"), "left_anti").persist()
-      case None => quality
+        val kept = quality.join(contaminated, Seq("doc_id"), "left_anti").persist()
+        (kept, kept.count())
+      case None => (quality, nLearned.getOrElse(nQuality))
     }
-    val nClean = clean.count()
 
     // 6. PII redaction (t08) last, keeping derived length metadata
     //    consistent with the rewritten text

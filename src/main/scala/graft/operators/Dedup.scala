@@ -1,8 +1,11 @@
 package graft.operators
 
-import org.apache.spark.sql.{Column, DataFrame, SparkSession}
+import scala.jdk.CollectionConverters._
+
+import org.apache.spark.sql.{Column, DataFrame, Row, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.types.{IntegerType, LongType, StructField, StructType}
 
 import graft.Tables
 import graft.functions.GraftFunctions.{bloomAgg, bloomContains, bloomContainsTag,
@@ -288,11 +291,16 @@ object Dedup {
     *
     * Algorithm: alternating large-star / small-star (the MapReduce
     * connected-components formulation of Kiveris et al., "Connected
-    * Components in MapReduce and Beyond", SoCC'14 — public knowledge).
-    * Each round is ONE window shuffle keyed on a node id, the edge set
-    * only ever shrinks toward star-shape, and convergence is
-    * O(log n) rounds — not O(diameter) like naive label propagation, so
-    * a 100 M-doc chain-shaped component still resolves in ~27 rounds.
+    * Components in MapReduce and Beyond", SoCC'14 — public knowledge),
+    * ending in a DRIVER FINISH: once the remaining edge set fits the
+    * broadcast byte budget it is collected once and labelled by
+    * union-find on the driver (see [[connectedComponents]]), so a
+    * near-dup graph of up to ~650 k edges runs no star round at all.
+    * Above the budget each round is ONE window shuffle keyed on a node
+    * id, the edge set only ever shrinks toward star-shape, and
+    * convergence is O(log n) rounds — not O(diameter) like naive label
+    * propagation, so a 100 M-doc chain-shaped component still resolves
+    * in ~27 rounds.
     * Lineage is truncated per round via [[graft.Lineage.cut]] —
     * mandatory for any iterative DataFrame loop; set
     * `spark.graft.checkpointDir` to upgrade the executor-local cut to
@@ -324,6 +332,16 @@ object Dedup {
     * (doc_id, cluster_id = component min). Every input endpoint appears
     * in the output exactly once, component minima label themselves.
     *
+    * The star rounds stop as soon as the remaining edge set fits the
+    * broadcast budget — edge count × 16 bytes within
+    * `spark.sql.autoBroadcastJoinThreshold`, read from the checksum
+    * every round computes anyway. The edges are then collected once and
+    * labelled on the driver by union-find ([[componentMins]]). If the
+    * very first checksum fits, the whole result is a local frame and no
+    * star round or final label shuffle runs; after k rounds the driver
+    * labels are unioned back with the node roster. A threshold ≤ 0, or
+    * non-integral ids, keeps the distributed loop to its fixpoint.
+    *
     * @param twoPhaseMinEdges override of [[TwoPhaseMinEdges]] (tests
     *   pass 0 to force the giant-component two-phase path at any size)
     */
@@ -345,55 +363,120 @@ object Dedup {
       .select(least($"u", $"v").as("u"), greatest($"u", $"v").as("v"))
       .distinct().transform(graft.Lineage.cut)
     val nodes = base.select(explode(array($"u", $"v")).as("doc_id")).distinct()
+    // label = min over {star-edge parents of the node} ∪ {itself}: a
+    // member v sees its root u (< v) and wins u; a root sees only
+    // itself. Union + one partial-agg shuffle — no node⟕member join
+    // (the anti-join formulation is fact-vs-fact and degrades to a
+    // sort-merge join at corpus scale).
+    def label(parents: DataFrame): DataFrame =
+      parents.unionByName(nodes.select($"doc_id", $"doc_id".as("lab")))
+        .groupBy($"doc_id").agg(min($"lab").as("cluster_id"))
+    // driver finish: ids box back to the column's own type, and both
+    // columns are nullable like the star rounds' output, so the local
+    // frame carries the loop's schema
+    val idType = base.schema("u").dataType
+    val box: Option[Long => Any] = idType match {
+      case LongType    => Some(identity)
+      case IntegerType => Some(_.toInt)
+      case _           => None
+    }
+    val budget = broadcastThresholdBytes(s)
+    def fits(rows: Long) = box.isDefined && budget > 0 && rows <= budget / 16
+    def driverLabels(df: DataFrame, labelCol: String): DataFrame = {
+      val rows = df.collect()
+      val (ids, mins) = componentMins(
+        rows.map(_.getAs[Number](0).longValue), rows.map(_.getAs[Number](1).longValue))
+      s.createDataFrame(
+        ids.indices.map(k => Row(box.get(ids(k)), box.get(mins(k)))).asJava,
+        StructType(Seq(StructField("doc_id", idType), StructField(labelCol, idType))))
+    }
     var e = base.filter($"u" =!= $"v")
     // fixpoint detection: (count, xxhash64 xor-fold) of the canonical
     // edge set — one cheap aggregate per round instead of a
     // set-difference join; the edges are distinct so the xor fold is an
     // order-independent set digest (a plain sum overflows ANSI longs).
     // The star steps cannot cycle, so an unchanged checksum at equal
-    // cardinality is the fixpoint.
-    def checksum(df: DataFrame): (Long, Long) = {
-      val r = df.agg(count(lit(1)),
-        coalesce(expr("bit_xor(xxhash64(u, v))"), lit(0L))).head()
-      (r.getLong(0), r.getLong(1))
+    // cardinality is the fixpoint. The first checksum reads `base`
+    // itself and also counts its rows, self-loops included: when those
+    // fit, collecting `base` labels every node with no roster at all.
+    def checksum(df: DataFrame): (Long, Long, Long) = {
+      val edge = $"u" =!= $"v"
+      val r = df.agg(count(lit(1)), count(when(edge, lit(1))),
+        coalesce(bit_xor(when(edge, xxhash64($"u", $"v"))), lit(0L))).head()
+      (r.getLong(0), r.getLong(1), r.getLong(2))
     }
-    var prev = checksum(e)
-    var done = prev._1 == 0L
-    var rounds = 0
-    while (!done) {
-      rounds += 1
-      require(rounds <= 40, s"connected components did not converge in 40 rounds")
-      // TWO star rounds fuse into each checkpointed job: the rounds are
-      // overhead-dominated once the edge set is small (every round is a
-      // handful of window shuffles over a shrinking frame), so halving
-      // the job count beats the ≤2 redundant rounds the coarser
-      // fixpoint check can cost. Soundness: star contraction is
-      // monotone (the edge potential strictly decreases until the
-      // star-shaped fixpoint, and fixpoints are invariant), so an
-      // unchanged checksum across a fused double-round means BOTH
-      // inner rounds were no-ops.
-      val big = prev._1 > twoPhaseMinEdges
-      val next = smallStar(largeStar(smallStar(largeStar(e, big), big), big), big)
-        .transform(graft.Lineage.cut)
-      val cur = checksum(next)
-      done = cur == prev
-      prev = cur
-      // the checksum materialized `next`, whose plan roots at its own
-      // RDD — the PREVIOUS round's cut blocks are dead; drop them now
-      // instead of waiting for GC (guide §5: bounded cached footprint —
-      // no-op on round 1, where e is a filter view of `base`, which the
-      // final label step still needs)
-      graft.Lineage.release(e)
-      e = next
+    def parents(edges: DataFrame) = edges.select($"v".as("doc_id"), $"u".as("lab"))
+    val (nBase, n0, digest0) = checksum(base)
+    if (fits(nBase)) {
+      val local = driverLabels(base, "cluster_id")
+      graft.Lineage.release(base) // the local frame holds every label
+      local
+    } else {
+      var prev = (n0, digest0)
+      var done = n0 == 0L || fits(n0)
+      var rounds = 0
+      while (!done) {
+        rounds += 1
+        require(rounds <= 40, s"connected components did not converge in 40 rounds")
+        // TWO star rounds fuse into each checkpointed job: the rounds are
+        // overhead-dominated once the edge set is small (every round is a
+        // handful of window shuffles over a shrinking frame), so halving
+        // the job count beats the ≤2 redundant rounds the coarser
+        // fixpoint check can cost. Soundness: star contraction is
+        // monotone (the edge potential strictly decreases until the
+        // star-shaped fixpoint, and fixpoints are invariant), so an
+        // unchanged checksum across a fused double-round means BOTH
+        // inner rounds were no-ops.
+        val big = prev._1 > twoPhaseMinEdges
+        val next = smallStar(largeStar(smallStar(largeStar(e, big), big), big), big)
+          .transform(graft.Lineage.cut)
+        val (_, n, digest) = checksum(next)
+        done = (n, digest) == prev || fits(n)
+        prev = (n, digest)
+        // the checksum materialized `next`, whose plan roots at its own
+        // RDD — the PREVIOUS round's cut blocks are dead; drop them now
+        // instead of waiting for GC (guide §5: bounded cached footprint —
+        // no-op on round 1, where e is a filter view of `base`, which the
+        // final label step still needs)
+        graft.Lineage.release(e)
+        e = next
+      }
+      // star contraction keeps every node on an edge, so the driver's
+      // labels of `e` plus the roster's self-labels cover every node
+      if (fits(prev._1)) {
+        val local = driverLabels(e, "lab")
+        graft.Lineage.release(e)
+        label(local)
+      } else label(parents(e))
     }
-    // label = min over {star-edge parents of the node} ∪ {itself}: a
-    // member v sees its root u (< v) and wins u; a root sees only
-    // itself. Union + one partial-agg shuffle — no node⟕member join
-    // (the anti-join formulation is fact-vs-fact and degrades to a
-    // sort-merge join at corpus scale).
-    e.select($"v".as("doc_id"), $"u".as("lab"))
-      .unionByName(nodes.select($"doc_id", $"doc_id".as("lab")))
-      .groupBy($"doc_id").agg(min($"lab").as("cluster_id"))
+  }
+
+  /** Union-find over one collected edge list: returns the distinct
+    * endpoint ids ascending and, index for index, each id's component
+    * minimum. Primitive arrays throughout — an id's slot is its rank in
+    * the sorted id array, and roots are always the smallest slot of
+    * their set, so the root's id is the component min.
+    */
+  private[operators] def componentMins(us: Array[Long],
+      vs: Array[Long]): (Array[Long], Array[Long]) = {
+    val all = java.util.Arrays.copyOf(us, us.length + vs.length)
+    System.arraycopy(vs, 0, all, us.length, vs.length)
+    java.util.Arrays.sort(all)
+    var n = 0
+    for (x <- all) if (n == 0 || all(n - 1) != x) { all(n) = x; n += 1 }
+    val ids = java.util.Arrays.copyOf(all, n)
+    val parent = Array.range(0, n)
+    def find(i: Int): Int = {
+      var x = i
+      while (parent(x) != x) { parent(x) = parent(parent(x)); x = parent(x) }
+      x
+    }
+    for (k <- us.indices) {
+      val a = find(java.util.Arrays.binarySearch(ids, us(k)))
+      val b = find(java.util.Arrays.binarySearch(ids, vs(k)))
+      if (a < b) parent(b) = a else if (b < a) parent(a) = b
+    }
+    (ids, Array.tabulate(n)(k => ids(find(k))))
   }
 
   /** Large-star: connect every neighbor LARGER than the center to the

@@ -66,18 +66,27 @@ object DbSink {
     df.coalesce(numPartitions).write.mode(SaveMode.Overwrite)
       .options(parquetOptions(df.schema)).parquet(path)
 
-  /** Parquet writer options for a table of `schema`: every `BinaryType`
-    * column — the packed genotype blobs — is written plain, with
+  /** Parquet writer options for a table of `schema`: columns whose
+    * values are (nearly) all distinct are written plain, with
     * dictionary encoding off (parquet's per-column
-    * `parquet.enable.dictionary#<column>`). Nearly every blob is
-    * distinct, so a dictionary never pays: parquet builds one per
-    * column chunk, finds it too large and falls back to plain, after
-    * hashing and comparing every blob on the way. String columns
-    * (chrom, ref, alt, gene, …) keep their dictionaries. Every parquet
-    * write of a blob table takes its options from here.
+    * `parquet.enable.dictionary#<column>`). A dictionary never pays on
+    * them: parquet builds one per column chunk, finds it no smaller
+    * than the values and falls back to plain, after hashing and
+    * comparing every value on the way. Those columns are
+    *  - every `BinaryType` column: the packed genotype blobs;
+    *  - `vid` and `pos` of the variants table (the table with a `vid`
+    *    column), one row per variant, where both are unique per row.
+    *    In the impacts table `pos` repeats once per transcript and
+    *    keeps its dictionary.
+    * String columns (chrom, ref, alt, gene, the impacts' `feature`
+    * transcript ids, …) keep their dictionaries. Every parquet write of
+    * a database table takes its options from here.
     */
-  def parquetOptions(schema: StructType): Map[String, String] =
+  def parquetOptions(schema: StructType): Map[String, String] = {
+    val perVariant = if (schema.fieldNames.contains("vid")) Set("vid", "pos") else Set.empty[String]
     schema.fields.collect {
-      case f if f.dataType == BinaryType => s"parquet.enable.dictionary#${f.name}" -> "false"
+      case f if f.dataType == BinaryType || perVariant(f.name) =>
+        s"parquet.enable.dictionary#${f.name}" -> "false"
     }.toMap
+  }
 }

@@ -11,6 +11,11 @@ import graft.operators.{Dedup, Text}
   */
 class CurateCorpusSpec extends SparkSpec {
 
+  /** Jobs of a round-0 driver finish: the checksum aggregate (with its
+    * AQE shuffle stage) and the one collect of the cut edge frame.
+    */
+  private val RoundZeroJobs = 4
+
   test("curate pipeline: monotone attrition, stage contracts hold on the output") {
     val docs = Tables(spark, "/root/testdata/sf0.001", "documents")
     val bench = docs.filter(col("doc_id") % 50 === 0)
@@ -75,22 +80,36 @@ class CurateCorpusSpec extends SparkSpec {
     // Round-15 pin (r14 verdict ask #1): every stage boundary is a
     // lineage cut whose blocks are EXPLICITLY released once the next
     // stage materializes. After run() the only resident blocks may be
-    // connectedComponents' internals (its canonical edge frame + final
-    // edge round — 2 frames, released only by GC since the returned
-    // label frame roots at them) and the pair engines' internal cut
-    // kernel frames (the minhash sig cut + the containment stage's
-    // gram cut — bounded, not stage-sized); every stage frame (exact,
-    // lineD, near, contained, …) and every persist (input, scored,
-    // heuristic) must be gone. A regression re-pins all ~6
-    // near-corpus-size stages at once at 100 TB.
+    // the pair engines' internal cut kernel frames (the minhash sig cut
+    // + the containment stage's gram cut — bounded, not stage-sized).
+    // connectedComponents releases its canonical edge frame when its
+    // driver finish labels this corpus's pair graph at round 0 (the
+    // star-round loop would leave that frame + its final edge round).
+    // Every stage frame (exact, lineD, near, contained, …) and every
+    // persist (input, scored, heuristic) must be gone. A regression
+    // re-pins all ~6 near-corpus-size stages at once at 100 TB.
     val docs = Tables(spark, "/root/testdata/sf0.001", "documents")
     val out = Files.createTempDirectory("curate_mem").resolve("out").toString
     val before = spark.sparkContext.getPersistentRDDs.keySet
     CurateCorpus.run(docs, out, containment = Some(0.6))
     val added = spark.sparkContext.getPersistentRDDs.keySet -- before
-    assert(added.size <= 4,
-      s"curation left ${added.size} persistent RDD(s) resident (expected ≤4: " +
-        "connectedComponents internals + the sig/gram kernel cuts): stage releases regressed")
+    assert(added.size <= 2,
+      s"curation left ${added.size} persistent RDD(s) resident (expected ≤2: " +
+        "the sig/gram kernel cuts): stage releases regressed")
+  }
+
+  test("near-dup labelling at default config stays within the round-0 driver finish's jobs") {
+    import spark.implicits._
+    // ~100 edges, the size of a curated corpus's near-dup graph: the
+    // first checksum fits the default broadcast threshold, so the whole
+    // labelling is that checksum plus one collect. Falling back to the
+    // star rounds adds ≥9 jobs per double round plus the label shuffle.
+    val rnd = new scala.util.Random(3)
+    val edges = Seq.fill(100)((rnd.nextInt(150).toLong, rnd.nextInt(150).toLong))
+      .toDF("u", "v")
+    val (_, jobs) = countingJobs(Dedup.connectedComponents(spark, edges).collect())
+    assert(jobs <= RoundZeroJobs,
+      s"$jobs jobs > $RoundZeroJobs: the labelling fell back to the star rounds")
   }
 
   test("near-dup parity: minhash default and exact opt-in agree on this corpus") {

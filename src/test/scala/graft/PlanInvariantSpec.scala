@@ -167,23 +167,38 @@ class PlanInvariantSpec extends SparkSpec {
     }
   }
 
-  test("d07/d09 label step reads only cut RDDs — no duplicated parquet DAG") {
+  /** d07/d09's label plans: the d07 plan must root at `roots` (any one
+    * of them) and read no parquet; d09 keeps only its scoring scans.
+    */
+  private def labelStepReadsOnlyCuts(roots: Seq[String]): Unit = {
     // Round-14 fix pinned: connectedComponents' node roster and edge
     // loop share ONE cut frame, so the final label plan must root at
-    // materialized RDDs, not re-run the candidate-pair machinery (d07
-    // had 16 parquet scans before the fix). d09 keeps exactly its
-    // survivor-scoring scans of `documents` (3 in the printed tree);
-    // growth beyond that means the duplicated DAG crept back.
+    // materialized data — a cut RDD on the loop path, the driver's
+    // local frame on the driver finish — not re-run the candidate-pair
+    // machinery (d07 had 16 parquet scans before the fix). d09 keeps
+    // exactly its survivor-scoring scans of `documents` (3 in the
+    // printed tree); growth beyond that means the duplicated DAG crept
+    // back.
     val d07 = SparkEntry.queries("d07_dedup_clusters")(spark, dir)
       .queryExecution.executedPlan.toString
     assert(!d07.contains("Scan parquet"),
       "d07's label step re-reads parquet — the cut edge frame is not being reused")
-    assert(d07.contains("Scan ExistingRDD"), "d07 lost its lineage cuts")
+    assert(roots.exists(d07.contains), s"d07 roots at none of $roots:\n$d07")
     val d09 = SparkEntry.queries("d09_dedup_survivor")(spark, dir)
       .queryExecution.executedPlan.toString
     val d09Scans = "Scan parquet".r.findAllIn(d09).size
     assert(d09Scans <= 3,
       s"d09 grew parquet scans beyond its scoring reads ($d09Scans > 3)")
+  }
+
+  test("d07/d09 label step reads only cut RDDs — no duplicated parquet DAG") {
+    labelStepReadsOnlyCuts(Seq("Scan ExistingRDD", "LocalTableScan"))
+  }
+
+  test("d07/d09 label step on the star-round loop (threshold -1) reads only cut RDDs") {
+    withConf("spark.sql.autoBroadcastJoinThreshold", Some("-1")) {
+      labelStepReadsOnlyCuts(Seq("Scan ExistingRDD"))
+    }
   }
 
   test("q03 top-k is a per-partition heap, not a global sort") {

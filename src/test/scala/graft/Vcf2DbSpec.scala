@@ -229,21 +229,26 @@ class Vcf2DbSpec extends SparkSpec {
       "gt_alt_depths", "gt_quals", "gt_phred_ll_homref", "gt_phred_ll_het",
       "gt_phred_ll_homalt", "gt_phases")
     val conf = spark.sessionState.newHadoopConf()
+    // every column chunk of every parquet file under `table`
+    def footerColumns(table: String) = {
+      val files = new java.io.File(table).listFiles()
+        .filter(_.getName.endsWith(".parquet")).toSeq
+      assert(files.nonEmpty, s"no parquet files under $table")
+      files.flatMap { f =>
+        val reader = ParquetFileReader.open(HadoopInputFile.fromPath(new Path(f.toString), conf))
+        try reader.getFooter.getBlocks.asScala.flatMap(_.getColumns.asScala).toSeq
+        finally reader.close()
+      }
+    }
     // the default write (DbSink.writeParquet) and --sorted-output
     // (Scale.writeRangeSorted) alike
     Seq(0, 2).foreach { sorted =>
       val out = dir.resolve(s"db$sorted").toString
       Vcf2Db.run(spark, vcf.toString, None, out, sortedOutput = sorted)
-      val files = new java.io.File(s"$out/variants").listFiles()
-        .filter(_.getName.endsWith(".parquet")).toSeq
-      assert(files.nonEmpty)
-      val chunks = files.flatMap { f =>
-        val reader = ParquetFileReader.open(HadoopInputFile.fromPath(new Path(f.toString), conf))
-        try reader.getFooter.getBlocks.asScala.flatMap(_.getColumns.asScala).toSeq
-        finally reader.close()
-      }
+      val chunks = footerColumns(s"$out/variants")
       assert(chunks.nonEmpty, s"no row groups under $out")
-      blobCols.foreach { c =>
+      // vid and pos are unique per variant: plain like the blobs
+      (blobCols ++ Seq("vid", "pos")).foreach { c =>
         val cc = chunks.filter(_.getPath.toDotString == c)
         assert(cc.nonEmpty, s"$c missing from the footer")
         cc.foreach { m =>
@@ -256,6 +261,11 @@ class Vcf2DbSpec extends SparkSpec {
       assert(chrom.nonEmpty && chrom.forall(m =>
         m.hasDictionaryPage && m.getEncodings.asScala.exists(_.usesDictionary)),
         s"chrom should stay dictionary-encoded (sorted=$sorted)")
+      // the impacts table repeats pos once per transcript: it keeps its
+      // dictionary, like the string columns
+      val impactPos = footerColumns(s"$out/variant_impacts").filter(_.getPath.toDotString == "pos")
+      assert(impactPos.nonEmpty && impactPos.forall(_.hasDictionaryPage),
+        s"variant_impacts.pos should stay dictionary-encoded (sorted=$sorted)")
     }
   }
 
