@@ -1,8 +1,11 @@
 package graft
 
-import org.apache.spark.sql.{Column, DataFrame, SparkSession}
+import scala.jdk.CollectionConverters._
+
+import org.apache.spark.sql.{Column, DataFrame, Row, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.types.{IntegerType, StringType, StructField, StructType}
 
 import graft.functions.GraftFunctions.{snappyPack, snappyUnpack, zlibPack,
   zlibPackStr, zlibUnpack, zlibUnpackStr}
@@ -14,16 +17,18 @@ import graft.sources.{PedSource, VcfReader}
   * `variants` (typed INFO columns + genotype stats + worst impact
   * denormalized), `variant_impacts`, `samples`, and `vcf_header`.
   *
-  * Two scans of the VCF text and, unless `sortedOutput` asks for a range
-  * layout, no shuffle: the variants scan parses each record once,
-  * straight into Catalyst rows that already carry the record's own
-  * worst impact (VcfReader.forLoad); the impacts table is a second,
-  * site-only scan.
+  * One scan of the VCF text, one parse per record and no shuffle: the
+  * scan (VcfReader.forLoad) yields variants rows that already carry
+  * their record's worst impact, and the record's first alt row also
+  * carries the record's impacts rows. `DbSink.writeParquetDb` writes all
+  * four parquet tables from that scan in one job under one commit, at
+  * the scan's width.
   *
-  * Sink is the bounded-parallelism DbSink: parquet here (no JDBC
-  * driver jar in this container); swapping in `DbSink.writeJdbc`
-  * retargets the same job at sqlite/MySQL/PostgreSQL exactly like the
-  * reference's peewee backends.
+  * `jdbcUrl` retargets the same tables at a SQL database through
+  * `DbSink.writeJdbc` (sqlite/MySQL/PostgreSQL given their driver jar,
+  * exactly like the reference's peewee backends), and `sortedOutput`
+  * range-sorts the variants: both write one table at a time, the
+  * impacts from a second scan of the same shape.
   */
 object Vcf2Db {
 
@@ -95,15 +100,18 @@ object Vcf2Db {
         else df)
   }
 
-  /** @param sortedOutput when > 0, the variants table is written
+  /** @param writerPartitions the writer width of the table-at-a-time
+    *   writes: each JDBC table (its connection cap), and the tables
+    *   other than variants under `sortedOutput`. The default parquet
+    *   load writes at the scan's own width.
+    * @param sortedOutput when > 0, the variants table is written
     *   range-partitioned + sorted by (chrom, pos) into this many slabs
     *   (Scale.writeRangeSorted) instead of hash-partitioned — the
     *   layout region queries want: per-file key ranges are disjoint,
     *   so a chrom/pos predicate prunes whole files via parquet
     *   row-group min/max. Buy once at load time, win on every
     *   GraftDb.region query after.
-    */
-  /** @param jdbcUrl when set, every table writes through
+    * @param jdbcUrl when set, every table writes through
     *   [[DbSink.writeJdbc]] against this URL instead of parquet — the
     *   reference's actual product (a sqlite/MySQL/PG database via
     *   peewee). Multi-valued INFO arrays degrade to comma-joined TEXT
@@ -115,13 +123,14 @@ object Vcf2Db {
       expand: Seq[String] = Nil, blobCodec: String = "zlib",
       sortedOutput: Int = 0, jdbcUrl: Option[String] = None,
       jdbcBatchSize: Int = 10000, passOnly: Boolean = false): Unit = {
-    import spark.implicits._
-    // variants arrive with their worst impact already picked (when the
+    // one scan: variants arrive with their worst impact already picked
+    // and their record's impacts rows in a nested column (when the
     // header declares an annotation key). The reference's --passonly:
     // a record whose FILTER failed (anything but PASS or missing '.')
-    // yields no variants and no impacts, dropped in each table's parse —
-    // so no annotation of a dropped record can survive as an orphan.
-    val (header, denorm, impacts) = VcfReader.forLoad(spark, vcfPath, passOnly)
+    // yields no variants and no impacts, dropped in the parse — so no
+    // annotation of a dropped record can survive as an orphan.
+    val (header, scanned) = VcfReader.forLoad(spark, vcfPath, passOnly)
+    val nested = VcfReader.impactsColumn
     // the reference's --expand flag: selected per-sample arrays ALSO
     // materialize as one typed column per sample (gt-filter queries hit
     // plain columns, no blob decode), named <field>_<sample>. ONE
@@ -133,7 +142,7 @@ object Vcf2Db {
     // deduplicated so a repeated name can't fail the write late with a
     // duplicate-column error
     val expandNames = expand.distinct
-    val unknownExpand = expandNames.filterNot(denorm.columns.contains)
+    val unknownExpand = expandNames.filterNot(n => n != nested && scanned.columns.contains(n))
     require(unknownExpand.isEmpty,
       s"--expand names not in the variants schema: ${unknownExpand.mkString(", ")}")
     val expandCols = for {
@@ -141,13 +150,30 @@ object Vcf2Db {
       (name, i) <- header.samples.zipWithIndex
     } yield col(f).getItem(i).as(s"${f}_${graft.sources.VcfParser.sanitize(name)}")
     val expanded =
-      if (expandCols.isEmpty) denorm
-      else denorm.select(denorm.columns.map(col).toSeq ++ expandCols: _*)
-    val variantsOut = packGenotypeBlobs(expanded, blobCodec)
-    // one sink closure for both backends — the tables and their order
-    // are identical; only the target differs (parquet dir vs JDBC table)
-    val sink: (org.apache.spark.sql.DataFrame, String, Int) => Unit =
-      jdbcUrl match {
+      if (expandCols.isEmpty) scanned
+      else scanned.select(scanned.columns.map(c => scanned.col(s"`$c`")).toSeq ++ expandCols: _*)
+    val loaded = packGenotypeBlobs(expanded, blobCodec)
+    val samples = pedPath.map { p =>
+      val (schema, rows) = PedSource.parse(PedSource.lines(spark, p))
+      DbSink.LocalTable("samples", schema, rows)
+    }
+    // self-describing blob codec: a synthetic header line records which
+    // codec packed the blobs, so readers don't have to trust call-site
+    // discipline (a snappy db read as zlib fails deep inside a query)
+    val headerOut = DbSink.LocalTable("vcf_header",
+      StructType(Seq(StructField("line_no", IntegerType, nullable = false),
+        StructField("line", StringType))),
+      (header.rawLines :+ s"##graft_blob_codec=$blobCodec").zipWithIndex
+        .map { case (l, i) => Row(i + 1, l) })
+    val local = samples.toSeq :+ headerOut
+    val annotated = header.annKey.isDefined
+    if (jdbcUrl.isEmpty && sortedOutput <= 0)
+      DbSink.writeParquetDb(loaded, outDir, "variants",
+        if (annotated) Some(nested -> "variant_impacts") else None, local)
+    else {
+      // table at a time: JDBC caps its connections per table, and
+      // --sorted-output range-shuffles the variants
+      val sink: (DataFrame, String, Int) => Unit = jdbcUrl match {
         case Some(url) => (df, table, parts) =>
           DbSink.writeJdbc(DbSink.jdbcSafe(df),
             DbSink.JdbcConf(url = url, table = table,
@@ -156,24 +182,16 @@ object Vcf2Db {
         case None => (df, name, parts) =>
           DbSink.writeParquet(df, s"$outDir/$name", parts)
       }
-    if (sortedOutput > 0 && jdbcUrl.isEmpty)
-      graft.operators.Scale.writeRangeSorted(variantsOut,
-        s"$outDir/variants", sortedOutput, col("chrom"), col("pos"))
-    else
-      sink(variantsOut, "variants", writerPartitions)
-    if (header.annKey.isDefined)
-      sink(impacts, "variant_impacts", writerPartitions)
-    pedPath.foreach { p =>
-      sink(PedSource.fromPath(spark, p), "samples", 1)
+      val variantsOut = loaded.drop(nested)
+      if (jdbcUrl.isEmpty)
+        graft.operators.Scale.writeRangeSorted(variantsOut,
+          s"$outDir/variants", sortedOutput, col("chrom"), col("pos"))
+      else
+        sink(variantsOut, "variants", writerPartitions)
+      if (annotated)
+        sink(VcfReader.impactsOf(header, scanned), "variant_impacts", writerPartitions)
+      local.foreach(t => sink(spark.createDataFrame(t.rows.asJava, t.schema), t.name, 1))
     }
-    // self-describing blob codec: a synthetic header line records which
-    // codec packed the blobs, so readers don't have to trust call-site
-    // discipline (a snappy db read as zlib fails deep inside a query)
-    val headerOut = header.rawLines :+ s"##graft_blob_codec=$blobCodec"
-    sink(
-      headerOut.zipWithIndex.map { case (l, i) => (i + 1, l) }
-        .toDF("line_no", "line"),
-      "vcf_header", 1)
   }
 
   private val usage =

@@ -46,15 +46,18 @@ object PedSource {
     * BedSource/VcfReader use, and for the same reason: a local-only or
     * compression-blind read silently parses garbage.
     */
-  def fromPath(spark: SparkSession, path: String): DataFrame = {
+  def fromPath(spark: SparkSession, path: String): DataFrame =
+    fromLines(spark, lines(spark, path))
+
+  /** The lines of a PED file, read on the driver. */
+  def lines(spark: SparkSession, path: String): Vector[String] = {
     val hp = new org.apache.hadoop.fs.Path(path)
     val fs = hp.getFileSystem(spark.sessionState.newHadoopConf())
     val in = fs.open(hp)
     try {
       val reader = new java.io.BufferedReader(new java.io.InputStreamReader(
         VcfIo.maybeGunzip(path, in), "UTF-8"))
-      fromLines(spark,
-        Iterator.continually(reader.readLine()).takeWhile(_ != null).toVector)
+      Iterator.continually(reader.readLine()).takeWhile(_ != null).toVector
     } finally in.close()
   }
 }

@@ -7,6 +7,7 @@ import scala.jdk.CollectionConverters._
 
 import org.apache.hadoop.conf.Configuration
 import org.apache.hadoop.fs.{FileSystem, Path}
+import org.apache.spark.broadcast.Broadcast
 import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.catalyst.InternalRow
 import org.apache.spark.sql.connector.catalog.{SupportsRead, Table, TableCapability, TableProvider}
@@ -298,15 +299,18 @@ private[sources] class VcfScanBuilder(paths: Seq[String], header: Vector[String]
     val spark = SparkSession.active
     new VcfScan(paths, header, required, permissive, splitSize,
       SplitRule.of(spark), sorted, RegionFilter.compile(pushed.toSeq),
-      new SerializableConfiguration(spark.sessionState.newHadoopConf()),
-      rows, passOnly)
+      spark.sessionState.newHadoopConf(), rows, passOnly)
   }
 }
 
+/** `hadoopConf` stays on the driver: planning reads it, and the reader
+  * factory gets it as one broadcast, as Spark's file scans do, instead of
+  * a serialized copy inside every task.
+  */
 private[sources] class VcfScan(paths: Seq[String], header: Vector[String],
     required: StructType, permissive: Boolean,
     splitSize: Option[Long], rule: SplitRule, sorted: Boolean, region: RegionFilter,
-    conf: SerializableConfiguration, rows: VcfReader.LineRows, passOnly: Boolean)
+    hadoopConf: Configuration, rows: VcfReader.LineRows, passOnly: Boolean)
     extends Scan with Batch {
   override def readSchema(): StructType = required
   override def toBatch: Batch = this
@@ -356,7 +360,7 @@ private[sources] class VcfScan(paths: Seq[String], header: Vector[String],
     */
   private def firstShardKey(p: String): Option[(String, Long)] = {
     val hp = new Path(p)
-    val fs = FileSystem.get(hp.toUri, conf.value)
+    val fs = FileSystem.get(hp.toUri, hadoopConf)
     val in = fs.open(hp)
     try {
       val reader = new java.io.BufferedReader(new java.io.InputStreamReader(
@@ -529,7 +533,7 @@ private[sources] class VcfScan(paths: Seq[String], header: Vector[String],
   override def planInputPartitions(): Array[InputPartition] = {
     val files = pruneShards(paths).map { p =>
       val hp = new Path(p)
-      val fs = FileSystem.get(hp.toUri, conf.value)
+      val fs = FileSystem.get(hp.toUri, hadoopConf)
       (p, fs, hp, fs.getFileStatus(hp).getLen)
     }
     // split size: the explicit option as given, else Spark's file-source
@@ -558,7 +562,7 @@ private[sources] class VcfScan(paths: Seq[String], header: Vector[String],
         if (splits.length <= 1 || splits.head.indexed) splits
         else {
           val hp = new Path(p)
-          val fs = FileSystem.get(hp.toUri, conf.value)
+          val fs = FileSystem.get(hp.toUri, hadoopConf)
           val ordered = splits.sortBy(_.start)
           val bgzf = ordered.head.bgzf
           val len = if (bgzf) fs.getFileStatus(hp).getLen else 0L
@@ -586,7 +590,8 @@ private[sources] class VcfScan(paths: Seq[String], header: Vector[String],
   }
 
   override def createReaderFactory(): PartitionReaderFactory =
-    new VcfReaderFactory(header, required.fieldNames, permissive, region, conf,
+    new VcfReaderFactory(header, required.fieldNames, permissive, region,
+      SparkSession.active.sparkContext.broadcast(new SerializableConfiguration(hadoopConf)),
       rows, passOnly)
 }
 
@@ -696,19 +701,19 @@ private[sources] object VcfIo {
 
 private[sources] class VcfReaderFactory(headerLines: Vector[String],
     requiredNames: Array[String], permissive: Boolean,
-    region: RegionFilter, conf: SerializableConfiguration,
+    region: RegionFilter, conf: Broadcast[SerializableConfiguration],
     rows: VcfReader.LineRows, passOnly: Boolean)
     extends PartitionReaderFactory {
   override def createReader(partition: InputPartition): PartitionReader[InternalRow] = {
     val p = partition.asInstanceOf[VcfInputPartition]
     new VcfPartitionReader(p, headerLines, requiredNames,
-      permissive, region, conf, rows, passOnly)
+      permissive, region, conf.value.value, rows, passOnly)
   }
 }
 
 private[sources] class VcfPartitionReader(part: VcfInputPartition,
     headerLines: Vector[String], requiredNames: Array[String], permissive: Boolean,
-    region: RegionFilter, conf: SerializableConfiguration,
+    region: RegionFilter, conf: Configuration,
     rows: VcfReader.LineRows, passOnly: Boolean)
     extends PartitionReader[InternalRow] {
 
@@ -723,7 +728,7 @@ private[sources] class VcfPartitionReader(part: VcfInputPartition,
   // block reader (splittable compressed shards; see BgzfLineReader)
   private val stream: Either[CountingLineReader, BgzfLineReader] = {
     val hp = new Path(path)
-    val fs = FileSystem.get(hp.toUri, conf.value)
+    val fs = FileSystem.get(hp.toUri, conf)
     val raw = fs.open(hp)
     if (part.bgzf)
       Right(new BgzfLineReader(raw, part.start, fs.getFileStatus(hp).getLen))

@@ -111,21 +111,39 @@ object VcfReader {
   def loadSchema(h: Header): StructType =
     StructType(variantSchema(h).fields ++ worstImpactFields)
 
+  /** The load shape's impacts column: an array of `impactSchema` rows.
+    * Its `#` keeps it apart from every column `sanitize` can name.
+    */
+  val impactsColumn = "impacts#"
+
   /** What each body line of a scan yields. */
   private[graft] sealed trait LineRows extends Serializable
   private[graft] object LineRows {
     /** One decomposed variant per (record, alt): `variantSchema`. */
     case object Variants extends LineRows
-    /** Variants carrying their record's worst impact: `loadSchema`. */
-    case object VariantsWorstImpact extends LineRows
-    /** One row per (annotation entry, alt it names): `impactSchema`. */
+    /** Vcf2Db's one scan. With an annotation key in the header, the
+      * `loadSchema` variants plus [[impactsColumn]]: the record's first
+      * alt row carries all of the record's impacts rows there, in CSQ
+      * order, and its other alt rows carry null. Without one, the
+      * `variantSchema` variants.
+      */
+    case object Load extends LineRows
+    /** One row per (annotation entry, alt it names): `impactSchema`,
+      * parsed from the site alone (columns 1–8) — `fromPath`'s impacts.
+      * Read through [[impactsColumn]] instead, the same table costs about
+      * 1.2× the executor CPU (a 15 MB, 40k-impact cohort, warm): the
+      * nested rows are copied into the scan's unsafe rows and out again
+      * by the explode.
+      */
     case object Impacts extends LineRows
   }
 
   def schemaOf(h: Header, rows: LineRows): StructType = rows match {
-    case LineRows.Variants => variantSchema(h)
-    case LineRows.VariantsWorstImpact => loadSchema(h)
+    case LineRows.Load if h.annKey.isDefined =>
+      StructType(loadSchema(h).fields :+ StructField(impactsColumn,
+        ArrayType(impactSchema(h), containsNull = false)))
     case LineRows.Impacts => impactSchema(h)
+    case _ => variantSchema(h)
   }
 
   /** Per-alt Catalyst value of an INFO field (post-decompose semantics). */
@@ -190,11 +208,13 @@ object VcfReader {
     * only the `columns` asked for, in that order. A pruned scan of a
     * 100-INFO, 1000-sample VCF parses 2 columns, not the whole record;
     * an impacts scan parses the site (columns 1–8) and never splits the
-    * sample columns. Values go straight into InternalRows (UTF8String,
-    * unsafe primitive arrays): no external Row and no per-row converter.
-    * With `passOnly` a record whose FILTER failed (anything but PASS or
-    * missing) yields no rows — vcf2db's --passonly, applied inside each
-    * table's own parse.
+    * sample columns. In the load shape the annotation value is split
+    * once per record, for the worst-impact pick and the impacts rows
+    * alike. Values go straight into InternalRows (UTF8String, unsafe
+    * primitive arrays): no external Row and no per-row converter. With
+    * `passOnly` a record whose FILTER failed (anything but PASS or
+    * missing) yields no rows, so neither its variants nor its impacts —
+    * vcf2db's --passonly.
     *
     * Every scan of graft's batch reads parses through this class: the
     * `format("vcf")` partition reader, `fromPath`, Vcf2Db's load and
@@ -222,8 +242,10 @@ object VcfReader {
       "GQ" -> needed("gt_quals"),
       "AD" -> (needed("gt_ref_depths") || needed("gt_alt_depths")),
       "PL" -> needPl).collect { case (k, true) => k }.toSet
-    private val needWorst = rows == LineRows.VariantsWorstImpact &&
+    private val annotated = rows == LineRows.Load && h.annKey.isDefined
+    private val needWorst = annotated &&
       Seq("gene", "impact", "impact_severity", "severity_rank").exists(needed)
+    private val needImpacts = annotated && needed(impactsColumn)
 
     private val annFields = h.annFields
     private val alleleIx = annFields.indexWhere(f => f == "Allele" || f == "ALLELE")
@@ -239,7 +261,9 @@ object VcfReader {
     private val impactIx = firstCol("consequence", "annotation")
 
     def apply(line: String): Array[InternalRow] = rows match {
-      case LineRows.Impacts => impactRows(parseSite(line))
+      case LineRows.Impacts =>
+        val rec = parseSite(line)
+        if (!passes(rec)) Array.empty else impactValues(rec, entries(rec)).map(row)
       case _ =>
         val (rec, samplesFrom) = parseRecordAt(line)
         variantRows(rec, line, samplesFrom)
@@ -275,21 +299,20 @@ object VcfReader {
     private def names(e: AnnEntry, ref: String, alt: String): Boolean =
       alleleIx < 0 || e.vals(alleleIx) == alt || e.vals(alleleIx) == vepAllele(ref, alt)
 
-    /** CSQ/ANN/BCSQ expansion: one row per (entry, alt it names), in
-      * entry order — the reference's `variant_impacts` table.
+    /** CSQ/ANN/BCSQ expansion: the values of one `impactSchema` row per
+      * (entry, alt it names), in entry order — the reference's
+      * `variant_impacts` table.
       */
-    private def impactRows(rec: Record): Array[InternalRow] =
-      if (!passes(rec)) Array.empty
-      else {
-        val chrom = utf8(rec.chrom)
-        val ref = utf8(rec.ref)
-        entries(rec).flatMap { e =>
-          rec.alts.filter(names(e, rec.ref, _)).map { alt =>
-            row(Array[Any](chrom, rec.pos, ref, utf8(alt)) ++
-              e.vals.map(utf8) ++ Array[Any](e.rank, utf8(e.severity)))
-          }
+    private def impactValues(rec: Record, es: Array[AnnEntry]): Array[Array[Any]] = {
+      val chrom = utf8(rec.chrom)
+      val ref = utf8(rec.ref)
+      es.flatMap { e =>
+        rec.alts.filter(names(e, rec.ref, _)).map { alt =>
+          Array[Any](chrom, rec.pos, ref, utf8(alt)) ++
+            e.vals.map(utf8) ++ Array[Any](e.rank, utf8(e.severity))
         }
       }
+    }
 
     /** The alt's worst entry: least (severity rank, impact), ties to the
       * earlier entry — the order `Vcf2Db.denormalizeWorstImpact` sorts
@@ -340,7 +363,7 @@ object VcfReader {
       val quals = if (needed("gt_quals")) intArray(fields.gq) else null
       val refDepths = perSample("gt_ref_depths")(fields.adAt(_, 0))
       val plHomRef = perSample("gt_phred_ll_homref")(fields.plAt(_, 0))
-      val annEntries = if (needWorst) entries(rec) else null
+      val annEntries = if (needWorst || needImpacts) entries(rec) else null
       val chrom = utf8(rec.chrom)
       val vid = rec.id.map(utf8).orNull
       val ref = utf8(rec.ref)
@@ -368,9 +391,12 @@ object VcfReader {
           Array[Any](if (needed("gt_types")) intArray(gtTypes) else null,
             gts, depths, refDepths, altDepths, quals, plHomRef, plHet, plHomAlt,
             phases) ++
-          (if (rows != LineRows.VariantsWorstImpact) Array.empty[Any]
-           else if (needWorst) worst(annEntries, rec.ref, alt)
-           else Array[Any](null, null, null, null)))
+          (if (!annotated) Array.empty[Any]
+           else (if (needWorst) worst(annEntries, rec.ref, alt)
+             else Array[Any](null, null, null, null)) :+
+             (if (needImpacts && i0 == 0) new GenericArrayData(
+               impactValues(rec, annEntries).map(v => new GenericInternalRow(v): Any))
+              else null)))
       }.toArray
     }
   }
@@ -432,18 +458,23 @@ object VcfReader {
     spark.createDataFrame(spark.sparkContext.emptyRDD[Row], impactSchema(h))
 
   /** Reads a VCF from literal lines (tests / fixtures): the lines are
-    * already on the driver, so they parse there into a local relation.
+    * already on the driver, so they parse there into local relations.
+    * The impacts are the load shape's [[impactsColumn]], flattened: the
+    * rows Vcf2Db writes, so every fixture-driven query reads them.
     */
   def fromLines(spark: SparkSession, lines: Seq[String]): (Header, DataFrame, DataFrame) = {
     val h = parseHeader(lines)
     val body = lines.filter(isBodyLine)
-    def frame(rows: LineRows): DataFrame = {
-      val schema = schemaOf(h, rows)
-      val parse = new LineParser(h, rows, schema.fieldNames.toSeq)
-      GraftFrames.ofLocalRows(spark, schema, body.flatMap(parse(_)))
-    }
-    (h, frame(LineRows.Variants),
-      if (h.annKey.isDefined) frame(LineRows.Impacts) else noImpacts(spark, h))
+    val variants = variantSchema(h)
+    val parse = new LineParser(h, LineRows.Variants, variants.fieldNames.toSeq)
+    (h, GraftFrames.ofLocalRows(spark, variants, body.flatMap(parse(_))),
+      if (h.annKey.isEmpty) noImpacts(spark, h)
+      else {
+        val impacts = impactSchema(h)
+        val nested = new LineParser(h, LineRows.Load, Seq(impactsColumn))
+        GraftFrames.ofLocalRows(spark, impacts, body.flatMap(nested(_)).flatMap(r =>
+          if (r.isNullAt(0)) Nil else r.getArray(0).toSeq[InternalRow](impacts)))
+      })
   }
 
   /** Reads a VCF path (a file, a directory of shards or a glob) through
@@ -453,29 +484,41 @@ object VcfReader {
     * the impacts table — empty when the header declares no annotation
     * key. Each table is its own scan of the text.
     */
-  def fromPath(spark: SparkSession, path: String): (Header, DataFrame, DataFrame) =
-    read(spark, path, LineRows.Variants, passOnly = false)
+  def fromPath(spark: SparkSession, path: String): (Header, DataFrame, DataFrame) = {
+    val (h, frame) = scan(spark, path, passOnly = false)
+    (h, frame(LineRows.Variants),
+      if (h.annKey.isEmpty) noImpacts(spark, h) else frame(LineRows.Impacts))
+  }
 
-  /** Vcf2Db's read: `fromPath`, but the variants carry their record's
-    * worst impact (`loadSchema`) when the header declares an annotation
-    * key, and with `passOnly` a record whose FILTER failed yields no
-    * variants and no impacts.
+  /** Vcf2Db's read: one scan of the load shape ([[LineRows.Load]]). Its
+    * variants carry their record's worst impact and, in
+    * [[impactsColumn]], the record's impacts rows, when the header
+    * declares an annotation key. With `passOnly` a record whose FILTER
+    * failed yields no rows at all.
     */
-  def forLoad(spark: SparkSession, path: String,
-      passOnly: Boolean): (Header, DataFrame, DataFrame) =
-    read(spark, path, LineRows.VariantsWorstImpact, passOnly)
+  def forLoad(spark: SparkSession, path: String, passOnly: Boolean): (Header, DataFrame) = {
+    val (h, frame) = scan(spark, path, passOnly)
+    (h, frame(LineRows.Load))
+  }
 
-  private def read(spark: SparkSession, path: String, variantRows: LineRows,
-      passOnly: Boolean): (Header, DataFrame, DataFrame) = {
+  /** The impacts table of a load-shape frame: its [[impactsColumn]]
+    * exploded, so a scan reads that column alone. Empty when the header
+    * declares no annotation key.
+    */
+  def impactsOf(h: Header, load: DataFrame): DataFrame =
+    if (h.annKey.isEmpty) noImpacts(load.sparkSession, h)
+    else load.select(org.apache.spark.sql.functions.inline(
+      org.apache.spark.sql.functions.col(s"`$impactsColumn`")))
+
+  private def scan(spark: SparkSession, path: String,
+      passOnly: Boolean): (Header, LineRows => DataFrame) = {
     val (files, headerLines) =
       VcfDataSource.resolve(path, spark.sessionState.newHadoopConf())
     require(headerLines.exists(_.startsWith("#CHROM")),
       s"$path: no #CHROM header line — not a VCF (or header not at file start)")
     val h = parseHeader(headerLines)
-    def frame(rows: LineRows): DataFrame = GraftFrames.ofTable(spark,
-      new VcfTable(files, headerLines, schemaOf(h, rows), Some(path), rows, passOnly))
-    if (h.annKey.isEmpty) (h, frame(LineRows.Variants), noImpacts(spark, h))
-    else (h, frame(variantRows), frame(LineRows.Impacts))
+    (h, rows => GraftFrames.ofTable(spark,
+      new VcfTable(files, headerLines, schemaOf(h, rows), Some(path), rows, passOnly)))
   }
 
   // ------------------------------------------------------ cohort merge

@@ -800,12 +800,169 @@ class Vcf2DbSpec extends SparkSpec {
     val vcf = dir.resolve("in.vcf").toString
     Files.writeString(dir.resolve("in.vcf"), VcfFixture.lines.mkString("\n") + "\n")
     val inRow = graft.sources.VcfReader.forLoad(spark, vcf, passOnly = false)._2
+      .drop(graft.sources.VcfReader.impactsColumn)
     val (_, v, i) = graft.sources.VcfReader.fromPath(spark, vcf)
     val joined = Vcf2Db.denormalizeWorstImpact(v, i)
     assert(inRow.schema == joined.schema)
     assert(inRow.count() == 5)
     assert(inRow.exceptAll(joined).count() == 0)
     assert(joined.exceptAll(inRow).count() == 0)
+  }
+
+  private val ped4 = "#family_id sample_id paternal_id maternal_id sex phenotype\n" +
+    "fam1 s1 -9 -9 1 2\nfam1 s2 -9 -9 2 1\nfam1 s3 s1 s2 1 1\nfam1 s4 s1 s2 2 2\n"
+
+  /** The fixture's records `copies` times over, shifted in pos. */
+  private def replicated(copies: Int): Vector[String] = {
+    val (head, body) = VcfFixture.lines.partition(_.startsWith("#"))
+    head ++ (0 until copies).flatMap(k => body.map { l =>
+      val f = l.split("\t", -1)
+      f.updated(1, (f(1).toLong + k * 1000L).toString).mkString("\t")
+    })
+  }
+
+  /** Parquet files of one table of a database directory. */
+  private def parquetFiles(table: String): Seq[java.io.File] =
+    Option(new java.io.File(table).listFiles()).toSeq.flatten
+      .filter(_.getName.endsWith(".parquet"))
+
+  /** The distinct footer schemas of a table's files: parquet's own
+    * message type (required/optional included) and the Spark schema
+    * stored beside it.
+    */
+  private def footerSchemas(table: String): Set[(String, String)] = {
+    import org.apache.hadoop.fs.Path
+    import org.apache.parquet.hadoop.ParquetFileReader
+    import org.apache.parquet.hadoop.util.HadoopInputFile
+    val conf = spark.sessionState.newHadoopConf()
+    parquetFiles(table).map { f =>
+      val reader = ParquetFileReader.open(HadoopInputFile.fromPath(new Path(f.toString), conf))
+      try {
+        val meta = reader.getFooter.getFileMetaData
+        (meta.getSchema.toString,
+          meta.getKeyValueMetaData.get("org.apache.spark.sql.parquet.row.metadata"))
+      } finally reader.close()
+    }.toSet
+  }
+
+  /** Both databases hold the same tables, with the same footer schemas
+    * and the same row multisets.
+    */
+  private def assertSameDb(a: String, b: String, label: String): Unit = {
+    val tables = Seq("variants", "variant_impacts", "samples", "vcf_header")
+    def present(d: String) = tables.filter(t => new java.io.File(s"$d/$t").isDirectory)
+    assert(present(a) == present(b), s"$label: tables")
+    present(a).foreach { t =>
+      assert(footerSchemas(s"$a/$t") == footerSchemas(s"$b/$t"), s"$label: $t footer schema")
+      val (x, y) = (spark.read.parquet(s"$a/$t"), spark.read.parquet(s"$b/$t"))
+      assert(x.schema == y.schema, s"$label: $t schema")
+      assert(x.count() == y.count(), s"$label: $t rows")
+      assert(x.exceptAll(y).isEmpty && y.exceptAll(x).isEmpty, s"$label: $t row multiset")
+    }
+  }
+
+  test("one-job parquet load writes the same tables as the table-at-a-time path") {
+    val dir = Files.createTempDirectory("vcf2db_onejob")
+    def input(name: String, lines: Seq[String]) = {
+      val f = dir.resolve(name)
+      Files.writeString(f, lines.mkString("\n") + "\n")
+      f.toString
+    }
+    val fixture = input("fixture.vcf", VcfFixture.lines)
+    val ped = Some(input("in.ped", Seq(ped4)))
+    val plain = input("plain.vcf", Vector(
+      "##fileformat=VCFv4.2",
+      "##INFO=<ID=DP,Number=1,Type=Integer,Description=\"Depth\">",
+      "##FORMAT=<ID=GT,Number=1,Type=String,Description=\"Genotype\">",
+      "#CHROM\tPOS\tID\tREF\tALT\tQUAL\tFILTER\tINFO\tFORMAT\ta\tb",
+      "1\t5\t.\tA\tG\t.\tPASS\tDP=3\tGT\t0/1\t1/1"))
+    val headerOnly = input("header.vcf", VcfFixture.lines.filter(_.startsWith("#")))
+    val many = input("many.vcf", replicated(200))
+    case class Case(label: String, vcf: String, ped: Option[String] = None,
+        passOnly: Boolean = false, expand: Seq[String] = Nil)
+    val cases = Seq(
+      Case("with PED", fixture, ped),
+      Case("without PED", fixture),
+      Case("--passonly", fixture, ped, passOnly = true),
+      Case("--expand", fixture, expand = Seq("gt_types", "gt_depths")),
+      Case("unannotated", plain),
+      Case("header only", headerOnly, ped),
+      Case("multi-split", many, ped))
+    withConf("spark.sql.files.maxPartitionBytes", Some("16384")) {
+      cases.zipWithIndex.foreach { case (c, i) =>
+        val oneJob = dir.resolve(s"one$i").toString
+        val perTable = dir.resolve(s"per$i").toString
+        Seq(oneJob -> 0, perTable -> 2).foreach { case (out, sorted) =>
+          Vcf2Db.run(spark, c.vcf, c.ped, out, expand = c.expand,
+            sortedOutput = sorted, passOnly = c.passOnly)
+        }
+        assertSameDb(oneJob, perTable, c.label)
+      }
+    }
+    val unannotated = dir.resolve(s"one${cases.indexWhere(_.label == "unannotated")}")
+    assert(!Files.exists(unannotated.resolve("variant_impacts")))
+    // a header-only VCF still writes every table, each with its schema
+    val empty = dir.resolve(s"one${cases.indexWhere(_.label == "header only")}").toString
+    Seq("variants", "variant_impacts", "samples", "vcf_header").foreach { t =>
+      assert(parquetFiles(s"$empty/$t").nonEmpty, s"header only: no $t file")
+    }
+    assert(GraftDb.variants(spark, empty).isEmpty)
+    assert(GraftDb.impacts(spark, empty).columns.contains("symbol"))
+    assert(GraftDb.samples(spark, empty).count() == 4)
+  }
+
+  test("one-job parquet load: one Spark job, as many write tasks as scan splits") {
+    val dir = Files.createTempDirectory("vcf2db_width")
+    val vcf = dir.resolve("in.vcf")
+    Files.writeString(vcf, replicated(200).mkString("\n") + "\n")
+    val ped = dir.resolve("in.ped")
+    Files.writeString(ped, ped4)
+    withConf("spark.sql.files.maxPartitionBytes", Some("8192")) {
+      val splits = graft.sources.VcfReader.forLoad(spark, vcf.toString, passOnly = false)
+        ._2.queryExecution.toRdd.getNumPartitions
+      assert(splits > 8, s"want more splits than the default writerPartitions, got $splits")
+      Seq(1, 8).foreach { width =>
+        val tasks = new java.util.concurrent.ConcurrentHashMap[Int, Int]()
+        val listener = new org.apache.spark.scheduler.SparkListener {
+          override def onTaskEnd(e: org.apache.spark.scheduler.SparkListenerTaskEnd): Unit =
+            tasks.merge(e.stageId, 1, _ + _)
+        }
+        spark.sparkContext.addSparkListener(listener)
+        val out = dir.resolve(s"db$width").toString
+        val (_, jobs) = try countingJobs(
+          Vcf2Db.run(spark, vcf.toString, Some(ped.toString), out, writerPartitions = width))
+        finally spark.sparkContext.removeSparkListener(listener)
+        assert(jobs == 1, s"writerPartitions=$width")
+        assert(tasks.size == 1 && tasks.values.iterator.next() == splits,
+          s"writerPartitions=$width: tasks per stage $tasks, scan splits $splits")
+        assert(GraftDb.variants(spark, out).count() == 1000)
+        assert(GraftDb.impacts(spark, out).count() == 1000)
+        // the only commit marker is the database's own
+        assert(Files.exists(dir.resolve(s"db$width/_SUCCESS")))
+      }
+    }
+  }
+
+  test("one-job parquet load: a failing task aborts the job and leaves no _temporary") {
+    val dir = Files.createTempDirectory("vcf2db_abort")
+    val vcf = dir.resolve("in.vcf")
+    // a malformed POS past the first records: the task fails after it
+    // has opened its files
+    val lines = replicated(20)
+    val bad = lines.indices.filterNot(i => lines(i).startsWith("#"))(50)
+    Files.writeString(vcf, lines.updated(bad, lines(bad).replaceFirst("\t\\d+\t", "\tx\t"))
+      .mkString("\n") + "\n")
+    val ok = dir.resolve("ok.vcf")
+    Files.writeString(ok, VcfFixture.lines.mkString("\n") + "\n")
+    val out = dir.resolve("db")
+    // an earlier database in the same place is replaced, never mixed in
+    Vcf2Db.run(spark, ok.toString, None, out.toString)
+    intercept[org.apache.spark.SparkException] {
+      Vcf2Db.run(spark, vcf.toString, None, out.toString)
+    }
+    assert(!Files.exists(out.resolve("_temporary")))
+    Seq("variants", "variant_impacts", "vcf_header").foreach(t =>
+      assert(!Files.exists(out.resolve(t)), s"$t survived the aborted load"))
   }
 
   test("amendSamples replaces the stored PED, rejects a non-covering one") {
