@@ -52,34 +52,32 @@ object Graft {
     df
   }
 
-  /** `export`: one line per variant in the requested format — e52
-    * (VCF), e54 (JSON), e49 (TPED) line builders over the loaded
-    * database (TPED expands genotype blobs; the text formats read the
-    * flat columns only).
+  /** `export`: one line per variant in the requested format — VCF
+    * through the `format("vcf")` line rules under the stored header
+    * (sites only: no genotype columns), e54 (JSON) and e49 (TPED) line
+    * builders over the loaded database (TPED expands genotype blobs;
+    * the text formats read the flat columns only).
     */
   def export(spark: SparkSession, db: String, format: String,
       region: Option[String] = None): DataFrame = {
     def regioned(v: DataFrame) = region.fold(v)(GraftDb.region(v, _))
-    val lines = format match {
-      case "vcf" => operators.Stats.vcfExportLines(
-        regioned(GraftDb.variants(spark, db)))
-      case "json" => operators.Stats.jsonExportLines(
-        regioned(GraftDb.variants(spark, db)))
-      case "tped" => operators.Stats.tpedExportLines(
-        regioned(GraftDb.expandGenotypes(spark, db)))
-      case other => throw new IllegalArgumentException(
-        s"unknown export format '$other'\n$usage")
-    }
     format match {
+      case "vcf" =>
+        sources.VcfLineAssembler.lines(regioned(GraftDb.variants(spark, db)).drop("gt_types"),
+          GraftDb.storedHeader(spark, db))
+          .orderBy(col("chrom"), col("pos"), col("alt")).select(col("line"))
+      case "json" =>
+        operators.Stats.jsonExportLines(regioned(GraftDb.variants(spark, db)))
+          .orderBy(col("chrom"), col("pos"), col("alt"))
+          .select(col("json_line").as("line"))
       case "tped" =>
-        lines.orderBy(col("chrom"), col("pos"), col("genotypes"))
+        operators.Stats.tpedExportLines(regioned(GraftDb.expandGenotypes(spark, db)))
+          .orderBy(col("chrom"), col("pos"), col("genotypes"))
           .select(concat_ws("\t", col("chrom"), col("snp_id"),
             col("cm").cast("string"), col("pos").cast("string"),
             col("genotypes")).as("line"))
-      case _ =>
-        lines.orderBy(col("chrom"), col("pos"), col("alt"))
-          .select(col(if (format == "vcf") "vcf_line" else "json_line")
-            .as("line"))
+      case other => throw new IllegalArgumentException(
+        s"unknown export format '$other'\n$usage")
     }
   }
 
@@ -91,28 +89,10 @@ object Graft {
       case "sample-qc" => GraftDb.sampleQc(spark, db)
       case "roh" => GraftDb.roh(spark, db)
       case "mendel-summary" => GraftDb.mendelSummary(spark, db)
-      case "db-info" => dbInfo(spark, db)
+      case "db-info" => GraftDb.dbInfo(spark, db)
       case other => throw new IllegalArgumentException(
         s"unknown stats tool '$other'\n$usage")
     }
-
-  /** gemini `db_info` over a loaded database: table/column/ordinal
-    * from parquet FOOTERS only (e55's catalog move on the db layout —
-    * driver-side, no data scan).
-    */
-  def dbInfo(spark: SparkSession, db: String): DataFrame = {
-    import spark.implicits._
-    val fs = org.apache.hadoop.fs.FileSystem.get(
-      new java.net.URI(db), spark.sparkContext.hadoopConfiguration)
-    val tables = fs.listStatus(new org.apache.hadoop.fs.Path(db))
-      .filter(_.isDirectory).map(_.getPath.getName).sorted
-      .filterNot(_.startsWith("_"))
-    tables.flatMap { t =>
-      spark.read.parquet(s"$db/$t").schema.fields.toSeq
-        .zipWithIndex.map { case (f, i) => (t, f.name, i + 1) }
-    }.toSeq.toDF("table_name", "column_name", "ordinal")
-      .orderBy($"table_name", $"ordinal")
-  }
 
   /** Stdout TSV with an explicit cap — the CLI never collects an
     * unbounded corpus to the driver; `--out` is the scale path.

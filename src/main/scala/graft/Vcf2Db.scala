@@ -10,7 +10,7 @@ import org.apache.spark.sql.types.{IntegerType, StringType, StructField, StructT
 import graft.functions.GraftFunctions.{snappyPack, snappyUnpack, zlibPack,
   zlibPackStr, zlibUnpack, zlibUnpackStr}
 import graft.sinks.DbSink
-import graft.sources.{PedSource, VcfReader}
+import graft.sources.{PedSource, VcfLineAssembler, VcfReader}
 
 /** The reference's product surface as one Spark job:
   * `vcf2db VCF [PED] OUT` → a queryable database of
@@ -22,13 +22,12 @@ import graft.sources.{PedSource, VcfReader}
   * their record's worst impact, and the record's first alt row also
   * carries the record's impacts rows. `DbSink.writeParquetDb` writes all
   * four parquet tables from that scan in one job under one commit, at
-  * the scan's width.
+  * the scan's width, or range-sorted first under `sortedOutput`.
   *
   * `jdbcUrl` retargets the same tables at a SQL database through
   * `DbSink.writeJdbc` (sqlite/MySQL/PostgreSQL given their driver jar,
-  * exactly like the reference's peewee backends), and `sortedOutput`
-  * range-sorts the variants: both write one table at a time, the
-  * impacts from a second scan of the same shape.
+  * exactly like the reference's peewee backends): one table at a time,
+  * the impacts from a second scan of the same shape.
   */
 object Vcf2Db {
 
@@ -100,17 +99,15 @@ object Vcf2Db {
         else df)
   }
 
-  /** @param writerPartitions the writer width of the table-at-a-time
-    *   writes: each JDBC table (its connection cap), and the tables
-    *   other than variants under `sortedOutput`. The default parquet
-    *   load writes at the scan's own width.
-    * @param sortedOutput when > 0, the variants table is written
-    *   range-partitioned + sorted by (chrom, pos) into this many slabs
-    *   (Scale.writeRangeSorted) instead of hash-partitioned — the
-    *   layout region queries want: per-file key ranges are disjoint,
-    *   so a chrom/pos predicate prunes whole files via parquet
-    *   row-group min/max. Buy once at load time, win on every
-    *   GraftDb.region query after.
+  /** @param writerPartitions the writer width of each JDBC table (its
+    *   connection cap). The parquet load writes at the scan's own width.
+    * @param sortedOutput when > 0, the load's rows are range-partitioned
+    *   on (chrom, pos) into this many slabs and sorted within each
+    *   before the one-job write, so the variants (and impacts) files
+    *   cover disjoint key ranges — the layout region queries want: a
+    *   chrom/pos predicate prunes whole files via parquet row-group
+    *   min/max. Buy once at load time, win on every GraftDb.region
+    *   query after.
     * @param jdbcUrl when set, every table writes through
     *   [[DbSink.writeJdbc]] against this URL instead of parquet — the
     *   reference's actual product (a sqlite/MySQL/PG database via
@@ -166,31 +163,27 @@ object Vcf2Db {
       (header.rawLines :+ s"##graft_blob_codec=$blobCodec").zipWithIndex
         .map { case (l, i) => Row(i + 1, l) })
     val local = samples.toSeq :+ headerOut
-    val annotated = header.annKey.isDefined
-    if (jdbcUrl.isEmpty && sortedOutput <= 0)
-      DbSink.writeParquetDb(loaded, outDir, "variants",
-        if (annotated) Some(nested -> "variant_impacts") else None, local)
-    else {
-      // table at a time: JDBC caps its connections per table, and
-      // --sorted-output range-shuffles the variants
-      val sink: (DataFrame, String, Int) => Unit = jdbcUrl match {
-        case Some(url) => (df, table, parts) =>
+    jdbcUrl match {
+      case None =>
+        // --sorted-output range-sorts the rows before the same one-job
+        // write; the impacts ride in their first alt row's nested column
+        val rows =
+          if (sortedOutput <= 0) loaded
+          else loaded.repartitionByRange(sortedOutput, col("chrom"), col("pos"))
+            .sortWithinPartitions(col("chrom"), col("pos"))
+        DbSink.writeParquetDb(rows, outDir, "variants",
+          if (header.annKey.isDefined) Some(nested -> "variant_impacts") else None, local)
+      case Some(url) =>
+        // table at a time: JDBC caps its connections per table
+        def sink(df: DataFrame, table: String, parts: Int): Unit =
           DbSink.writeJdbc(DbSink.jdbcSafe(df),
             DbSink.JdbcConf(url = url, table = table,
               batchSize = jdbcBatchSize, numPartitions = parts),
             mode = org.apache.spark.sql.SaveMode.Overwrite)
-        case None => (df, name, parts) =>
-          DbSink.writeParquet(df, s"$outDir/$name", parts)
-      }
-      val variantsOut = loaded.drop(nested)
-      if (jdbcUrl.isEmpty)
-        graft.operators.Scale.writeRangeSorted(variantsOut,
-          s"$outDir/variants", sortedOutput, col("chrom"), col("pos"))
-      else
-        sink(variantsOut, "variants", writerPartitions)
-      if (annotated)
-        sink(VcfReader.impactsOf(header, scanned), "variant_impacts", writerPartitions)
-      local.foreach(t => sink(spark.createDataFrame(t.rows.asJava, t.schema), t.name, 1))
+        sink(loaded.drop(nested), "variants", writerPartitions)
+        if (header.annKey.isDefined)
+          sink(VcfReader.impactsOf(header, scanned), "variant_impacts", writerPartitions)
+        local.foreach(t => sink(spark.createDataFrame(t.rows.asJava, t.schema), t.name, 1))
     }
   }
 
@@ -305,15 +298,15 @@ object GraftDb {
     val missing = cohort -- pedNames
     require(missing.isEmpty,
       s"amend PED is missing genotyped samples: ${missing.mkString(", ")}")
-    // stage through a temp dir: parquet overwrite deletes the target
-    // before the job reads it when source == sink
+    // stage-then-swap: parquet reads are lazy, so writing straight over
+    // the directory being read would corrupt it mid-scan
     val tmp = s"$dir/samples__amend_tmp"
-    ped.coalesce(1).write.mode("overwrite").parquet(tmp)
-    spark.read.parquet(tmp).coalesce(1)
-      .write.mode("overwrite").parquet(s"$dir/samples")
-    val fs = org.apache.hadoop.fs.FileSystem.get(
-      new java.net.URI(tmp), spark.sparkContext.hadoopConfiguration)
-    fs.delete(new org.apache.hadoop.fs.Path(tmp), true)
+    DbSink.writeParquet(ped, tmp, 1)
+    val fs = new org.apache.hadoop.fs.Path(dir)
+      .getFileSystem(spark.sessionState.newHadoopConf())
+    val dst = new org.apache.hadoop.fs.Path(s"$dir/samples")
+    fs.delete(dst, true)
+    fs.rename(new org.apache.hadoop.fs.Path(tmp), dst)
   }
 
   /** The gt-array sample order = the stored header's #CHROM column
@@ -471,69 +464,35 @@ object GraftDb {
     graft.operators.Etl.annotateVcf(variants(spark, dir), ann, prefix)
   }
 
+  /** The stored VCF header lines, in order, less graft's blob-codec
+    * marker: the header a VCF written from this database carries.
+    */
+  private[graft] def storedHeader(spark: SparkSession, dir: String): Vector[String] =
+    vcfHeader(spark, dir).collect().sortBy(_.getInt(0)).map(_.getString(1)).toVector
+      .filterNot(_.startsWith("##graft_blob_codec="))
+
   /** VCF EXPORT over a loaded database — the reverse of the load path,
     * closing the round trip a vcf2db user needs to hand a cohort subset
-    * back to bcftools/IGV (e52 is the fixture-sized oracle form of the
-    * line assembly). Each record is rebuilt from the typed columns the
-    * STORED HEADER declares: INFO fields in header order (Flags by
-    * presence, scalars cast, decomposed R/G arrays re-emitted
-    * comma-joined with `.` for missing elements; the annotation key —
+    * back to bcftools/IGV. The variants, genotype blobs unpacked, go
+    * through `format("vcf")`'s writer under the [[storedHeader]]: INFO
+    * fields the header declares in header order (the annotation key —
     * CSQ/ANN — lives in variant_impacts and is not reassembled), and
     * genotypes re-derived per sample from gt_types in header sample
     * order (0/0, 0/1, 1/1, ./. — decomposed diploid semantics, the
     * vt-decompose convention; phasing and other-alt references do not
     * survive decompose).
     *
-    * Output is a DIRECTORY of plain-text shards, each carrying the full
-    * header — exactly the sharded-cohort layout `format("vcf")` reads
-    * back — written range-partitioned on (chrom, pos) and sorted within
+    * Output is a DIRECTORY of `shards` plain-text shards, each carrying
+    * the full header — exactly the sharded-cohort layout `format("vcf")`
+    * reads back — range-partitioned on (chrom, pos) and sorted within
     * shards, so the export is itself a `sorted=true` prunable cohort.
-    * Scale shape: per-row codegen string assembly + one range shuffle;
-    * no collect, no driver bottleneck at any cohort size.
+    * Scale shape: per-row line assembly + one range shuffle; no
+    * collect, no driver bottleneck at any cohort size.
     */
   def exportVcf(spark: SparkSession, dir: String, outDir: String,
-      shards: Int = 1, codec: String = "auto"): Unit = {
-    import spark.implicits._
-    val rawHeader = vcfHeader(spark, dir).orderBy("line_no")
-      .select("line").collect().map(_.getString(0)).toVector
-      .filterNot(_.startsWith("##graft_blob_codec="))
-    val h = graft.sources.VcfParser.parseHeader(rawHeader)
-    val df = expandGenotypes(spark, dir, codec)
-    val cols = df.columns.toSet
-    val infoParts: Seq[Column] = graft.sources.VcfReader.infoSpecs(h)
-      .map(s => (s, graft.sources.VcfParser.sanitize(s.id)))
-      .filter { case (_, c) => cols.contains(c) }
-      .map { case (s, c) =>
-        val tag = lit(s.id + "=")
-        (s.number, df.schema(c).dataType) match {
-          case ("0", _) => when(col(c), lit(s.id))
-          case (_, _: org.apache.spark.sql.types.ArrayType) =>
-            when(col(c).isNotNull, concat(tag, concat_ws(",",
-              transform(col(c), x => coalesce(x.cast("string"), lit("."))))))
-          case _ =>
-            when(col(c).isNotNull, concat(tag, col(c).cast("string")))
-        }
-      }
-    val info = concat_ws(";", infoParts: _*)
-    val site = Seq(col("chrom"), col("pos").cast("string"),
-      coalesce(col("vid"), lit(".")), col("ref"), col("alt"),
-      coalesce(col("qual").cast("string"), lit(".")),
-      coalesce(col("filter"), lit(".")),
-      when(length(info) > 0, info).otherwise(lit(".")))
-    val fields =
-      if (h.samples.nonEmpty && cols.contains("gt_types"))
-        site ++ Seq(lit("GT"), concat_ws("\t", transform(col("gt_types"),
-          g => when(g === 0, "0/0").when(g === 1, "0/1")
-            .when(g === 3, "1/1").otherwise("./."))))
-      else site
-    val headerText = rawHeader.mkString("\n")
-    df.withColumn("vcf_line", concat_ws("\t", fields: _*))
-      .repartitionByRange(math.max(1, shards), col("chrom"), col("pos"))
-      .sortWithinPartitions("chrom", "pos", "alt")
-      .select("vcf_line").as[String]
-      .mapPartitions(it => Iterator(headerText) ++ it)
-      .write.mode("overwrite").text(outDir)
-  }
+      shards: Int = 1, codec: String = "auto"): Unit =
+    VcfLineAssembler.write(expandGenotypes(spark, dir, codec),
+      storedHeader(spark, dir), outDir, shards)
 
   /** GEMINI `fusions` over a loaded database: breakend (BND) variants
     * whose two ends land in two different genes of the BED's intervals
@@ -554,12 +513,8 @@ object GraftDb {
     */
   def dbInfo(spark: SparkSession, dir: String): DataFrame = {
     import spark.implicits._
-    def exists(path: String): Boolean = {
-      val p = new org.apache.hadoop.fs.Path(path)
-      p.getFileSystem(spark.sessionState.newHadoopConf()).exists(p)
-    }
     val tables = Seq("variants", "variant_impacts", "samples", "vcf_header")
-      .filter(t => exists(s"$dir/$t"))
+      .filter(t => exists(spark, s"$dir/$t"))
     tables.flatMap { t =>
       spark.read.parquet(s"$dir/$t").schema.fields.map(f =>
         (t, f.name, f.dataType.simpleString))
@@ -573,30 +528,6 @@ object GraftDb {
     samples(spark, dir).select("family_id", "sample_id", "paternal_id",
       "maternal_id", "sex", "phenotype")
 
-  /** GEMINI `amend --sample`: replace the stored samples table from a
-    * new PED file (re-phenotyping a loaded cohort without a reload).
-    * The new PED must cover the same sample ids the genotype arrays
-    * were packed for — enforced against the stored header's #CHROM
-    * sample list, since a silently narrowed cohort would mis-attribute
-    * every per-sample array index downstream.
-    */
-  def amend(spark: SparkSession, dir: String, pedPath: String): Unit = {
-    val ped = graft.sources.PedSource.fromPath(spark, pedPath)
-    val newIds = ped.select("sample_id").collect().map(_.getString(0)).toSet
-    val expected = headerSamples(spark, dir).toSet
-    require(expected.subsetOf(newIds),
-      s"amend PED is missing cohort samples: ${(expected -- newIds).mkString(", ")}")
-    // stage-then-swap: parquet reads are lazy, so writing straight over
-    // the directory being read would corrupt it mid-scan
-    val tmp = s"$dir/samples__amend_tmp"
-    graft.sinks.DbSink.writeParquet(ped, tmp, 1)
-    val fs = new org.apache.hadoop.fs.Path(dir)
-      .getFileSystem(spark.sessionState.newHadoopConf())
-    val dst = new org.apache.hadoop.fs.Path(s"$dir/samples")
-    fs.delete(dst, true)
-    fs.rename(new org.apache.hadoop.fs.Path(tmp), dst)
-  }
-
   /** Registers the loaded tables as temp views (genotype blobs already
     * expanded) so the reference's SQL surface runs verbatim:
     * `spark.sql("SELECT ... FROM variants JOIN variant_impacts ...")`.
@@ -605,15 +536,16 @@ object GraftDb {
     */
   def createViews(spark: SparkSession, dir: String,
       codec: String = "auto"): Unit = {
-    def exists(path: String): Boolean = {
-      val p = new org.apache.hadoop.fs.Path(path)
-      p.getFileSystem(spark.sessionState.newHadoopConf()).exists(p)
-    }
     expandGenotypes(spark, dir, codec).createOrReplaceTempView("variants")
-    if (exists(s"$dir/variant_impacts"))
+    if (exists(spark, s"$dir/variant_impacts"))
       impacts(spark, dir).createOrReplaceTempView("variant_impacts")
-    if (exists(s"$dir/samples"))
+    if (exists(spark, s"$dir/samples"))
       samples(spark, dir).createOrReplaceTempView("samples")
     vcfHeader(spark, dir).createOrReplaceTempView("vcf_header")
+  }
+
+  private def exists(spark: SparkSession, path: String): Boolean = {
+    val p = new org.apache.hadoop.fs.Path(path)
+    p.getFileSystem(spark.sessionState.newHadoopConf()).exists(p)
   }
 }

@@ -435,8 +435,10 @@ object Stats {
   private def colOr(v: DataFrame, n: String, tpe: String): Column =
     if (v.columns.contains(n)) col(n) else lit(null).cast(tpe)
 
-  /** e52's line builder over any variants frame — the CLI `export
-    * --format=vcf` path routes here (same expressions, no new logic).
+  /** e52's line builder: VcfFixture's four INFO keys (DP, AF, DB,
+    * TYPE), the oracle's fixed form. A loaded database exports through
+    * `format("vcf")`'s header-driven line rules instead (GraftDb.exportVcf,
+    * the CLI's `export --format=vcf`).
     */
   def vcfExportLines(v: DataFrame): DataFrame = {
     val (dp, af, db, tpe) = (colOr(v, "dp", "long"), colOr(v, "af", "double"),

@@ -173,11 +173,6 @@ object VcfParser {
     (recordOf(f), samplesFrom)
   }
 
-  /** The site part of a body line (columns 1–8: no FORMAT, no samples)
-    * — what an annotation-only read needs.
-    */
-  def parseSite(line: String): Record = recordOf(leadingColumns(line, 8)._1)
-
   private def recordOf(f: Array[String]): Record = {
     val info: ListMap[String, String] =
       if (f.length <= 7 || f(7) == ".") ListMap.empty

@@ -128,21 +128,12 @@ object VcfReader {
       * `variantSchema` variants.
       */
     case object Load extends LineRows
-    /** One row per (annotation entry, alt it names): `impactSchema`,
-      * parsed from the site alone (columns 1–8) — `fromPath`'s impacts.
-      * Read through [[impactsColumn]] instead, the same table costs about
-      * 1.2× the executor CPU (a 15 MB, 40k-impact cohort, warm): the
-      * nested rows are copied into the scan's unsafe rows and out again
-      * by the explode.
-      */
-    case object Impacts extends LineRows
   }
 
   def schemaOf(h: Header, rows: LineRows): StructType = rows match {
     case LineRows.Load if h.annKey.isDefined =>
       StructType(loadSchema(h).fields :+ StructField(impactsColumn,
         ArrayType(impactSchema(h), containsNull = false)))
-    case LineRows.Impacts => impactSchema(h)
     case _ => variantSchema(h)
   }
 
@@ -206,9 +197,9 @@ object VcfReader {
 
   /** A body line → Catalyst rows of one [[LineRows]] shape, computing
     * only the `columns` asked for, in that order. A pruned scan of a
-    * 100-INFO, 1000-sample VCF parses 2 columns, not the whole record;
-    * an impacts scan parses the site (columns 1–8) and never splits the
-    * sample columns. In the load shape the annotation value is split
+    * 100-INFO, 1000-sample VCF parses 2 columns, not the whole record,
+    * and splits no sample column when it needs no FORMAT key. In the
+    * load shape the annotation value is split
     * once per record, for the worst-impact pick and the impacts rows
     * alike. Values go straight into InternalRows (UTF8String, unsafe
     * primitive arrays): no external Row and no per-row converter. With
@@ -260,13 +251,9 @@ object VcfReader {
     private val geneIx = firstCol("symbol", "gene_name", "gene")
     private val impactIx = firstCol("consequence", "annotation")
 
-    def apply(line: String): Array[InternalRow] = rows match {
-      case LineRows.Impacts =>
-        val rec = parseSite(line)
-        if (!passes(rec)) Array.empty else impactValues(rec, entries(rec)).map(row)
-      case _ =>
-        val (rec, samplesFrom) = parseRecordAt(line)
-        variantRows(rec, line, samplesFrom)
+    def apply(line: String): Array[InternalRow] = {
+      val (rec, samplesFrom) = parseRecordAt(line)
+      variantRows(rec, line, samplesFrom)
     }
 
     /** `apply`, but a line that fails to parse yields no rows. */
@@ -481,13 +468,13 @@ object VcfReader {
     * the `format("vcf")` scan: header read once driver-side (gunzipped
     * when compressed), body split by byte range across executors.
     * Returns the header, the variants (the `format("vcf")` schema) and
-    * the impacts table — empty when the header declares no annotation
-    * key. Each table is its own scan of the text.
+    * the impacts table — the load shape's, [[impactsOf]] — empty when
+    * the header declares no annotation key. Each table is its own scan
+    * of the text.
     */
   def fromPath(spark: SparkSession, path: String): (Header, DataFrame, DataFrame) = {
     val (h, frame) = scan(spark, path, passOnly = false)
-    (h, frame(LineRows.Variants),
-      if (h.annKey.isEmpty) noImpacts(spark, h) else frame(LineRows.Impacts))
+    (h, frame(LineRows.Variants), impactsOf(h, frame(LineRows.Load)))
   }
 
   /** Vcf2Db's read: one scan of the load shape ([[LineRows.Load]]). Its

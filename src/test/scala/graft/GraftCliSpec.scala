@@ -51,6 +51,10 @@ class GraftCliSpec extends SparkSpec {
     val vcfLines = Graft.export(spark, db, "vcf").collect().map(_.getString(0))
     assert(vcfLines.length == 5)
     assert(vcfLines.forall(_.split("\t").length == 8))
+    // every INFO field the stored header declares, not a fixed key list
+    val v100 = vcfLines.filter(_.startsWith("1\t100\t"))
+    assert(v100.length == 1 && v100.head.split("\t")(7).contains("ADI=30,12;PL=0,40,90"),
+      v100.mkString("\n"))
     val jsonLines = Graft.export(spark, db, "json").collect().map(_.getString(0))
     assert(jsonLines.forall(l => l.startsWith("{\"chrom\": ") && l.endsWith("}")))
     val tped = Graft.export(spark, db, "tped").collect().map(_.getString(0))

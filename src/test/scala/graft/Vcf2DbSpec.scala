@@ -143,20 +143,22 @@ class Vcf2DbSpec extends SparkSpec {
       Seq(("1", 200L, "T", "stop_gained"), ("2", 300L, "T", "frameshift_variant")))
   }
 
+  /** A SnpEff-annotated VCF: ANN with SnpEff's field names. */
+  private val snpEffLines = Vector(
+    "##fileformat=VCFv4.2",
+    "##INFO=<ID=ANN,Number=.,Type=String,Description=\"Functional annotations: " +
+      "'Allele | Annotation | Annotation_Impact | Gene_Name'\">",
+    "##FORMAT=<ID=GT,Number=1,Type=String,Description=\"Genotype\">",
+    Seq("#CHROM", "POS", "ID", "REF", "ALT", "QUAL", "FILTER", "INFO",
+      "FORMAT", "s1").mkString("\t"),
+    Seq("1", "100", ".", "A", "G", "99", "PASS",
+      "ANN=G|missense_variant|MODERATE|GENE1,G|synonymous_variant|LOW|GENE1",
+      "GT", "0/1").mkString("\t"))
+
   test("SnpEff ANN-annotated VCF loads end-to-end with annotator-agnostic columns") {
-    val lines = Vector(
-      "##fileformat=VCFv4.2",
-      "##INFO=<ID=ANN,Number=.,Type=String,Description=\"Functional annotations: " +
-        "'Allele | Annotation | Annotation_Impact | Gene_Name'\">",
-      "##FORMAT=<ID=GT,Number=1,Type=String,Description=\"Genotype\">",
-      Seq("#CHROM", "POS", "ID", "REF", "ALT", "QUAL", "FILTER", "INFO",
-        "FORMAT", "s1").mkString("\t"),
-      Seq("1", "100", ".", "A", "G", "99", "PASS",
-        "ANN=G|missense_variant|MODERATE|GENE1,G|synonymous_variant|LOW|GENE1",
-        "GT", "0/1").mkString("\t"))
     val dir = Files.createTempDirectory("vcf2db_ann")
     val vcf = dir.resolve("in.vcf")
-    Files.writeString(vcf, lines.mkString("\n") + "\n")
+    Files.writeString(vcf, snpEffLines.mkString("\n") + "\n")
     val out = dir.resolve("db").toString
     Vcf2Db.run(spark, vcf.toString, None, out)
     // worst impact denormalizes from the ANN fields (Annotation /
@@ -191,23 +193,30 @@ class Vcf2DbSpec extends SparkSpec {
     Vcf2Db.run(spark, vcf.toString, None, out, sortedOutput = 2)
     val back = GraftDb.variants(spark, out)
     assert(back.count() == 5)
-    // per-file key ranges must be disjoint (the pruning contract)
-    val files = new java.io.File(s"$out/variants").listFiles()
+    // per-file key ranges must be disjoint (the pruning contract), in
+    // the impacts table too: each slab's task writes its records' impacts
+    def files(table: String) = new java.io.File(s"$out/$table").listFiles()
       .filter(_.getName.endsWith(".parquet")).map(_.toString).toSeq
-    assert(files.size == 2)
-    val ranges = files.map { f =>
-      val r = spark.read.parquet(f)
-        .selectExpr("min(struct(chrom, pos)) AS lo", "max(struct(chrom, pos)) AS hi")
-        .collect().head
-      (r.getStruct(0).getString(0), r.getStruct(0).getLong(1),
-        r.getStruct(1).getString(0), r.getStruct(1).getLong(1))
-    }.sortBy(r => (r._1, r._2))
-    ranges.sliding(2).foreach {
-      case Seq((_, _, hiC, hiP), (loC, loP, _, _)) =>
-        assert(hiC < loC || (hiC == loC && hiP < loP),
-          s"file ranges overlap: $ranges")
-      case _ =>
+    def assertDisjoint(table: String): Unit = {
+      val ranges = files(table).map { f =>
+        val r = spark.read.parquet(f)
+          .selectExpr("min(struct(chrom, pos)) AS lo", "max(struct(chrom, pos)) AS hi")
+          .collect().head
+        (r.getStruct(0).getString(0), r.getStruct(0).getLong(1),
+          r.getStruct(1).getString(0), r.getStruct(1).getLong(1))
+      }.sortBy(r => (r._1, r._2))
+      ranges.sliding(2).foreach {
+        case Seq((_, _, hiC, hiP), (loC, loP, _, _)) =>
+          assert(hiC < loC || (hiC == loC && hiP < loP),
+            s"$table file ranges overlap: $ranges")
+        case _ =>
+      }
     }
+    assert(files("variants").size == 2)
+    assertDisjoint("variants")
+    assert(files("variant_impacts").nonEmpty)
+    assertDisjoint("variant_impacts")
+    assert(GraftDb.impacts(spark, out).count() == 5)
   }
 
   test("variants parquet: blob columns written plain, strings keep dictionaries") {
@@ -240,8 +249,7 @@ class Vcf2DbSpec extends SparkSpec {
         finally reader.close()
       }
     }
-    // the default write (DbSink.writeParquet) and --sorted-output
-    // (Scale.writeRangeSorted) alike
+    // the default load and --sorted-output alike
     Seq(0, 2).foreach { sorted =>
       val out = dir.resolve(s"db$sorted").toString
       Vcf2Db.run(spark, vcf.toString, None, out, sortedOutput = sorted)
@@ -498,6 +506,48 @@ class Vcf2DbSpec extends SparkSpec {
     }
   }
 
+  test("exportVcf text: the stored header and pinned body lines, sorted disjoint shards") {
+    import scala.jdk.CollectionConverters._
+    import scala.math.Ordering.Implicits._
+    val dir = Files.createTempDirectory("vcf2db_export_text")
+    /** A 2-shard export of `lines` loaded: each shard's body must be
+      * sorted and the shards' (chrom, pos) ranges disjoint. Returns the
+      * distinct shard headers and every body line, sorted.
+      */
+    def exported(lines: Seq[String], name: String) = {
+      val vcf = dir.resolve(s"$name.vcf")
+      Files.writeString(vcf, lines.mkString("\n") + "\n")
+      val out = dir.resolve(s"$name.db").toString
+      Vcf2Db.run(spark, vcf.toString, None, out)
+      val exp = dir.resolve(s"$name.export").toString
+      GraftDb.exportVcf(spark, out, exp, shards = 2)
+      val shards = new java.io.File(exp).listFiles()
+        .filter(f => f.isFile && !f.getName.startsWith("_") && !f.getName.startsWith("."))
+        .sortBy(_.getName).map(f => Files.readAllLines(f.toPath).asScala.toVector).toSeq
+      val bodies = shards.map(_.filterNot(_.startsWith("#")))
+      val keys = bodies.map(_.map { l => val f = l.split("\t"); (f(0), f(1).toLong, f(4)) })
+      keys.foreach(k => assert(k == k.sorted, s"$name: shard body not sorted"))
+      keys.filter(_.nonEmpty).sliding(2).foreach {
+        case Seq(a, b) => assert((a.last._1, a.last._2) < ((b.head._1, b.head._2)),
+          s"$name: shards share a key range")
+        case _ =>
+      }
+      (shards.map(_.takeWhile(_.startsWith("#"))).distinct, bodies.flatten.sorted)
+    }
+    val (fxHeaders, fxBody) = exported(VcfFixture.lines, "fixture")
+    assert(fxHeaders == Seq(VcfFixture.lines.filter(_.startsWith("#"))))
+    assert(fxBody == Seq(
+      "1\t100\trs1\tA\tG\t50.0\tPASS\tDP=10;AF=0.25;DB;ADI=30,12;PL=0,40,90\tGT\t0/1\t0/0\t0/0\t1/1",
+      "1\t200\t.\tC\tT\t99.0\tPASS\tDP=20;AF=0.5\tGT\t0/1\t0/1\t./.\t./.",
+      "2\t300\trs3\tG\tA\t.\tq10\tDP=5;AF=0.5;ADI=20,8;PL=10,20,30\tGT\t0/1\t0/1\t0/0\t0/0",
+      "2\t300\trs3\tG\tT\t.\tq10\tDP=5;AF=0.25;ADI=20,5;PL=10,40,60\tGT\t0/1\t0/0\t1/1\t0/0",
+      "X\t400\t.\tT\tC\t10.5\t.\tAF=0.75;TYPE=snp\tGT\t1/1\t1/1\t0/1\t0/1"))
+    // the annotation key lives in variant_impacts: no INFO left to write
+    val (seHeaders, seBody) = exported(snpEffLines, "snpeff")
+    assert(seHeaders == Seq(snpEffLines.filter(_.startsWith("#"))))
+    assert(seBody == Seq("1\t100\t.\tA\tG\t99.0\tPASS\t.\tGT\t0/1"))
+  }
+
   test("VCF annotate over a loaded database joins a dbSNP-style source by allele") {
     val dir = Files.createTempDirectory("vcf2db_annvcf")
     val vcf = dir.resolve("in.vcf")
@@ -570,7 +620,7 @@ class Vcf2DbSpec extends SparkSpec {
       "#family_id sample_id paternal_id maternal_id sex phenotype\n" +
         "fam1 s1 -9 -9 1 2\nfam1 s2 -9 -9 2 1\nfam1 s3 s1 s2 1 1\nfam1 s4 s1 s2 2 2\n"
           .replace("fam1 s4 s1 s2 2 2", "fam1 s4 s1 s2 2 1"))
-    GraftDb.amend(spark, out, ped2.toString)
+    GraftDb.amendSamples(spark, out, ped2.toString)
     val s4 = GraftDb.samples(spark, out).filter("sample_id = 's4'").head()
     assert(s4.getAs[String]("phenotype") == "1")
 
@@ -579,7 +629,7 @@ class Vcf2DbSpec extends SparkSpec {
     Files.writeString(bad,
       "#family_id sample_id paternal_id maternal_id sex phenotype\n" +
         "fam1 s1 -9 -9 1 2\n")
-    intercept[IllegalArgumentException](GraftDb.amend(spark, out, bad.toString))
+    intercept[IllegalArgumentException](GraftDb.amendSamples(spark, out, bad.toString))
   }
 
   test("region() parses GEMINI-style specs into pushdown-friendly filters") {
@@ -861,6 +911,44 @@ class Vcf2DbSpec extends SparkSpec {
     }
   }
 
+  /** The table-at-a-time parquet load, as the reference the one-job
+    * write is held to: the load scan's variants, packed; its impacts
+    * flattened from a second read of the same scan; the PED and header
+    * tables from driver rows — each through its own DbSink.writeParquet.
+    */
+  private def perTableLoad(vcf: String, ped: Option[String], out: String,
+      expand: Seq[String], passOnly: Boolean): Unit = {
+    import scala.jdk.CollectionConverters._
+    import org.apache.spark.sql.Row
+    import org.apache.spark.sql.functions.col
+    import org.apache.spark.sql.types.{IntegerType, StringType, StructField, StructType}
+    import graft.sinks.DbSink
+    import graft.sources.{PedSource, VcfParser, VcfReader}
+    val (header, scanned) = VcfReader.forLoad(spark, vcf, passOnly)
+    val expandCols = for {
+      f <- expand
+      (name, i) <- header.samples.zipWithIndex
+    } yield col(f).getItem(i).as(s"${f}_${VcfParser.sanitize(name)}")
+    val expanded =
+      if (expandCols.isEmpty) scanned
+      else scanned.select(scanned.columns.map(c => scanned.col(s"`$c`")).toSeq ++ expandCols: _*)
+    DbSink.writeParquet(Vcf2Db.packGenotypeBlobs(expanded).drop(VcfReader.impactsColumn),
+      s"$out/variants")
+    if (header.annKey.isDefined)
+      DbSink.writeParquet(VcfReader.impactsOf(header, scanned), s"$out/variant_impacts")
+    def local(name: String, schema: StructType, rows: Seq[Row]): Unit =
+      DbSink.writeParquet(spark.createDataFrame(rows.asJava, schema), s"$out/$name", 1)
+    ped.foreach { p =>
+      val (schema, rows) = PedSource.parse(PedSource.lines(spark, p))
+      local("samples", schema, rows)
+    }
+    local("vcf_header",
+      StructType(Seq(StructField("line_no", IntegerType, nullable = false),
+        StructField("line", StringType))),
+      (header.rawLines :+ "##graft_blob_codec=zlib").zipWithIndex
+        .map { case (l, i) => Row(i + 1, l) })
+  }
+
   test("one-job parquet load writes the same tables as the table-at-a-time path") {
     val dir = Files.createTempDirectory("vcf2db_onejob")
     def input(name: String, lines: Seq[String]) = {
@@ -890,13 +978,14 @@ class Vcf2DbSpec extends SparkSpec {
       Case("multi-split", many, ped))
     withConf("spark.sql.files.maxPartitionBytes", Some("16384")) {
       cases.zipWithIndex.foreach { case (c, i) =>
-        val oneJob = dir.resolve(s"one$i").toString
         val perTable = dir.resolve(s"per$i").toString
-        Seq(oneJob -> 0, perTable -> 2).foreach { case (out, sorted) =>
+        perTableLoad(c.vcf, c.ped, perTable, c.expand, c.passOnly)
+        Seq(s"one$i" -> 0, s"sorted$i" -> 2).foreach { case (name, sorted) =>
+          val out = dir.resolve(name).toString
           Vcf2Db.run(spark, c.vcf, c.ped, out, expand = c.expand,
             sortedOutput = sorted, passOnly = c.passOnly)
+          assertSameDb(out, perTable, s"${c.label}, sortedOutput=$sorted")
         }
-        assertSameDb(oneJob, perTable, c.label)
       }
     }
     val unannotated = dir.resolve(s"one${cases.indexWhere(_.label == "unannotated")}")

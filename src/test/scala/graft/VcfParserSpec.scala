@@ -79,16 +79,7 @@ class VcfParserSpec extends AnyFunSuite {
     }
   }
 
-  test("site parse reads columns 1-8 like the full parse, samples unsplit") {
-    val line = "1\t100\trs1\tA\tG,T\t50.5\tq10\tDP=7;CSQ=G|x\tGT:DP\t0/1:3\t./."
-    val full = parseRecord(line)
-    val site = parseSite(line)
-    assert(site == full.copy(formatKeys = Vector.empty))
-    val sitesOnly = "2\t5\t.\tC\tA\t.\t.\tCSQ=A|y"
-    assert(parseSite(sitesOnly) == parseRecord(sitesOnly))
-    assert(parseSite("3\t9\t.\tG\tC\t.\t.") == parseRecord("3\t9\t.\tG\tC\t.\t."))
-    // a truncated line fails the same way in both
-    intercept[ArrayIndexOutOfBoundsException](parseSite("3\t9\t.\tG\tC"))
+  test("record parse fails on a line truncated before QUAL") {
     intercept[ArrayIndexOutOfBoundsException](parseRecord("3\t9\t.\tG\tC"))
   }
 
