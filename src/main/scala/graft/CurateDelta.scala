@@ -150,10 +150,10 @@ object CurateDelta {
     // containment screen is off) is dead
     Lineage.release(contained)
 
-    // 4. PII redaction last, then write
-    val out = quality.withColumn("text", Text.redact($"text"))
-    out.write.mode("overwrite").parquet(outDir)
-    val nOut = spark.read.parquet(outDir).count()
+    // 4. PII redaction last, then write: a per-row projection, so as
+    //    many survivors ship as passed the quality cut
+    quality.withColumn("text", Text.redact($"text"))
+      .write.mode("overwrite").parquet(outDir)
 
     // 5. VERSIONED index update: append the SHIPPED survivors to a
     //    fresh index dir — union + count merge, no base text touched.
@@ -183,7 +183,7 @@ object CurateDelta {
           .merge(Dedup.d23IndexOf(shipped)).write(s"$outDir-index")
     }
     quality.unpersist()
-    Report(nDelta, nExact, nNear, nQuality, nOut, nContain)
+    Report(nDelta, nExact, nNear, nQuality, nOut = nQuality, nContain)
   }
 
   private val usage =

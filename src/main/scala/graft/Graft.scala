@@ -36,17 +36,15 @@ object Graft {
       region: Option[String] = None, gtFilter: Option[String] = None,
       sampleFilter: Option[String] = None, in: String = "any",
       columns: Seq[String] = Nil, limit: Option[Int] = None): DataFrame = {
-    val needsGt = gtFilter.isDefined || sampleFilter.isDefined
-    var df =
-      if (needsGt) GraftDb.expandGenotypes(spark, db)
-      else GraftDb.variants(spark, db)
+    val meta =
+      if (gtFilter.isDefined || sampleFilter.isDefined) Some(new GraftDb.Metadata(spark, db))
+      else None
+    var df = meta.fold(GraftDb.variants(spark, db))(_.genotypes("auto"))
     region.foreach(r => df = GraftDb.region(df, r))
-    lazy val samples = GraftDb.samples(spark, db)
-    lazy val order = GraftDb.headerSamples(spark, db)
-    gtFilter.foreach(f =>
-      df = df.filter(operators.GtFilter.compile(f, samples, order)))
-    sampleFilter.foreach(w =>
-      df = df.filter(operators.GtFilter.sampleFilter(w, in, samples, order)))
+    for (m <- meta; f <- gtFilter)
+      df = df.filter(operators.GtFilter.compile(f, m.samples, m.sampleOrder))
+    for (m <- meta; w <- sampleFilter)
+      df = df.filter(operators.GtFilter.sampleFilter(w, in, m.samples, m.sampleOrder))
     if (columns.nonEmpty) df = df.select(columns.map(col): _*)
     limit.foreach(n => df = df.limit(n))
     df
@@ -54,9 +52,10 @@ object Graft {
 
   /** `export`: one line per variant in the requested format — VCF
     * through the `format("vcf")` line rules under the stored header
-    * (sites only: no genotype columns), e54 (JSON) and e49 (TPED) line
-    * builders over the loaded database (TPED expands genotype blobs;
-    * the text formats read the flat columns only).
+    * (sites only: no genotype columns), e54's JSON line builder over
+    * every INFO field the stored header declares, in header order, and
+    * e49's TPED line builder over the loaded database (TPED expands
+    * genotype blobs; the text formats read the flat columns only).
     */
   def export(spark: SparkSession, db: String, format: String,
       region: Option[String] = None): DataFrame = {
@@ -67,7 +66,9 @@ object Graft {
           GraftDb.storedHeader(spark, db))
           .orderBy(col("chrom"), col("pos"), col("alt")).select(col("line"))
       case "json" =>
-        operators.Stats.jsonExportLines(regioned(GraftDb.variants(spark, db)))
+        val info = sources.VcfReader.infoColumns(
+          sources.VcfParser.parseHeader(GraftDb.storedHeader(spark, db)))
+        operators.Stats.jsonExportLines(regioned(GraftDb.variants(spark, db)), info)
           .orderBy(col("chrom"), col("pos"), col("alt"))
           .select(col("json_line").as("line"))
       case "tped" =>

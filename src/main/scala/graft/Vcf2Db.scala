@@ -9,6 +9,7 @@ import org.apache.spark.sql.types.{IntegerType, StringType, StructField, StructT
 
 import graft.functions.GraftFunctions.{snappyPack, snappyUnpack, zlibPack,
   zlibPackStr, zlibUnpack, zlibUnpackStr}
+import graft.operators.{GtFilter, Inheritance}
 import graft.sinks.DbSink
 import graft.sources.{PedSource, VcfLineAssembler, VcfReader}
 
@@ -246,31 +247,59 @@ object GraftDb {
     }
   }
 
+  private val codecMarker = "##graft_blob_codec="
+
+  /** One call's read of a database's metadata, dropped when the call
+    * ends (`amendSamples` may rewrite `samples` between calls):
+    * `vcf_header` collected here, once, and `samples` once on first use.
+    */
+  private[graft] final class Metadata(spark: SparkSession, dir: String) {
+    private val header =
+      vcfHeader(spark, dir).collect().sortBy(_.getInt(0)).map(_.getString(1)).toVector
+    val codec: Option[String] =
+      header.collectFirst { case l if l.startsWith(codecMarker) => l.stripPrefix(codecMarker) }
+    /** The header a VCF written from this database carries. */
+    val vcfLines: Vector[String] = header.filterNot(_.startsWith(codecMarker))
+    /** The gt-array sample order: the #CHROM line's. */
+    lazy val sampleOrder: Seq[String] = header.find(_.startsWith("#CHROM"))
+      .getOrElse(throw new IllegalStateException(s"$dir/vcf_header has no #CHROM line"))
+      .split('\t').drop(9).toSeq
+    private lazy val stored =
+      if (exists(spark, s"$dir/samples")) GraftDb.samples(spark, dir)
+      else PedSource.fromLines(spark, Nil)
+    private lazy val sampleRows = stored.collect().toSeq
+    /** `samples` as a local relation (no rows without a PED): filtering
+      * or collecting it runs no Spark job.
+      */
+    lazy val samples: DataFrame = spark.createDataFrame(sampleRows.asJava, stored.schema)
+    lazy val trios: DataFrame = Inheritance.trios(spark, sampleRows, sampleOrder)
+    /** [[expandGenotypes]]: "auto" is the recorded codec, else zlib. */
+    def genotypes(codec: String): DataFrame =
+      unpack(variants(spark, dir), if (codec == "auto") this.codec.getOrElse("zlib") else codec)
+  }
+
   /** The blob codec recorded at write time (absent for pre-marker
     * databases → the zlib default).
     */
   def storedBlobCodec(spark: SparkSession, dir: String): Option[String] =
-    vcfHeader(spark, dir)
-      .filter(col("line").startsWith("##graft_blob_codec="))
-      .collect().headOption
-      .map(_.getAs[String]("line").stripPrefix("##graft_blob_codec="))
-
-  private def resolveCodec(spark: SparkSession, dir: String, codec: String): String =
-    if (codec == "auto") storedBlobCodec(spark, dir).getOrElse("zlib") else codec
+    new Metadata(spark, dir).codec
 
   /** Variants with the ten genotype blobs unpacked back to typed arrays
     * (the reference's `--expand` read path). `codec` must match the one
-    * the table was written with.
+    * the table was written with; "auto" (the default everywhere on the
+    * read side) resolves from the codec marker the writer recorded in
+    * vcf_header.
     */
   def expandGenotypes(spark: SparkSession, dir: String,
-      codec: String = "auto"): DataFrame = {
-    // "auto" (the default everywhere on the read side) resolves from
-    // the codec marker the writer recorded in vcf_header
-    val resolved = resolveCodec(spark, dir, codec)
-    require(resolved == "zlib" || resolved == "snappy", s"unknown blob codec: $resolved")
-    val unpack: Column => Column = if (resolved == "zlib") zlibUnpack else snappyUnpack
+      codec: String = "auto"): DataFrame =
+    if (codec == "auto") new Metadata(spark, dir).genotypes(codec)
+    else unpack(variants(spark, dir), codec)
+
+  private def unpack(variants: DataFrame, codec: String): DataFrame = {
+    require(codec == "zlib" || codec == "snappy", s"unknown blob codec: $codec")
+    val unpack: Column => Column = if (codec == "zlib") zlibUnpack else snappyUnpack
     Vcf2Db.intArrayCols
-      .foldLeft(variants(spark, dir))((df, c) =>
+      .foldLeft(variants)((df, c) =>
         if (df.columns.contains(c)) df.withColumn(c, unpack(col(c))) else df)
       .transform(df =>
         if (df.columns.contains("gts")) df.withColumn("gts", zlibUnpackStr(col("gts")))
@@ -280,8 +309,11 @@ object GraftDb {
     spark.read.parquet(s"$dir/variant_impacts")
   def samples(spark: SparkSession, dir: String): DataFrame =
     spark.read.parquet(s"$dir/samples")
+  /** Read with the schema Vcf2Db.run writes: inferring it would run a
+    * Spark job.
+    */
   def vcfHeader(spark: SparkSession, dir: String): DataFrame =
-    spark.read.parquet(s"$dir/vcf_header")
+    spark.read.schema("line_no INT, line STRING").parquet(s"$dir/vcf_header")
 
   /** GEMINI `amend --sample`: replace the stored samples table from a
     * corrected PED (fixed phenotypes/sexes/families) WITHOUT reloading
@@ -292,7 +324,7 @@ object GraftDb {
     * misclassify every wildcard gt-filter class built from it.
     */
   def amendSamples(spark: SparkSession, dir: String, pedPath: String): Unit = {
-    val ped = graft.sources.PedSource.fromPath(spark, pedPath)
+    val ped = PedSource.fromPath(spark, pedPath)
     val cohort = headerSamples(spark, dir).toSet
     val pedNames = ped.select("sample_id").collect().map(_.getString(0)).toSet
     val missing = cohort -- pedNames
@@ -310,43 +342,33 @@ object GraftDb {
   }
 
   /** The gt-array sample order = the stored header's #CHROM column
-    * line. One driver-side row fetch — header metadata, not data.
+    * line — header metadata, not data.
     */
-  def headerSamples(spark: SparkSession, dir: String): Seq[String] = {
-    val line = vcfHeader(spark, dir)
-      .filter(col("line").startsWith("#CHROM")).select("line")
-      .collect().headOption.getOrElse(
-        throw new IllegalStateException(s"$dir/vcf_header has no #CHROM line"))
-      .getString(0)
-    line.split('\t').drop(9).toSeq
-  }
-
-  private def trios(spark: SparkSession, dir: String): DataFrame =
-    graft.operators.Inheritance.triosFromSamples(
-      spark, samples(spark, dir), headerSamples(spark, dir))
+  def headerSamples(spark: SparkSession, dir: String): Seq[String] =
+    new Metadata(spark, dir).sampleOrder
 
   /** GEMINI's family tools over a LOADED database (blobs unpacked,
     * trios derived from the samples table): de_novo / auto_rec /
     * mendel_error classification and compound-het pairs.
     */
   def inheritanceClassify(spark: SparkSession, dir: String,
-      codec: String = "auto", minKindreds: Int = 1): DataFrame =
-    graft.operators.Inheritance.minKindreds(
-      graft.operators.Inheritance.classify(
-        spark, expandGenotypes(spark, dir, codec), trios(spark, dir)),
-      minKindreds)
+      codec: String = "auto", minKindreds: Int = 1): DataFrame = {
+    val db = new Metadata(spark, dir)
+    Inheritance.minKindreds(
+      Inheritance.classify(spark, db.genotypes(codec), db.trios), minKindreds)
+  }
 
   /** `minKindreds` follows GEMINI: for comp_hets the kindred count is
     * per GENE (a gene hit by candidate pairs in ≥ N families), not per
     * variant pair.
     */
   def compHets(spark: SparkSession, dir: String,
-      codec: String = "auto", minKindreds: Int = 1): DataFrame =
-    graft.operators.Inheritance.minKindreds(
-      graft.operators.Inheritance.compHets(
-        spark, expandGenotypes(spark, dir, codec), impacts(spark, dir),
-        trios(spark, dir)),
+      codec: String = "auto", minKindreds: Int = 1): DataFrame = {
+    val db = new Metadata(spark, dir)
+    Inheritance.minKindreds(
+      Inheritance.compHets(spark, db.genotypes(codec), impacts(spark, dir), db.trios),
       minKindreds, keyCols = Seq("gene"))
+  }
 
   /** GEMINI `--gt-filter` wildcard over a loaded database: variants
     * whose unpacked genotype arrays satisfy the DSL predicate, e.g.
@@ -356,9 +378,8 @@ object GraftDb {
     */
   def gtFilter(spark: SparkSession, dir: String, spec: String,
       codec: String = "auto"): DataFrame = {
-    val v = expandGenotypes(spark, dir, codec)
-    v.filter(graft.operators.GtFilter.compile(
-      spec, samples(spark, dir), headerSamples(spark, dir)))
+    val db = new Metadata(spark, dir)
+    db.genotypes(codec).filter(GtFilter.compile(spec, db.samples, db.sampleOrder))
   }
 
   /** GEMINI `query --sample-filter WHERE --in any|all|none|only`:
@@ -367,9 +388,9 @@ object GraftDb {
     */
   def sampleFilter(spark: SparkSession, dir: String, where: String,
       in: String = "any", codec: String = "auto"): DataFrame = {
-    val v = expandGenotypes(spark, dir, codec)
-    v.filter(graft.operators.GtFilter.sampleFilter(
-      where, in, samples(spark, dir), headerSamples(spark, dir)))
+    val db = new Metadata(spark, dir)
+    db.genotypes(codec).filter(
+      GtFilter.sampleFilter(where, in, db.samples, db.sampleOrder))
   }
 
   /** GEMINI mendel_errors-style QC summary over a loaded database:
@@ -384,29 +405,25 @@ object GraftDb {
       .agg(count(lit(1)).as("n_variants"))
       .orderBy(col("family_id"), col("child"), col("class"))
 
-  /** GEMINI X-linked tools over a loaded database — trio dim carries
-    * the samples table's sex column.
+  /** GEMINI X-linked tools over a loaded database — the trio dim's
+    * sex comes from the samples table.
     */
   def xlinked(spark: SparkSession, dir: String,
-      codec: String = "auto", minKindreds: Int = 1): DataFrame =
-    graft.operators.Inheritance.minKindreds(
-      graft.operators.Inheritance.xlinked(
-        spark, expandGenotypes(spark, dir, codec),
-        graft.operators.Inheritance.triosWithSex(
-          spark, samples(spark, dir), headerSamples(spark, dir))),
-      minKindreds)
+      codec: String = "auto", minKindreds: Int = 1): DataFrame = {
+    val db = new Metadata(spark, dir)
+    Inheritance.minKindreds(
+      Inheritance.xlinked(spark, db.genotypes(codec), db.trios), minKindreds)
+  }
 
-  /** GEMINI x_linked_dominant over a loaded database — trio dim
-    * carries sex and the three phenotypes from the samples table.
+  /** GEMINI x_linked_dominant over a loaded database — the trio dim's
+    * sex and three phenotypes come from the samples table.
     */
   def xlinkedDom(spark: SparkSession, dir: String,
-      codec: String = "auto", minKindreds: Int = 1): DataFrame =
-    graft.operators.Inheritance.minKindreds(
-      graft.operators.Inheritance.xlinkedDom(
-        spark, expandGenotypes(spark, dir, codec),
-        graft.operators.Inheritance.triosWithSexPheno(
-          spark, samples(spark, dir), trios(spark, dir))),
-      minKindreds)
+      codec: String = "auto", minKindreds: Int = 1): DataFrame = {
+    val db = new Metadata(spark, dir)
+    Inheritance.minKindreds(
+      Inheritance.xlinkedDom(spark, db.genotypes(codec), db.trios), minKindreds)
+  }
 
   /** Cohort QC over a loaded database: ts/tv ratio per chromosome,
     * per-(gene, severity) burden, per-sample genotype stats, and runs
@@ -419,14 +436,16 @@ object GraftDb {
     graft.operators.Etl.geneBurden(spark, impacts(spark, dir))
 
   def sampleQc(spark: SparkSession, dir: String,
-      codec: String = "auto"): DataFrame =
-    graft.operators.Etl.sampleQc(spark,
-      expandGenotypes(spark, dir, codec), headerSamples(spark, dir))
+      codec: String = "auto"): DataFrame = {
+    val db = new Metadata(spark, dir)
+    graft.operators.Etl.sampleQc(spark, db.genotypes(codec), db.sampleOrder)
+  }
 
   def roh(spark: SparkSession, dir: String, minSites: Int = 2,
-      codec: String = "auto"): DataFrame =
-    graft.operators.Etl.roh(spark,
-      expandGenotypes(spark, dir, codec), headerSamples(spark, dir), minSites)
+      codec: String = "auto"): DataFrame = {
+    val db = new Metadata(spark, dir)
+    graft.operators.Etl.roh(spark, db.genotypes(codec), db.sampleOrder, minSites)
+  }
 
   /** GEMINI `annotate` over a loaded database: variants labeled with
     * every overlapping interval from a BED file (broadcast bin-bucketed
@@ -468,8 +487,7 @@ object GraftDb {
     * marker: the header a VCF written from this database carries.
     */
   private[graft] def storedHeader(spark: SparkSession, dir: String): Vector[String] =
-    vcfHeader(spark, dir).collect().sortBy(_.getInt(0)).map(_.getString(1)).toVector
-      .filterNot(_.startsWith("##graft_blob_codec="))
+    new Metadata(spark, dir).vcfLines
 
   /** VCF EXPORT over a loaded database — the reverse of the load path,
     * closing the round trip a vcf2db user needs to hand a cohort subset
@@ -482,7 +500,8 @@ object GraftDb {
     * vt-decompose convention; phasing and other-alt references do not
     * survive decompose).
     *
-    * Output is a DIRECTORY of `shards` plain-text shards, each carrying
+    * Output is a DIRECTORY of up to `shards` plain-text shards (fewer
+    * when the cohort has fewer distinct positions), each carrying
     * the full header — exactly the sharded-cohort layout `format("vcf")`
     * reads back — range-partitioned on (chrom, pos) and sorted within
     * shards, so the export is itself a `sorted=true` prunable cohort.
@@ -490,9 +509,10 @@ object GraftDb {
     * collect, no driver bottleneck at any cohort size.
     */
   def exportVcf(spark: SparkSession, dir: String, outDir: String,
-      shards: Int = 1, codec: String = "auto"): Unit =
-    VcfLineAssembler.write(expandGenotypes(spark, dir, codec),
-      storedHeader(spark, dir), outDir, shards)
+      shards: Int = 1, codec: String = "auto"): Unit = {
+    val db = new Metadata(spark, dir)
+    VcfLineAssembler.write(db.genotypes(codec), db.vcfLines, outDir, shards)
+  }
 
   /** GEMINI `fusions` over a loaded database: breakend (BND) variants
     * whose two ends land in two different genes of the BED's intervals

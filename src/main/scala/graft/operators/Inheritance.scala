@@ -1,8 +1,11 @@
 package graft.operators
 
-import org.apache.spark.sql.{Column, DataFrame, SparkSession}
+import scala.jdk.CollectionConverters._
+
+import org.apache.spark.sql.{Column, DataFrame, Row, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.types.{IntegerType, StringType, StructField, StructType}
 
 import graft.sources.{PedSource, VcfReader}
 
@@ -12,13 +15,17 @@ import graft.sources.{PedSource, VcfReader}
   * tools), re-expressed as Spark plans over the parsed variants +
   * impacts tables.
   *
-  * Scale shape shared by both queries: the trio dim (child/dad/mom
-  * sample indexes derived from PED × header sample order) is BROADCAST
-  * against the variants corpus and evaluated with per-row gt-array
-  * indexing — no per-sample explode, the fact side never shuffles for
-  * the classification itself. Only comp-het adds a shuffle, keyed on
-  * (family, gene) — the candidate-pair key, exactly where a shuffle is
-  * semantically required (same bucketing discipline as d02/d04).
+  * Scale shape shared by every family tool: one trio dim ([[trios]]:
+  * child/dad/mom sample indexes, child sex and trio phenotypes, derived
+  * on the driver from PED-shaped rows × header sample order into a
+  * local relation) is BROADCAST against the variants corpus and
+  * evaluated with per-row gt-array indexing — no per-sample explode,
+  * the fact side never shuffles for the classification itself. Only
+  * comp-het adds a shuffle, keyed on (family, gene) — the
+  * candidate-pair key, exactly where a shuffle is semantically required
+  * (same bucketing discipline as d02/d04). Each tool has a PED-text
+  * form and a `(variants, trios)` core that GraftDb calls with the
+  * trios of a loaded database's `samples` table.
   *
   * Autosomal semantics only (GEMINI ships separate X-linked tools).
   */
@@ -75,60 +82,52 @@ object Inheritance {
         |) tg(chrom, pos, alt, gene, gt_c, gt_f, gt_m, dp_c, dp_f, dp_m)""".stripMargin
   }
 
-  /** Trio dim from parsed PED rows: (family, child, dad and mom NAMES,
-    * 1-based gt-array indexes of child/dad/mom in header sample order);
-    * founders and samples absent from the VCF drop out. Shared by e17
-    * (Etl) and the e18/e19/e22/e25 suite — the single source of the
-    * trio-derivation rule; the parent names let sex/phenotype joins
-    * attach without re-deriving.
+  /** The trio dim every family tool takes: one row per PED row whose
+    * child, father and mother each have a PED row and a VCF sample
+    * column. Its columns:
+    *  - family_id and the child, dad and mom names;
+    *  - c_ix, d_ix and m_ix, their 1-based gt-array indexes in header
+    *    sample order;
+    *  - the child's `sex` and the three phenotypes `ph_c`, `ph_f` and
+    *    `ph_m`, as `try_cast(… AS INT)`: a missing or non-numeric PED
+    *    value is NULL, which the sex- and phenotype-aware rules never
+    *    match.
+    *
+    * `ped` holds PED-shaped rows (family, sample, father, mother, sex
+    * and phenotype first), parsed from PED text
+    * ([[graft.sources.PedSource.parse]]) or collected from a loaded
+    * database's `samples` table. The derivation runs on the driver over
+    * these sample-sized rows and yields a local relation.
     */
-  private[operators] def triosFromPed(s: SparkSession, headerSamples: Seq[String],
-      pedLines: Seq[String]): DataFrame = {
-    import s.implicits._
+  private[graft] def trios(s: SparkSession, ped: Seq[Row],
+      headerSamples: Seq[String]): DataFrame = {
     val ixOf = headerSamples.zipWithIndex.map { case (n, i) => n -> (i + 1) }.toMap
-    PedSource.parse(pedLines)._2.flatMap { r =>
+    val rowsOf = ped.groupBy(_.getString(1))
+    val dim = ped.flatMap { r =>
       val Seq(fam, child, dad, mom) = (0 to 3).map(r.getString)
       for {
-        c <- ixOf.get(child); d <- ixOf.get(dad); m <- ixOf.get(mom)
-      } yield (fam, child, dad, mom, c, d, m)
-    }.toDF("family_id", "child", "dad", "mom", "c_ix", "d_ix", "m_ix")
+        c <- ixOf.get(child).toSeq
+        d <- ixOf.get(dad).toSeq
+        m <- ixOf.get(mom).toSeq
+        dr <- rowsOf.getOrElse(dad, Nil)
+        mr <- rowsOf.getOrElse(mom, Nil)
+      } yield Row(fam, child, dad, mom, c, d, m,
+        r.getString(4), r.getString(5), dr.getString(5), mr.getString(5))
+    }
+    val (names, ixs, codes) = (Seq("family_id", "child", "dad", "mom"),
+      Seq("c_ix", "d_ix", "m_ix"), Seq("sex", "ph_c", "ph_f", "ph_m"))
+    s.createDataFrame(dim.asJava, StructType(
+      names.map(StructField(_, StringType)) ++
+        ixs.map(StructField(_, IntegerType, nullable = false)) ++
+        codes.map(StructField(_, StringType))))
+      .select((names ++ ixs).map(col) ++
+        codes.map(c => expr(s"try_cast($c AS INT)").as(c)): _*)
   }
 
-  /** [[triosFromSamples]] plus the child's PED `sex` column (as INT),
-    * for the sex-aware X-linked tools over a loaded database.
-    */
-  def triosWithSex(s: SparkSession, samples: DataFrame,
-      headerSamples: Seq[String]): DataFrame = {
-    import s.implicits._
-    triosFromSamples(s, samples, headerSamples)
-      .join(samples.select($"sample_id".as("child"),
-        expr("try_cast(sex AS INT)").as("sex")), "child")
-  }
-
-  /** Trio dim from a `samples` TABLE (the Vcf2Db/GraftDb read path):
-    * two self-equi-joins on sample_id resolve each child's parents, an
-    * index join maps names to gt-array slots. All dim-sized work;
-    * children whose parent is absent from the VCF sample list drop out,
-    * exactly like the PED-text path.
-    */
-  def triosFromSamples(s: SparkSession, samples: DataFrame,
-      headerSamples: Seq[String]): DataFrame = {
-    import s.implicits._
-    val ix = headerSamples.zipWithIndex.map { case (n, i) => (n, i + 1) }
-      .toDF("s_name", "s_ix")
-    val withIx = samples
-      .select($"family_id", $"sample_id", $"paternal_id", $"maternal_id")
-      .join(ix, $"sample_id" === $"s_name")
-    withIx
-      .select($"family_id", $"sample_id".as("child"),
-        $"paternal_id", $"maternal_id", $"s_ix".as("c_ix"))
-      .join(withIx.select($"s_name".as("dad"), $"s_ix".as("d_ix")),
-        $"paternal_id" === $"dad")
-      .join(withIx.select($"s_name".as("mom"), $"s_ix".as("m_ix")),
-        $"maternal_id" === $"mom")
-      .select($"family_id", $"child", $"dad", $"mom",
-        $"c_ix", $"d_ix", $"m_ix")
-  }
+  /** [[trios]] over PED text. */
+  private[operators] def triosFromPed(s: SparkSession, headerSamples: Seq[String],
+      pedLines: Seq[String]): DataFrame =
+    trios(s, PedSource.parse(pedLines)._2, headerSamples)
 
   /** e18: classify each (variant, trio) into an inheritance class —
     * `de_novo` (child HET, parents HOM-REF), `auto_rec` (child HOM-ALT,
@@ -337,9 +336,9 @@ object Inheritance {
       |END""".stripMargin
 
   /** e22: GEMINI-style X-linked tools (x_linked_recessive /
-    * x_linked_de_novo), sex-aware via the PED sex column. Same
-    * broadcast-trio × one-variants-scan shape as e18 — the trio dim
-    * just carries `sex` too; the fact side never shuffles.
+    * x_linked_de_novo), sex-aware via the trio dim's `sex` column.
+    * Same broadcast-trio × one-variants-scan shape as e18; the fact
+    * side never shuffles.
     */
   def e22(s: SparkSession, dir: String): DataFrame = {
     val (h, variants, _) = VcfReader.fromLines(s, XFixture.lines)
@@ -347,22 +346,11 @@ object Inheritance {
   }
 
   def xlinked(s: SparkSession, variants: DataFrame,
-      headerSamples: Seq[String], pedLines: Seq[String]): DataFrame = {
-    import s.implicits._
-    // same derivation as every other family tool, sex joined on after
-    // (try_cast: a missing/non-numeric PED sex yields NULL, and the
-    // classification CASE then matches nothing for that trio — the
-    // same silent drop as the samples-table path, never a crash)
-    val sex = PedSource.fromLines(s, pedLines)
-      .select($"sample_id".as("child"),
-        expr("try_cast(sex AS INT)").as("sex"))
-    xlinked(s, variants,
-      triosFromPed(s, headerSamples, pedLines).join(sex, "child"))
-  }
+      headerSamples: Seq[String], pedLines: Seq[String]): DataFrame =
+    xlinked(s, variants, triosFromPed(s, headerSamples, pedLines))
 
-  /** e22 core over any variants table + a trio dim carrying `sex`
-    * (1 = male child) — the GraftDb samples-table path joins sex on
-    * via [[triosWithSex]].
+  /** e22 core over any variants table + a [[trios]] dim (its `sex`:
+    * 1 = male child).
     */
   def xlinked(s: SparkSession, variants: DataFrame, trios: DataFrame): DataFrame = {
     import s.implicits._
@@ -515,8 +503,8 @@ object Inheritance {
       |)""".stripMargin
 
   /** e26: GEMINI x_linked_dominant — the remaining X tool (e22 covers
-    * recessive + de novo). Same broadcast-trio shape; the trio dim
-    * carries sex AND all three phenotypes.
+    * recessive + de novo). Same broadcast-trio shape, reading the trio
+    * dim's sex AND all three phenotypes.
     */
   def e26(s: SparkSession, dir: String): DataFrame = {
     val (h, variants, _) = VcfReader.fromLines(s, XdFixture.lines)
@@ -525,33 +513,9 @@ object Inheritance {
 
   def xlinkedDom(s: SparkSession, variants: DataFrame,
       headerSamples: Seq[String], pedLines: Seq[String]): DataFrame =
-    xlinkedDom(s, variants, triosWithSexPheno(s,
-      PedSource.fromLines(s, pedLines),
-      triosFromPed(s, headerSamples, pedLines)))
+    xlinkedDom(s, variants, triosFromPed(s, headerSamples, pedLines))
 
-  /** Attach child sex + all three phenotypes to a trio dim, from any
-    * samples-shaped frame (PED text or the stored samples table).
-    */
-  def triosWithSexPheno(s: SparkSession, samples: DataFrame,
-      trios: DataFrame): DataFrame = {
-    import s.implicits._
-    val sexPh = samples.select($"sample_id",
-      expr("try_cast(sex AS INT)").as("p_sex"),
-      expr("try_cast(phenotype AS INT)").as("p_ph"))
-    def dim(member: String, cols: (String, String)*) =
-      broadcast(sexPh.select(($"sample_id".as(member) +:
-        cols.map { case (src, as) => col(src).as(as) }).toIndexedSeq: _*))
-    trios
-      .join(dim("child", "p_sex" -> "sex", "p_ph" -> "ph_c"), "child")
-      .join(dim("dad", "p_ph" -> "ph_f"), "dad")
-      .join(dim("mom", "p_ph" -> "ph_m"), "mom")
-      .select($"family_id", $"child", $"c_ix", $"d_ix", $"m_ix",
-        $"sex", $"ph_c", $"ph_f", $"ph_m")
-  }
-
-  /** e26 core over any variants table + a trio dim carrying sex and
-    * the three phenotypes ([[triosWithSexPheno]]).
-    */
+  /** e26 core over any variants table + a [[trios]] dim. */
   def xlinkedDom(s: SparkSession, variants: DataFrame,
       trios: DataFrame): DataFrame = {
     import s.implicits._
@@ -583,8 +547,8 @@ object Inheritance {
 
   /** e25: GEMINI auto_dom — the remaining inheritance tool (e18 covers
     * de_novo / auto_rec / mendel_errors). Same broadcast-trio shape;
-    * the trio dim additionally carries parental PHENOTYPES so the
-    * affected-transmission rule is a per-row predicate.
+    * the trio dim's PHENOTYPES make the affected-transmission rule a
+    * per-row predicate.
     */
   def e25(s: SparkSession, dir: String): DataFrame = {
     val (h, variants, _) = VcfReader.fromLines(s, AdFixture.lines)
@@ -592,22 +556,12 @@ object Inheritance {
   }
 
   def autoDom(s: SparkSession, variants: DataFrame,
-      headerSamples: Seq[String], pedLines: Seq[String]): DataFrame = {
+      headerSamples: Seq[String], pedLines: Seq[String]): DataFrame =
+    autoDom(s, variants, triosFromPed(s, headerSamples, pedLines))
+
+  /** e25 core over any variants table + a [[trios]] dim. */
+  def autoDom(s: SparkSession, variants: DataFrame, trios: DataFrame): DataFrame = {
     import s.implicits._
-    // one phenotype lookup per trio member, joined onto the shared trio
-    // dim (which carries parent NAMES). Explicit broadcast hints: the
-    // PED frames are RDD-backed (unknown stats), and an unhinted
-    // dim⋈dim here plans as a sort-merge join.
-    val ph = PedSource.fromLines(s, pedLines).select(
-      $"sample_id", expr("try_cast(phenotype AS INT)").as("ph"))
-    def phOf(member: String, as: String) =
-      broadcast(ph.select($"sample_id".as(member), $"ph".as(as)))
-    val trios = triosFromPed(s, headerSamples, pedLines)
-      .join(phOf("child", "ph_c"), "child")
-      .join(phOf("dad", "ph_f"), "dad")
-      .join(phOf("mom", "ph_m"), "mom")
-      .select($"family_id", $"child", $"c_ix", $"d_ix", $"m_ix",
-        $"ph_c", $"ph_f", $"ph_m")
     variants
       .crossJoin(broadcast(trios))
       .withColumn("gt_c", element_at($"gt_types", $"c_ix"))

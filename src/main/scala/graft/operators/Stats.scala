@@ -3,6 +3,7 @@ package graft.operators
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.types.{ArrayType, StringType}
 
 import graft.functions.GraftFunctions.mdsPairs
 import graft.operators.Etl.VcfFixture
@@ -480,31 +481,42 @@ object Stats {
     jsonExportLines(VcfFixture.variants(s))
       .orderBy(col("chrom"), col("pos"), col("alt"))
 
-  /** e54's line builder over any variants frame — the CLI `export
-    * --format=json` path (same expressions, absent columns emit JSON
-    * null exactly like absent values).
+  /** e54's line builder over any variants frame, its INFO keys being
+    * the `info` columns in order: e54's fixed `dp` and `af` by default,
+    * every INFO field the stored header declares on the CLI's `export
+    * --format=json` path. Numbers and flags print as Spark casts them to
+    * text, strings quoted and escaped via [[jsonEscape]], arrays through
+    * `to_json`; absent columns emit JSON null exactly like absent
+    * values.
     */
-  def jsonExportLines(v: DataFrame): DataFrame = {
+  def jsonExportLines(v: DataFrame, info: Seq[String] = Seq("dp", "af")): DataFrame = {
     val vid = colOr(v, "vid", "string")
     val filt = colOr(v, "filter", "string")
+    def value(n: String): Column = {
+      val c = col(s"`$n`")
+      val text = v.schema.find(_.name == n).map(_.dataType) match {
+        case None => lit(null).cast("string")
+        case Some(_: ArrayType) => to_json(c)
+        case Some(StringType) => concat(lit("\""), jsonEscape(c), lit("\""))
+        case Some(_) => c.cast("string")
+      }
+      coalesce(text, lit("null"))
+    }
+    val site = Seq(
+      lit("{\"chrom\": \""), jsonEscape(col("chrom")),
+      lit("\", \"pos\": "), col("pos").cast("string"),
+      lit(", \"id\": "),
+      when(vid.isNotNull, concat(lit("\""), jsonEscape(vid), lit("\"")))
+        .otherwise(lit("null")),
+      lit(", \"ref\": \""), jsonEscape(col("ref")),
+      lit("\", \"alt\": \""), jsonEscape(col("alt")),
+      lit("\", \"qual\": "),
+      coalesce(colOr(v, "qual", "double").cast("string"), lit("null")),
+      lit(", \"filter\": "),
+      when(filt.isNotNull, concat(lit("\""), jsonEscape(filt), lit("\"")))
+        .otherwise(lit("null")))
     v.withColumn("json_line", concat(
-        lit("{\"chrom\": \""), jsonEscape(col("chrom")),
-        lit("\", \"pos\": "), col("pos").cast("string"),
-        lit(", \"id\": "),
-        when(vid.isNotNull, concat(lit("\""), jsonEscape(vid), lit("\"")))
-          .otherwise(lit("null")),
-        lit(", \"ref\": \""), jsonEscape(col("ref")),
-        lit("\", \"alt\": \""), jsonEscape(col("alt")),
-        lit("\", \"qual\": "),
-        coalesce(colOr(v, "qual", "double").cast("string"), lit("null")),
-        lit(", \"filter\": "),
-        when(filt.isNotNull, concat(lit("\""), jsonEscape(filt), lit("\"")))
-          .otherwise(lit("null")),
-        lit(", \"dp\": "),
-        coalesce(colOr(v, "dp", "long").cast("string"), lit("null")),
-        lit(", \"af\": "),
-        coalesce(colOr(v, "af", "double").cast("string"), lit("null")),
-        lit("}")))
+      site ++ info.flatMap(n => Seq(lit(s", \"$n\": "), value(n))) :+ lit("}"): _*))
       .select(col("chrom"), col("pos"), col("alt"), col("json_line"))
   }
 

@@ -1,7 +1,8 @@
 package graft.sources
 
+import scala.jdk.CollectionConverters._
+
 import org.apache.spark.sql.{DataFrame, Row, SparkSession}
-import org.apache.spark.sql.catalyst.encoders.RowEncoder
 import org.apache.spark.sql.types._
 
 /** PED pedigree file → `samples` DataFrame — the reference's samples
@@ -36,9 +37,12 @@ object PedSource {
     (sch, rows)
   }
 
+  /** The parsed rows as a local relation: collecting it (or a filter
+    * of it) runs no Spark job, and joins against it plan as broadcasts.
+    */
   def fromLines(spark: SparkSession, lines: Seq[String]): DataFrame = {
     val (sch, rows) = parse(lines)
-    spark.createDataFrame(spark.sparkContext.parallelize(rows, 1), sch)
+    spark.createDataFrame(rows.asJava, sch)
   }
 
   /** PED files are dim-sized: read driver-side via Hadoop FileSystem

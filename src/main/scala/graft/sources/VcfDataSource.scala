@@ -826,8 +826,9 @@ private[sources] class VcfPartitionReader(part: VcfInputPartition,
   * [[org.apache.spark.sql.connector.write.RequiresDistributionAndOrdering]]
   * with an ORDERED distribution on (chrom, pos) and a within-partition
   * (chrom, pos, alt) sort, so Catalyst injects the range shuffle +
-  * sort and AQE prices it; `option("shards", n)` pins the partition
-  * count (default 1, the single-file export). Line assembly happens per
+  * sort and AQE prices it; `option("shards", n)` caps the partition
+  * count (default 1, the single-file export; see [[VcfDataWriter]] for
+  * when fewer shards come out). Line assembly happens per
   * row in the DataWriter by [[VcfLineAssembler]]'s header-driven rules
   * (INFO in header order: Flags by presence, arrays comma-joined with
   * `.` for missing elements, scalars cast; GT re-derived from gt_types
@@ -947,9 +948,11 @@ private[sources] class VcfWriterFactory(tmpDir: String,
       header.mkString("\n"), conf)
 }
 
-/** Appends the header then one assembled VCF line per row. A shard is
-  * created (header included) even when its range partition is empty,
-  * which keeps shard counts deterministic.
+/** Appends the header then one assembled VCF line per row, one shard per
+  * range partition. `option("shards", n)` asks for n partitions, but
+  * Spark's RangePartitioner makes fewer when the data has fewer distinct
+  * (chrom, pos) keys than that: a one-record frame written with
+  * `shards = 2` makes one shard.
   */
 private[sources] class VcfDataWriter(file: String, partitionId: Int,
     assembler: VcfLineAssembler, headerText: String,
@@ -1100,7 +1103,7 @@ private[graft] object VcfLineAssembler {
     */
   private def lineColumns(df: DataFrame, header: Vector[String]): DataFrame = {
     val h = VcfParser.parseHeader(header)
-    val rest = VcfReader.infoSpecs(h).map(s => VcfParser.sanitize(s.id)) ++
+    val rest = VcfReader.infoColumns(h) ++
       (if (h.samples.nonEmpty) Seq("gt_types") else Nil)
     df.select((Seq("chrom", "pos", "vid", "ref", "alt", "qual", "filter") ++
       rest.filter(df.columns.contains)).map(c => df.col(s"`$c`")): _*)

@@ -92,6 +92,9 @@ object VcfReader {
   def infoSpecs(h: Header): Seq[FieldSpec] =
     h.infos.values.filterNot(s => h.annKey.contains(s.id)).toSeq
 
+  /** The `variants` column names of [[infoSpecs]], in header order. */
+  private[graft] def infoColumns(h: Header): Seq[String] = infoSpecs(h).map(s => sanitize(s.id))
+
   def variantSchema(h: Header): StructType =
     StructType(fixedFields ++
       infoSpecs(h).map(s => StructField(sanitize(s.id), infoType(s))) ++

@@ -13,7 +13,10 @@ import graft.functions.GraftFunctions
   * back a hand-kept registration call, names a graft kernel inside a
   * SQL string (operators use the typed helpers, which need no registry),
   * deflates through java.util.zip instead of `Deflate`, or names
-  * parquet's dictionary option outside `DbSink`.
+  * parquet's dictionary option outside `DbSink`. Keeps one trio dim and
+  * one metadata read on the database's read side: fails when a second
+  * function names the trio dim's index columns or collects `vcf_header`,
+  * or when PED rows go through an RDD.
   */
 class DesignGuardSpec extends AnyFunSuite {
 
@@ -30,6 +33,19 @@ class DesignGuardSpec extends AnyFunSuite {
   private def stripComments(src: String): String =
     src.replaceAll("(?s)/\\*.*?\\*/", "")
       .replaceAll("(?m)(^|\\s)//.*$", "$1")
+
+  /** The `def` (or class) each match of `re` sits in, with its code up
+    * to the next `def` or class.
+    */
+  private def enclosingDefs(code: String, re: scala.util.matching.Regex): Seq[(String, String)] = {
+    val starts = "\\b(?:def|class)\\s+(\\w+)".r.findAllMatchIn(code).map(m => m.start -> m.group(1)).toVector
+    re.findAllMatchIn(code).map { m =>
+      val i = starts.lastIndexWhere(_._1 < m.start)
+      if (i < 0) ("<none>", "")
+      else (starts(i)._2, code.substring(starts(i)._1,
+        if (i + 1 < starts.length) starts(i + 1)._1 else code.length))
+    }.toSeq
+  }
 
   /** The string literals inside the argument list that opens at `from`. */
   private def argStrings(code: String, from: Int): Seq[String] = {
@@ -98,6 +114,30 @@ class DesignGuardSpec extends AnyFunSuite {
         f.getFileName.toString != "DbSink.scala" => f.toString
     }
     assert(users.isEmpty, s"take the options from DbSink.parquetOptions: $users")
+  }
+
+  test("one trio derivation: only Inheritance.trios names the dim's index columns") {
+    val namers = for {
+      (f, code) <- sources
+      (d, _) <- enclosingDefs(code, "(?<!\\$)\"[cdm]_ix\"".r)
+    } yield s"${f.getFileName}:$d"
+    assert(namers.toSet == Set("Inheritance.scala:trios"), s"a second trio derivation: $namers")
+  }
+
+  test("one metadata read: only GraftDb.Metadata collects vcf_header") {
+    val collecting = "\\.(collect|collectAsList|head|first|take|toLocalIterator)\\(".r
+    val readers = for {
+      (f, code) <- sources
+      (d, body) <- enclosingDefs(code, "\\bvcfHeader\\s*\\(|/vcf_header\"".r)
+      if collecting.findFirstIn(body).isDefined
+    } yield s"${f.getFileName}:$d"
+    assert(readers.distinct == Seq("Vcf2Db.scala:Metadata"),
+      s"vcf_header collected outside GraftDb.Metadata: $readers")
+  }
+
+  test("PedSource builds local relations, never an RDD") {
+    val (_, ped) = sources.find(_._1.getFileName.toString == "PedSource.scala").get
+    assert(!ped.contains("parallelize"), "PED rows go through sparkContext.parallelize")
   }
 
   test("the guard sees a kernel name in a SQL string") {

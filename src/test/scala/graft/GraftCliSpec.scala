@@ -57,6 +57,10 @@ class GraftCliSpec extends SparkSpec {
       v100.mkString("\n"))
     val jsonLines = Graft.export(spark, db, "json").collect().map(_.getString(0))
     assert(jsonLines.forall(l => l.startsWith("{\"chrom\": ") && l.endsWith("}")))
+    // JSON carries the same declared INFO fields, arrays as JSON arrays
+    val j100 = jsonLines.filter(_.startsWith("{\"chrom\": \"1\", \"pos\": 100,"))
+    assert(j100.length == 1 && j100.head.contains("\"adi\": [30,12]") &&
+      j100.head.contains("\"pl\": [0,40,90]"), j100.mkString("\n"))
     val tped = Graft.export(spark, db, "tped").collect().map(_.getString(0))
     assert(tped.length == 5)
     // TPED: 4 site fields + one allele pair per cohort sample

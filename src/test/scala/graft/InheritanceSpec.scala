@@ -1,6 +1,10 @@
 package graft
 
-import graft.operators.Inheritance
+import java.nio.file.Files
+
+import org.apache.spark.sql.DataFrame
+
+import graft.operators.{Etl, Inheritance}
 import graft.operators.Inheritance.TrioFixture
 import graft.sources.VcfReader
 
@@ -178,5 +182,94 @@ class InheritanceSpec extends SparkSpec {
     assert(runs.count(_._1 == "f1") == 1)
     assert(runs.contains(("f1", 1000L, 6000L, 6L)))
     assert(runs.filter(_._1 == "m2").toSeq == Seq(("m2", 1000L, 2000L, 2L)))
+  }
+
+  /** Four families on chrX, each child HET at X:100 (both parents
+    * HOM-REF), X:200 (from dad) and X:300 (from mom), all in GENE_X:
+    *  - FAM1: every member has a PED row and a VCF column, all affected,
+    *    male child — every family tool finds it;
+    *  - FAM2: dad f2 has a VCF column but no PED row — no trio;
+    *  - FAM3: non-numeric sex and phenotypes — a trio for the sex- and
+    *    phenotype-blind tools only;
+    *  - FAM4: mom m4 has a PED row but no VCF column — no trio.
+    */
+  private object TrioRule {
+    val samples = Seq("c1", "f1", "m1", "c2", "f2", "m2", "c3", "f3", "m3", "c4", "f4")
+    private def row(pos: Int, child: String, dad: String, mom: String): String =
+      (Seq("X", pos.toString, ".", "A", "G", "99", "PASS", "CSQ=G|missense_variant|GENE_X", "GT") ++
+        Seq.fill(3)(Seq(child, dad, mom)).flatten ++ Seq(child, dad)).mkString("\t")
+    val lines: Vector[String] = Vector(
+      "##fileformat=VCFv4.2",
+      "##INFO=<ID=CSQ,Number=.,Type=String,Description=\"Consequence annotations from Ensembl VEP. Format: Allele|Consequence|SYMBOL\">",
+      "##FORMAT=<ID=GT,Number=1,Type=String,Description=\"Genotype\">",
+      (Seq("#CHROM", "POS", "ID", "REF", "ALT", "QUAL", "FILTER", "INFO", "FORMAT") ++
+        samples).mkString("\t"),
+      row(100, "0/1", "0/0", "0/0"),
+      row(200, "0/1", "0/1", "0/0"),
+      row(300, "0/1", "0/0", "0/1"))
+    val pedLines: Vector[String] = Vector(
+      "#family_id sample_id paternal_id maternal_id sex phenotype",
+      "FAM1 c1 f1 m1 1 2", "FAM1 f1 0 0 1 2", "FAM1 m1 0 0 2 2",
+      "FAM2 c2 f2 m2 1 2", "FAM2 m2 0 0 2 2",
+      "FAM3 c3 f3 m3 male affected", "FAM3 f3 0 0 M yes", "FAM3 m3 0 0 F no",
+      "FAM4 c4 f4 m4 1 2", "FAM4 f4 0 0 1 2", "FAM4 m4 0 0 2 2")
+  }
+
+  private def loaded(lines: Seq[String], pedLines: Seq[String]): String = {
+    val tmp = Files.createTempDirectory("graft_trio_rule")
+    val vcf = tmp.resolve("in.vcf")
+    val ped = tmp.resolve("in.ped")
+    Files.writeString(vcf, lines.mkString("\n") + "\n")
+    Files.writeString(ped, pedLines.mkString("\n") + "\n")
+    val out = tmp.resolve("db").toString
+    Vcf2Db.run(spark, vcf.toString, Some(ped.toString), out, writerPartitions = 2)
+    out
+  }
+
+  private def keyed(df: DataFrame): Set[(Long, String, String)] =
+    df.collect().map(r => (r.getAs[Long]("pos"), r.getAs[String]("child"),
+      if (df.columns.contains("class")) r.getAs[String]("class") else "")).toSet
+
+  test("trio rule: every member needs a PED row and a VCF column, through both entry points") {
+    import TrioRule._
+    val (h, v, i) = VcfReader.fromLines(spark, lines)
+    assert(h.samples == samples)
+    val db = loaded(lines, pedLines)
+    val denovo = Set((100L, "c1", "de_novo"), (100L, "c3", "de_novo"))
+    assert(keyed(Etl.trioDenovo(spark, v, samples, pedLines)) == denovo.map(_.copy(_3 = "")))
+    assert(keyed(Inheritance.classify(spark, v, samples, pedLines)) == denovo)
+    assert(keyed(GraftDb.inheritanceClassify(spark, db)) == denovo)
+    def pairs(df: DataFrame) = df.collect()
+      .map(r => (r.getAs[String]("child"), r.getAs[Long]("pos_a"), r.getAs[Long]("pos_b"))).toSet
+    val compHets = Set(("c1", 200L, 300L), ("c3", 200L, 300L))
+    assert(pairs(Inheritance.compHets(spark, v, i, samples, pedLines)) == compHets)
+    assert(pairs(GraftDb.compHets(spark, db)) == compHets)
+    // sex- and phenotype-aware tools: FAM3's NULL codes match no rule
+    val xlinked = Set((100L, "c1", "xl_denovo"), (300L, "c1", "xl_recessive"))
+    assert(keyed(Inheritance.xlinked(spark, v, samples, pedLines)) == xlinked)
+    assert(keyed(GraftDb.xlinked(spark, db)) == xlinked)
+    val autoDom = Set((200L, "c1", "auto_dom"), (300L, "c1", "auto_dom"))
+    assert(keyed(Inheritance.autoDom(spark, v, samples, pedLines)) == autoDom)
+    val stored = new GraftDb.Metadata(spark, db)
+    assert(keyed(Inheritance.autoDom(spark, stored.genotypes("auto"), stored.trios)) == autoDom)
+    val xlinkedDom = Set((300L, "c1", "xl_dominant"))
+    assert(keyed(Inheritance.xlinkedDom(spark, v, samples, pedLines)) == xlinkedDom)
+    assert(keyed(GraftDb.xlinkedDom(spark, db)) == xlinkedDom)
+    assert(GraftDb.mendelSummary(spark, db).collect()
+      .map(r => (r.getString(1), r.getString(2), r.getLong(3))).toSet ==
+      Set(("c1", "de_novo", 1L), ("c3", "de_novo", 1L)))
+  }
+
+  test("building gtFilter and sampleFilter reads the database's metadata once") {
+    // at most: one vcf_header collect (its schema is given), the samples
+    // table's schema-inference job and collect, the variants table's
+    // schema-inference job. The sample-subset collect runs over the
+    // local samples relation, with no job.
+    val db = loaded(TrioFixture.lines, TrioFixture.pedLines)
+    val (_, gtJobs) = countingJobs(
+      GraftDb.gtFilter(spark, db, "(gt_types).(phenotype==2).(==HET).(all)"))
+    val (_, sfJobs) = countingJobs(
+      GraftDb.sampleFilter(spark, db, "phenotype = 2", "only"))
+    assert(gtJobs <= 4 && sfJobs <= 4, s"gtFilter $gtJobs jobs, sampleFilter $sfJobs jobs")
   }
 }

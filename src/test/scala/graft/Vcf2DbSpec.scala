@@ -309,6 +309,22 @@ class Vcf2DbSpec extends SparkSpec {
       GraftDb.gtFilter(spark, out, "gt_types == HET").collect())
   }
 
+  test("a database loaded without a PED serves gtFilter over *, createViews and dbInfo") {
+    import graft.operators.Inheritance
+    val dir = Files.createTempDirectory("vcf2db_noped")
+    val vcf = dir.resolve("trio.vcf")
+    Files.writeString(vcf, Inheritance.TrioFixture.lines.mkString("\n") + "\n")
+    val out = dir.resolve("db").toString
+    Vcf2Db.run(spark, vcf.toString, None, out)
+    assert(GraftDb.gtFilter(spark, out, "(gt_types).(*).(==HET).(count==2)")
+      .select("pos").collect().map(_.getLong(0)).sorted.toSeq ==
+      Seq(200L, 500L, 2000L, 3000L))
+    GraftDb.createViews(spark, out)
+    assert(spark.sql("SELECT count(*) FROM variants").head().getLong(0) == 8L)
+    assert(GraftDb.dbInfo(spark, out).collect().map(_.getString(0)).toSet ==
+      Set("variants", "variant_impacts", "vcf_header"))
+  }
+
   test("compound gt-filter: and/or/not over wildcard and per-sample clauses") {
     import graft.operators.Inheritance
     val dir = Files.createTempDirectory("vcf2db_gtf2")

@@ -908,6 +908,17 @@ class VcfWriteSpec extends SparkSpec {
     assert(back.count() == 5)
   }
 
+  test("shards caps the shard count: one record makes one shard") {
+    // Spark's RangePartitioner makes no more partitions than distinct keys
+    val one = spark.read.format("vcf").load(vcfPath).filter("pos = 100")
+    val out = Files.createTempDirectory("vcfw1").resolve("single").toString
+    one.write.format("vcf").option("header", vcfPath)
+      .option("shards", "2").mode("overwrite").save(out)
+    val shards = new java.io.File(out).list().filter(_.startsWith("part-"))
+    assert(shards.length == 1, s"expected 1 shard, got ${shards.mkString(",")}")
+    assert(spark.read.format("vcf").load(out).count() == 1)
+  }
+
   test("append adds shards; overwrite truncates them") {
     val df = spark.read.format("vcf").load(vcfPath)
     val out = Files.createTempDirectory("vcfw3").resolve("grow").toString
