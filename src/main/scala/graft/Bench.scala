@@ -184,7 +184,10 @@ object Bench {
 
     val nPasses = sys.env.getOrElse("SPARK_GRAFT_BENCH_PASSES", "3").toInt
     require(nPasses >= 1, s"SPARK_GRAFT_BENCH_PASSES must be >= 1, got $nPasses")
-    // the warm-up pass amortizes JIT, codegen cache and file listing
+    // the warm-up pass compiles the set's generated classes (the
+    // session's codegen cache holds all of them, so a timed pass
+    // compiles only the few whose source differs per run), warms the
+    // JIT and lists the files
     val head = time(bench, nPasses)(run)
     val best = head.best
     val total = best.map(_._2).sum

@@ -22,7 +22,9 @@ import graft.operators.{Dedup, Text}
   * new shuffles are introduced by the sequencing); stage boundaries
   * are LINEAGE CUTS ([[Lineage.cut]] — cached like a persist, but the
   * downstream plan roots at the materialized RDD), so the per-stage
-  * counts neither recompute nor re-PLAN the whole lineage: the
+  * counts neither recompute nor re-PLAN the whole lineage. Each count is
+  * [[Lineage.count]], the one job that materializes its cut or persist,
+  * not a count aggregate planned on top of it. The
   * near-dup/containment stages reference their input frame up to 5×
   * each, and under bare persist() the analyzed tree grew
   * multiplicatively per stage (~95 s of driver planning vs 40 s of
@@ -108,7 +110,7 @@ object CurateCorpus {
     // Spark persistence is not ref-counted, so persisting/unpersisting
     // the caller's own DataFrame would evict their cache
     val input = docs.select(docs.columns.map(col).toIndexedSeq: _*).persist()
-    val nInput = input.count()
+    val nInput = Lineage.count(input)
 
     // Stage boundaries are LINEAGE CUTS (lazy localCheckpoint — or a
     // reliable checkpoint when spark.graft.checkpointDir is set), not
@@ -139,7 +141,7 @@ object CurateCorpus {
         min($"doc_id").over(Window.partitionBy(md5($"text"))))
       .filter($"doc_id" === $"_keep").drop("_keep")
       .transform(Lineage.cut)
-    val nExact = exact.count()
+    val nExact = Lineage.count(exact)
     input.unpersist() // dead once the exact stage materialized
 
     // 1.5 (optional) per-source BOILERPLATE trim (t22 rewrite rule):
@@ -152,7 +154,7 @@ object CurateCorpus {
       require(exact.columns.contains("source"),
         "--trim-boilerplate needs a source column")
       val t = refreshNChars(Text.trimBoilerplate(exact)).transform(Lineage.cut)
-      val n = t.count()
+      val n = Lineage.count(t)
       Lineage.release(exact) // trimmed's cut materialized; exact is dead
       (t, Some(n))
     } else (exact, None)
@@ -163,7 +165,7 @@ object CurateCorpus {
     //    lines can't glue unrelated documents into one cluster.
     //    Token-derived metadata refreshes with the rewritten text.
     val lineD = refreshNChars(Text.dedupLines(trimmed)).transform(Lineage.cut)
-    val nLine = lineD.count()
+    val nLine = Lineage.count(lineD)
     // trimmed (= exact when boilerplate trim is off) is dead now
     Lineage.release(trimmed)
 
@@ -192,7 +194,7 @@ object CurateCorpus {
         .filter($"_rk" === 1).drop("_rk"))
       .drop("cluster_id")
       .transform(Lineage.cut)
-    val nNear = near.count()
+    val nNear = Lineage.count(near)
     // the near frame carries everything downstream; its inputs are dead
     scored.unpersist()
     Lineage.release(lineD)
@@ -211,7 +213,7 @@ object CurateCorpus {
           .select($"contained_doc".as("doc_id")).distinct()
         val kept = near.join(drop, Seq("doc_id"), "left_anti")
           .transform(Lineage.cut)
-        val n = kept.count()
+        val n = Lineage.count(kept)
         Lineage.release(near) // kept's cut materialized; near is dead
         (kept, Some(n))
       case None => (near, None)
@@ -228,7 +230,7 @@ object CurateCorpus {
       (flagged.filter(!$"is_code").drop("is_code"),
         Some(flagged.filter($"is_code").drop("is_code").persist()))
     } else (contained, None)
-    val nCode = codeLane.map(_.count()).getOrElse(0L)
+    val nCode = codeLane.map(Lineage.count).getOrElse(0L)
 
     // 4. quality + repetition cut (t02/t09 signals) — per-row codegen,
     //    shuffle-free
@@ -237,7 +239,7 @@ object CurateCorpus {
         (coalesce($"q_dup3", lit(0.0)) <= maxDup3))
       .drop("q_score", "q_dup3")
       .persist()
-    val nQuality = heuristic.count()
+    val nQuality = Lineage.count(heuristic)
     // heuristic is cached and the code lane (if any) was counted into
     // its own cache above — the containment-stage frame is dead
     Lineage.release(contained)
@@ -257,7 +259,7 @@ object CurateCorpus {
           .select($"doc_id")
         val kept = heuristic.join(keepIds, Seq("doc_id"), "left_semi")
           .persist()
-        val n = kept.count()
+        val n = Lineage.count(kept)
         heuristic.unpersist()
         (kept, Some(n))
       case None => (heuristic, None)
@@ -274,7 +276,7 @@ object CurateCorpus {
           b.select(split($"text", " ").as("toks")), ngram)
           .select($"doc_id")
         val kept = quality.join(contaminated, Seq("doc_id"), "left_anti").persist()
-        (kept, kept.count())
+        (kept, Lineage.count(kept))
       case None => (quality, nLearned.getOrElse(nQuality))
     }
 

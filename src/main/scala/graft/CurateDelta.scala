@@ -83,7 +83,7 @@ object CurateDelta {
     import spark.implicits._
 
     val input = delta.select(delta.columns.map(col).toIndexedSeq: _*).persist()
-    val nDelta = input.count()
+    val nDelta = Lineage.count(input)
 
     // 1. EXACT delta dedup (d15Probe): base_dup (already in the index)
     //    and delta_dup (a later copy within today's delta) both drop —
@@ -98,7 +98,7 @@ object CurateDelta {
     // by the tail of the pipeline
     val exact = input.join(exactKept, Seq("doc_id"), "left_semi")
       .transform(Lineage.cut)
-    val nExact = exact.count()
+    val nExact = Lineage.count(exact)
     input.unpersist()
 
     // 2. NEAR-DUP delta dedup (d20Probe): the re-crawled page with a
@@ -111,7 +111,7 @@ object CurateDelta {
     val nearDropped = verdicts.filter($"verdict" =!= "kept").select($"doc_id")
     val near = exact.join(nearDropped, Seq("doc_id"), "left_anti")
       .transform(Lineage.cut)
-    val nNear = near.count()
+    val nNear = Lineage.count(near)
     Lineage.release(exact) // near's cut materialized; exact is dead
 
     // 2.5 (optional) CONTAINMENT delta screen (d23Probe on the gram
@@ -133,7 +133,7 @@ object CurateDelta {
           .filter($"verdict" === "contained_in_base").select($"doc_id")
         val kept = near.join(dropIds, Seq("doc_id"), "left_anti")
           .transform(Lineage.cut)
-        val n = kept.count()
+        val n = Lineage.count(kept)
         Lineage.release(near) // kept's cut materialized; near is dead
         (kept, Some(n))
       case None => (near, None)
@@ -145,7 +145,7 @@ object CurateDelta {
         coalesce($"q_dup3", lit(0.0)) <= maxDup3)
       .drop("q_score", "q_dup3")
       .persist() // leaf-rooted plan after the cuts above — persist suffices
-    val nQuality = quality.count()
+    val nQuality = Lineage.count(quality)
     // quality is cached — the containment-stage frame (= near when the
     // containment screen is off) is dead
     Lineage.release(contained)

@@ -1,5 +1,6 @@
 package graft
 
+import org.apache.spark.GraftStorage
 import org.apache.spark.rdd.RDD
 import org.apache.spark.sql.{DataFrame, Dataset}
 import org.apache.spark.sql.execution.LogicalRDD
@@ -103,7 +104,8 @@ object Lineage {
     }
 
   /** Drop a cut frame's blocks (and, in reliable mode, the pre-cut
-    * cache backing its checkpoint). Call ONLY when nothing downstream
+    * cache backing its checkpoint), without `RDD.unpersist`'s WARN that
+    * a local cut cannot be recomputed. Call ONLY when nothing downstream
     * roots at `df` anymore — for a local cut the blocks ARE the data,
     * so any later action on the frame would fail. No-op on frames that
     * are not cut frames, so `release(stage_k)` is safe when stage k
@@ -111,7 +113,17 @@ object Lineage {
     */
   def release(df: DataFrame): Unit =
     backingRdd(df).foreach { r =>
-      r.unpersist(blocking = false)
+      GraftStorage.free(df.sparkSession.sparkContext, r.id)
       Option(preCut.remove(r.id)).foreach(_.unpersist(blocking = false))
     }
+
+  /** The rows of a cut or persisted frame, counted in the one job that
+    * materializes it: the cut's backing RDD, or the persisted plan's
+    * `toRdd` (an in-memory scan that fills the cache as it counts).
+    * `Dataset.count()` would plan a count aggregate over the same scan
+    * and run a job per stage of it. Any other frame is counted over its
+    * whole plan, with no column pruning.
+    */
+  def count(df: DataFrame): Long =
+    backingRdd(df).getOrElse(df.queryExecution.toRdd).count()
 }

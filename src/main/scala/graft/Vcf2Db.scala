@@ -5,7 +5,7 @@ import scala.jdk.CollectionConverters._
 import org.apache.spark.sql.{Column, DataFrame, Row, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.types.{IntegerType, StringType, StructField, StructType}
+import org.apache.spark.sql.types.{DataType, IntegerType, StringType, StructField, StructType}
 
 import graft.functions.GraftFunctions.{snappyPack, snappyUnpack, zlibPack,
   zlibPackStr, zlibUnpack, zlibUnpackStr}
@@ -218,7 +218,7 @@ object Vcf2Db {
   */
 object GraftDb {
   def variants(spark: SparkSession, dir: String): DataFrame =
-    spark.read.parquet(s"$dir/variants")
+    readTable(spark, s"$dir/variants")
 
   /** GEMINI-style region filter: "chrom", "chrom:start-end", or
     * "chrom:pos" — plain chrom/pos comparisons, so they push down to
@@ -306,9 +306,32 @@ object GraftDb {
         else df)
   }
   def impacts(spark: SparkSession, dir: String): DataFrame =
-    spark.read.parquet(s"$dir/variant_impacts")
+    readTable(spark, s"$dir/variant_impacts")
   def samples(spark: SparkSession, dir: String): DataFrame =
-    spark.read.parquet(s"$dir/samples")
+    readTable(spark, s"$dir/samples")
+
+  /** A table read with the schema Spark's writer stored in the footer of
+    * its first part file, read on the driver: a schema-less read runs a
+    * Spark job to infer it. A table without that footer key (or without
+    * a part file) is read schema-less.
+    */
+  private def readTable(spark: SparkSession, path: String): DataFrame = {
+    val conf = spark.sessionState.newHadoopConf()
+    val table = new org.apache.hadoop.fs.Path(path)
+    val fs = table.getFileSystem(conf)
+    val stored = (if (fs.exists(table)) fs.listStatus(table).toSeq else Nil)
+      .map(_.getPath).find(p => p.getName.endsWith(".parquet") &&
+        !p.getName.startsWith("_") && !p.getName.startsWith("."))
+      .flatMap { part =>
+        val footer = org.apache.parquet.hadoop.ParquetFileReader.open(
+          org.apache.parquet.hadoop.util.HadoopInputFile.fromPath(part, conf))
+        try Option(footer.getFooter.getFileMetaData.getKeyValueMetaData
+          .get("org.apache.spark.sql.parquet.row.metadata"))
+        finally footer.close()
+      }
+    stored.fold(spark.read)(json =>
+      spark.read.schema(DataType.fromJson(json).asInstanceOf[StructType])).parquet(path)
+  }
   /** Read with the schema Vcf2Db.run writes: inferring it would run a
     * Spark job.
     */
@@ -536,7 +559,7 @@ object GraftDb {
     val tables = Seq("variants", "variant_impacts", "samples", "vcf_header")
       .filter(t => exists(spark, s"$dir/$t"))
     tables.flatMap { t =>
-      spark.read.parquet(s"$dir/$t").schema.fields.map(f =>
+      readTable(spark, s"$dir/$t").schema.fields.map(f =>
         (t, f.name, f.dataType.simpleString))
     }.toDF("table_name", "column_name", "column_type")
   }

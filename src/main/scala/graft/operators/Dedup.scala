@@ -337,8 +337,9 @@ object Dedup {
     * `spark.sql.autoBroadcastJoinThreshold`, read from the checksum
     * every round computes anyway. The edges are then collected once and
     * labelled on the driver by union-find ([[componentMins]]). If the
-    * very first checksum fits, the whole result is a local frame and no
-    * star round or final label shuffle runs; after k rounds the driver
+    * canonical edge frame's row count fits at round 0, the whole result
+    * is a local frame and no checksum, star round or final label
+    * shuffle runs; after k rounds the driver
     * labels are unioned back with the node roster. A threshold ≤ 0, or
     * non-integral ids, keeps the distributed loop to its fixpoint.
     *
@@ -381,7 +382,8 @@ object Dedup {
       case _           => None
     }
     val budget = broadcastThresholdBytes(s)
-    def fits(rows: Long) = box.isDefined && budget > 0 && rows <= budget / 16
+    val finishes = box.isDefined && budget > 0
+    def fits(rows: Long) = finishes && rows <= budget / 16
     def driverLabels(df: DataFrame, labelCol: String): DataFrame = {
       val rows = df.collect()
       val (ids, mins) = componentMins(
@@ -396,9 +398,7 @@ object Dedup {
     // set-difference join; the edges are distinct so the xor fold is an
     // order-independent set digest (a plain sum overflows ANSI longs).
     // The star steps cannot cycle, so an unchanged checksum at equal
-    // cardinality is the fixpoint. The first checksum reads `base`
-    // itself and also counts its rows, self-loops included: when those
-    // fit, collecting `base` labels every node with no roster at all.
+    // cardinality is the fixpoint.
     def checksum(df: DataFrame): (Long, Long, Long) = {
       val edge = $"u" =!= $"v"
       val r = df.agg(count(lit(1)), count(when(edge, lit(1))),
@@ -406,12 +406,15 @@ object Dedup {
       (r.getLong(0), r.getLong(1), r.getLong(2))
     }
     def parents(edges: DataFrame) = edges.select($"v".as("doc_id"), $"u".as("lab"))
-    val (nBase, n0, digest0) = checksum(base)
-    if (fits(nBase)) {
+    // round 0 counts `base`, self-loops included, in the job that
+    // materializes its cut: when those rows fit, collecting `base`
+    // labels every node with no roster and no checksum at all
+    if (finishes && fits(graft.Lineage.count(base))) {
       val local = driverLabels(base, "cluster_id")
       graft.Lineage.release(base) // the local frame holds every label
       local
     } else {
+      val (_, n0, digest0) = checksum(base)
       var prev = (n0, digest0)
       var done = n0 == 0L || fits(n0)
       var rounds = 0

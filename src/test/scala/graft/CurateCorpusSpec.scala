@@ -11,10 +11,13 @@ import graft.operators.{Dedup, Text}
   */
 class CurateCorpusSpec extends SparkSpec {
 
-  /** Jobs of a round-0 driver finish: the checksum aggregate (with its
-    * AQE shuffle stage) and the one collect of the cut edge frame.
+  /** Jobs of a round-0 driver finish: the distinct shuffle's map stage,
+    * the count that materializes the cut edge frame, and its one collect.
     */
-  private val RoundZeroJobs = 4
+  private val RoundZeroJobs = 3
+
+  /** Jobs of a default `CurateCorpus.run` over sf0.001 `documents`. */
+  private val CurateRunJobs = 23
 
   test("curate pipeline: monotone attrition, stage contracts hold on the output") {
     val docs = Tables(spark, "/root/testdata/sf0.001", "documents")
@@ -101,8 +104,8 @@ class CurateCorpusSpec extends SparkSpec {
   test("near-dup labelling at default config stays within the round-0 driver finish's jobs") {
     import spark.implicits._
     // ~100 edges, the size of a curated corpus's near-dup graph: the
-    // first checksum fits the default broadcast threshold, so the whole
-    // labelling is that checksum plus one collect. Falling back to the
+    // canonical edge count fits the default broadcast threshold, so the
+    // whole labelling is that count plus one collect. Falling back to the
     // star rounds adds ≥9 jobs per double round plus the label shuffle.
     val rnd = new scala.util.Random(3)
     val edges = Seq.fill(100)((rnd.nextInt(150).toLong, rnd.nextInt(150).toLong))
@@ -110,6 +113,22 @@ class CurateCorpusSpec extends SparkSpec {
     val (_, jobs) = countingJobs(Dedup.connectedComponents(spark, edges).collect())
     assert(jobs <= RoundZeroJobs,
       s"$jobs jobs > $RoundZeroJobs: the labelling fell back to the star rounds")
+  }
+
+  test("a second curate run compiles no class, and runs few jobs to the same Report") {
+    import org.apache.spark.metrics.source.CodegenMetrics
+    val docs = Tables(spark, "/root/testdata/sf0.001", "documents")
+    def run() = CurateCorpus.run(docs,
+      Files.createTempDirectory("curate_again").resolve("out").toString)
+    val first = run()
+    // each generated class of the run stays in Spark's codegen cache: an
+    // evicted one would be compiled (and JIT-warmed) again
+    val compiled = CodegenMetrics.METRIC_COMPILATION_TIME.getCount
+    val (second, jobs) = countingJobs(run())
+    val again = CodegenMetrics.METRIC_COMPILATION_TIME.getCount - compiled
+    assert(again == 0, s"the second run compiled $again classes")
+    assert(second == first)
+    assert(jobs <= CurateRunJobs, s"$jobs jobs > $CurateRunJobs")
   }
 
   test("near-dup parity: minhash default and exact opt-in agree on this corpus") {

@@ -16,7 +16,8 @@ import graft.functions.GraftFunctions
   * parquet's dictionary option outside `DbSink`. Keeps one trio dim and
   * one metadata read on the database's read side: fails when a second
   * function names the trio dim's index columns or collects `vcf_header`,
-  * or when PED rows go through an RDD.
+  * or when PED rows go through an RDD. Keeps the codegen settings in the
+  * one session factory.
   */
 class DesignGuardSpec extends AnyFunSuite {
 
@@ -133,6 +134,15 @@ class DesignGuardSpec extends AnyFunSuite {
     } yield s"${f.getFileName}:$d"
     assert(readers.distinct == Seq("Vcf2Db.scala:Metadata"),
       s"vcf_header collected outside GraftDb.Metadata: $readers")
+  }
+
+  test("spark.sql.codegen.* is set only in GraftSession.build") {
+    val setters = for {
+      (f, code) <- sources
+      (d, _) <- enclosingDefs(code, "spark\\.sql\\.codegen\\.".r)
+    } yield s"${f.getFileName}:$d"
+    assert(setters.distinct == Seq("core.scala:build"),
+      s"codegen conf set outside GraftSession.build: $setters")
   }
 
   test("PedSource builds local relations, never an RDD") {

@@ -79,9 +79,50 @@ class LineageSpec extends SparkSpec {
       .getOrElse(fail("cut frame has no backing RDD"))
     assert(spark.sparkContext.getPersistentRDDs.contains(id),
       "cut frame's blocks not registered as persistent")
-    Lineage.release(df)
+    // no "locally checkpointed … cannot be recomputed" WARN: nothing
+    // reads a released frame again
+    val (_, warnings) = capturingWarnings(Lineage.release(df))
     assert(!spark.sparkContext.getPersistentRDDs.contains(id),
       "release did not drop the cut frame's blocks")
+    assert(warnings.isEmpty, s"release logged: $warnings")
+  }
+
+  test("Lineage.count counts a cut in the job that materializes it, in both modes") {
+    import spark.implicits._
+    val ckpt = Files.createTempDirectory("graft_ckpt_count").toString
+    Seq(None, Some(ckpt)).foreach { mode =>
+      withConf(Lineage.ConfKey, mode) {
+        // a plan unique to each mode, so no earlier persist serves it
+        val base = Tables(spark, dir, "documents")
+          .filter($"doc_id" % 7 =!= (if (mode.isEmpty) 1 else 2))
+          .groupBy($"source").count()
+        val cutF = Lineage.cut(base)
+        val rdd = Lineage.backingRdd(cutF).get
+        val (n, jobs) = countingJobs(Lineage.count(cutF))
+        assert(n == base.count(), s"mode $mode")
+        assert(rdd.isCheckpointed, s"mode $mode: the count did not materialize the cut")
+        // a reliable cut writes its checkpoint in a job of its own
+        if (mode.isEmpty) assert(jobs == 1, s"local cut counted in $jobs jobs")
+        assert(cutF.count() == n)
+        Lineage.release(cutF)
+      }
+    }
+  }
+
+  test("Lineage.count counts a persisted frame in one job that fills its cache") {
+    import spark.implicits._
+    val base = Tables(spark, dir, "documents").filter($"doc_id" % 5 === 3)
+      .select($"doc_id", $"source")
+    val cached = base.select($"doc_id", $"source").persist()
+    def filled = spark.sparkContext.getRDDStorageInfo
+      .filter(_.numCachedPartitions > 0).map(_.id).toSet
+    try {
+      val before = filled
+      val (n, jobs) = countingJobs(Lineage.count(cached))
+      assert(n == base.count())
+      assert(jobs == 1, s"persisted frame counted in $jobs jobs")
+      assert((filled -- before).nonEmpty, "the count did not fill the cache")
+    } finally cached.unpersist()
   }
 
   test("release is a no-op on frames that are not cut frames") {

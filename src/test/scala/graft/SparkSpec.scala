@@ -35,4 +35,31 @@ trait SparkSpec extends AnyFunSuite {
       (r, jobs.get)
     } finally sc.removeSparkListener(listener)
   }
+
+  /** Runs `body` and returns it with the WARN-or-worse messages any
+    * logger wrote meanwhile.
+    */
+  def capturingWarnings[T](body: => T): (T, Seq[String]) = {
+    import org.apache.logging.log4j.{Level, LogManager}
+    import org.apache.logging.log4j.core.{LogEvent, LoggerContext}
+    val seen = new java.util.concurrent.ConcurrentLinkedQueue[String]()
+    val appender = new org.apache.logging.log4j.core.appender.AbstractAppender(
+        "graft-spec-warnings", null, null, true,
+        org.apache.logging.log4j.core.config.Property.EMPTY_ARRAY) {
+      override def append(e: LogEvent): Unit = seen.add(e.getMessage.getFormattedMessage)
+    }
+    appender.start()
+    val ctx = LogManager.getContext(false).asInstanceOf[LoggerContext]
+    val root = ctx.getConfiguration.getRootLogger
+    root.addAppender(appender, Level.WARN, null)
+    ctx.updateLoggers()
+    try {
+      val r = body
+      (r, scala.jdk.CollectionConverters.IteratorHasAsScala(seen.iterator).asScala.toSeq)
+    } finally {
+      root.removeAppender(appender.getName)
+      ctx.updateLoggers()
+      appender.stop()
+    }
+  }
 }
